@@ -1,5 +1,5 @@
-"""Data-layout keys: Morton (z-order) interleaving for multi-column
-clustering.
+"""Data-layout helpers: Morton (z-order) interleaving for multi-column
+clustering, and :func:`spread`, the pinned-width keyed re-spread.
 
 At 100 TB the scan is the bottleneck you cannot shuffle away: sorting
 files by a single column prunes predicates on that column only, while
@@ -18,8 +18,26 @@ No counterpart in the reference (it never writes; SURVEY.md §1.1).
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+
+def spread(df: DataFrame, *keys: str | Column) -> DataFrame:
+    """Keyed ``repartition`` of ``df`` to the cluster's
+    ``defaultParallelism``.
+
+    Why a pinned count: AQE rightly coalesces a small aggregate's
+    shuffle (a collapse tier, a signature aggregation, a bucket-count
+    table) to 1-3 partitions, and a checkpoint freezes that width —
+    every consumer downstream (the densest per-row work of the
+    pipeline: signature explode+hash, banding, verify joins) then runs
+    as a 1-3 task stage. A repartition with an explicit partition count
+    is not re-coalesced by AQE, so this one small keyed exchange
+    restores full-width parallelism. ``defaultParallelism`` is
+    cluster-sized, not a local constant. Callers that checkpoint apply
+    ``.localCheckpoint(eager=False)`` to the result themselves."""
+    return df.repartition(df.sparkSession.sparkContext.defaultParallelism, *keys)
+
 
 # Classic 16→32-bit Morton spread: after each step the mask keeps the
 # bits in their spread positions. (mask, shift) pairs applied as

@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.layout import spread
 from ..functions.pairwise import (
     jaccard_micro_tokens,
     jaccard_tokens,
@@ -168,32 +169,21 @@ def minhash_near_dup_pairs(
     bands: int = 8,
     threshold: float = 0.5,
     max_bucket_size: int = 1000,
-    prefilter_sigma: float = 5.0,
     collapse_exact: bool = True,
 ) -> DataFrame:
     """MinHash + LSH near-duplicate pairs, verified with exact Jaccard.
 
-    shingle → minhash → band → bucket-join → signature prefilter →
-    verify. Emits (src_id, dst_id, jaccard_micro) with src_id < dst_id and
+    shingle → minhash → band → bucket-join → size-ratio bound → verify.
+    Emits (src_id, dst_id, jaccard_micro) with src_id < dst_id and
     jaccard ≥ threshold. Bands of r = num_hashes/bands rows; a pair
-    collides if any band's sub-signature matches exactly.
+    collides if any band's sub-signature matches exactly. Every
+    candidate that passes the lossless size-ratio bound is verified
+    exactly — no probabilistic filter drops pairs.
 
-    The prefilter estimates Jaccard as the fraction of agreeing minhash
-    values (num_hashes long-compares, already computed for banding) and
-    drops candidates whose estimate is more than ``prefilter_sigma``
-    binomial std-devs below ``threshold`` — most false candidates from
-    low-r band collisions never reach the exact array intersection. At
-    5σ the probability of dropping a true ≥threshold pair is ~3e-7 per
-    pair; set ``prefilter_sigma=None`` to disable (strictly all-candidate
-    verification). Memory note (ADVICE r17): with the r17 inline-verify
-    shape the banded rows carry the hashed shingle arrays PLUS — when
-    the σ-prefilter is on — 2×``num_hashes`` signature longs through
-    the shuffle_hash bucket join's build side; ``max_bucket_size`` is
-    the guard on per-partition build memory at larger tiers, and
-    setting ``prefilter_sigma=None`` shrinks banded-row width by
-    2×``num_hashes`` longs if build-side memory becomes the binding
-    constraint (results unchanged — the prefilter only discards
-    candidates the exact verify would reject).
+    Memory note (ADVICE r17): with the inline-verify shape the banded
+    rows carry the hashed shingle arrays through the shuffle_hash
+    bucket join's build side; ``max_bucket_size`` is the guard on
+    per-partition build memory at larger tiers.
 
     Spark-first replacement for the reference's
     ``MinHashLSH.approxSimilarityJoin`` (Predictor.scala:394-405) with
@@ -273,40 +263,20 @@ def minhash_near_dup_pairs(
             .localCheckpoint(eager=False)
         )
         memb = g.select(F.explode("__ids").alias("__id"), "__rep")
-        # Re-spread the rep table after the checkpoint (r17): AQE
-        # rightly coalesces the small collapse shuffle to 1-3
-        # partitions, but every post-checkpoint consumer inherits that
-        # width — the 32-seed signature aggregation's explode+hash map
-        # stage (the pipeline's densest per-row work) was measured
-        # running as a 3-task stage at the 10× tier (~15 s/task,
-        # tasks=3 in the stage profile). One tiny keyed exchange
-        # (pinned to defaultParallelism so AQE cannot re-coalesce it;
-        # cluster-sized, not a local constant) restores full-width
-        # parallelism for the signature agg, both verify-join build
-        # sides, and the banding explode.
-        par = docs.sparkSession.sparkContext.defaultParallelism
-        base = g.select(
-            F.col("__rep").alias("__id"), F.col("__setarr").alias("__shingles")
-        ).repartition(par, F.col("__id"))
+        # Re-spread the rep table after the checkpoint (r17): without it
+        # the 32-seed signature aggregation's explode+hash map stage was
+        # measured running as a 3-task stage at the 10× tier (~15
+        # s/task).
+        base = spread(
+            g.select(F.col("__rep").alias("__id"), F.col("__setarr").alias("__shingles")),
+            F.col("__id"),
+        )
 
     # Signatures as plain columns behind an aggregation barrier (see
     # minhash_signature_cols — avoids CollapseProject's nested-HOF
     # recompute blowup in the band keys below). Seeded re-hash of an
     # already-hashed long is a constant-time mix, not a per-byte pass.
     sig = minhash_signature_cols(base, "__id", F.col("__shingles"), num_hashes)
-
-    # σ-prefilter cut (needs num_hashes; decides whether the signature
-    # longs ride the banded rows below).
-    import math
-
-    cut = None
-    if prefilter_sigma is not None:
-        cut = threshold - prefilter_sigma * math.sqrt(
-            threshold * (1.0 - threshold) / num_hashes
-        )
-        if cut <= 0:
-            cut = None
-    hcols = [f"__h{i}" for i in range(num_hashes)] if cut is not None else []
 
     # INLINE-VERIFY restructure (r17, the p2 fast-join lesson): the
     # hashed shingle arrays ride the band explode and the ONE
@@ -328,7 +298,6 @@ def minhash_near_dup_pairs(
         "__id",
         "__nsh",
         "__shingles",
-        *hcols,
         F.posexplode(
             F.array(
                 *[
@@ -361,13 +330,11 @@ def minhash_near_dup_pairs(
         F.col("__band"), F.col("__key"),
         F.col("__id").alias("src_id"), F.col("__nsh").alias("__na"),
         F.col("__shingles").alias("__sh_a"),
-        *[F.col(h).alias(f"__a{h}") for h in hcols],
     )
     b = banded.select(
         F.col("__band"), F.col("__key"),
         F.col("__id").alias("dst_id"), F.col("__nsh").alias("__nb"),
         F.col("__shingles").alias("__sh_b"),
-        *[F.col(h).alias(f"__b{h}") for h in hcols],
     )
     size_ok = F.least(F.col("__na"), F.col("__nb")) >= (
         F.lit(threshold - 1e-6) * F.greatest(F.col("__na"), F.col("__nb"))
@@ -389,18 +356,6 @@ def minhash_near_dup_pairs(
     joined = a.join(b.hint("shuffle_hash"), on=["__band", "__key"], how="inner").filter(
         (F.col("src_id") < F.col("dst_id")) & size_ok
     )
-
-    # Signature-agreement prefilter (probabilistic, ``prefilter_sigma``):
-    # estimate J as the fraction of agreeing minhash values (already
-    # computed for banding, riding the banded rows when enabled) and
-    # drop candidates more than σ binomial std-devs below threshold —
-    # cheap long-compares ahead of the exact array intersection.
-    if hcols:
-        est = sum(
-            F.when(F.col(f"__a{h}") == F.col(f"__b{h}"), 1).otherwise(0)
-            for h in hcols
-        ) / F.lit(float(num_hashes))
-        joined = joined.filter(est >= cut)
 
     # Verify INLINE over the same 64-bit-hashed shingle sets the
     # signatures used: the jaccard of the hash sets equals the jaccard
@@ -461,9 +416,8 @@ def minhash_index(
     bands: int = 8,
 ) -> DataFrame:
     """Persistable near-dup index: one row per document —
-    ``(doc_id, nsh, shingles: sorted array<long>, sig: array<long> of
-    size num_hashes, band_keys: array<long> of size bands, set_key:
-    array<long> of size 2)``.
+    ``(doc_id, nsh, shingles: sorted array<long>, band_keys:
+    array<long> of size bands, set_key: array<long> of size 2)``.
 
     This is the state a 100 TB corpus keeps BETWEEN ingest batches:
     write it as parquet partitioned however the corpus is, and each
@@ -473,21 +427,16 @@ def minhash_index(
     keys and shingle hashes use the same seeds/expressions as
     :func:`minhash_near_dup_pairs`, so index rows built at different
     times (or by the full pipeline) are mutually compatible as long as
-    (shingle_n, num_hashes, bands) match. Indexes persisted by the
-    pre-r08 format (no ``sig``/``set_key`` columns) remain readable:
-    :func:`minhash_incremental_pairs` recomputes ``set_key`` from the
-    stored shingles and runs with the σ-prefilter disabled (ADVICE
-    r08) — the prefilter only discards candidates the exact verify
-    would reject anyway, so results are unchanged.
+    (shingle_n, num_hashes, bands) match. An index that also stores a
+    ``sig`` column (the earlier format) still loads: the extra column is
+    never selected.
 
-    ``sig`` (the full minhash signature) feeds the incremental path's
-    σ-prefilter without any per-ingest recompute; ``set_key`` is a
-    128-bit exact-set identity (two independently-seeded ``xxhash64``
-    of the sorted shingle array) that lets the incremental collapse
-    tier group identical documents on 2 longs instead of shuffling
-    every indexed shingle array per ingest — collision probability per
-    set pair ≈ 2⁻¹²⁸, far below the hashed-shingle verify's own
-    documented ~1e-16 collision class.
+    ``set_key`` is a 128-bit exact-set identity (two
+    independently-seeded ``xxhash64`` of the sorted shingle array) that
+    lets the incremental collapse tier group identical documents on 2
+    longs instead of shuffling every indexed shingle array per ingest
+    — collision probability per set pair ≈ 2⁻¹²⁸, far below the
+    hashed-shingle verify's own documented ~1e-16 collision class.
     """
     assert num_hashes % bands == 0
     rows_per_band = num_hashes // bands
@@ -515,7 +464,6 @@ def minhash_index(
             sig.select(
                 F.col("__id").alias("doc_id"),
                 F.col("__nsh").alias("nsh"),
-                F.array(*[F.col(f"__h{i}") for i in range(num_hashes)]).alias("sig"),
                 band_keys.alias("band_keys"),
             ),
             "doc_id",
@@ -540,7 +488,6 @@ def minhash_incremental_pairs(
     bands: int = 8,
     threshold: float = 0.5,
     max_bucket_size: int = 1000,
-    prefilter_sigma: float = 5.0,
     collapse_exact: bool = True,
 ) -> DataFrame:
     """Near-dup pairs TOUCHING a new ingest batch, against a persisted
@@ -550,10 +497,9 @@ def minhash_incremental_pairs(
     Returns ``(src_id, dst_id, jaccard_micro)`` with ``src_id < dst_id`` and
     ``jaccard ≥ threshold``: the subset of
     ``minhash_near_dup_pairs(old ∪ new)`` — run at the SAME
-    ``(collapse_exact, prefilter_sigma)`` settings, both defaulting
-    identically here and there — whose pairs include at least one new
-    id (pinned pair-for-pair at both the default and the legacy
-    collapse-off/σ-off settings by
+    ``collapse_exact`` setting, defaulting identically here and there —
+    whose pairs include at least one new id (pinned pair-for-pair with
+    the collapse tier on and off by
     tests/test_operators.py::test_minhash_incremental_matches_full;
     requires index ids and new ids disjoint, same index parameters).
 
@@ -569,19 +515,15 @@ def minhash_incremental_pairs(
     verified representative jaccard. The only divergence from the full
     run's group-by-array tier is a 128-bit set_key collision
     (P ≈ 2⁻¹²⁸ per set pair — below the hashed-shingle verify's own
-    ~1e-16 class). ``prefilter_sigma`` reuses the stored ``sig``
-    arrays, arithmetic identical to the full run's σ-prefilter.
+    ~1e-16 class).
 
     Scale shape: the index side never touches text — per indexed doc it
     contributes (id, set_key, nsh, band_keys) to the collapse + bucket
-    join, its stored ``sig`` only for σ-checked candidates and its
-    stored ``shingles`` only for verified candidates (both join in by
-    id). The incremental batch pays the full shingle/signature cost
-    only for its own rows. Caller appends ``minhash_index(new_docs)``
-    to the stored index afterwards.
+    join, and its stored ``shingles`` only for verified candidates
+    (joined in by id). The incremental batch pays the full
+    shingle/signature cost only for its own rows. Caller appends
+    ``minhash_index(new_docs)`` to the stored index afterwards.
     """
-    import math
-
     new_idx = minhash_index(
         new_docs,
         id_col=id_col,
@@ -591,36 +533,15 @@ def minhash_incremental_pairs(
         bands=bands,
     )
     # Checkpoint the new batch's index rows (r18): all_idx below feeds
-    # FIVE consumers (collapse agg, two σ-prefilter joins, two verify
-    # joins), and each would re-run the batch's shingle+signature
-    # lineage — the pipeline's densest per-row work — from the text.
-    # One ingest batch is bounded by contract, so materializing it is
-    # scale-safe (unlike the accumulated index side, which at 100 TB
-    # must stay a pruned-column parquet re-read, never a copy). The
-    # pinned-count keyed repartition BEFORE the checkpoint fixes the
-    # materialized width — AQE rightly coalesces the small signature
-    # aggregation, and every consumer would inherit 1-3 partitions
-    # (the r17 checkpoint-pins-AQE-width lesson).
-    par = new_docs.sparkSession.sparkContext.defaultParallelism
-    new_idx = new_idx.repartition(par, "doc_id").localCheckpoint(eager=False)
-    # Pre-r08 index-format tolerance (ADVICE r08): ``set_key`` is
-    # recomputed from the stored shingles with the exact
-    # :func:`minhash_index` expression; a missing ``sig`` disables the
-    # σ-prefilter for this run — the prefilter only drops candidates
-    # the exact hashed-shingle verify would reject anyway, so the
-    # returned pair set is unchanged, just more candidates verified.
-    if "set_key" not in index.columns:
-        index = index.withColumn(
-            "set_key",
-            F.array(
-                F.xxhash64(F.lit(0), F.col("shingles")),
-                F.xxhash64(F.lit(1), F.col("shingles")),
-            ),
-        )
-    if "sig" not in index.columns:
-        index = index.withColumn("sig", F.lit(None).cast("array<bigint>"))
-        prefilter_sigma = None
-    cols = ["doc_id", "nsh", "shingles", "sig", "band_keys", "set_key"]
+    # three consumers (collapse agg, two verify joins), and each would
+    # re-run the batch's shingle+signature lineage — the pipeline's
+    # densest per-row work — from the text. One ingest batch is bounded
+    # by contract, so materializing it is scale-safe (unlike the
+    # accumulated index side, which at 100 TB must stay a pruned-column
+    # parquet re-read, never a copy). Spread BEFORE the checkpoint so
+    # the materialized width is the pinned one, not AQE's coalesced one.
+    new_idx = spread(new_idx, "doc_id").localCheckpoint(eager=False)
+    cols = ["doc_id", "nsh", "shingles", "band_keys", "set_key"]
     # Tag rows instead of joining an id list back in: the union is
     # lazy, so a literal flag per branch costs nothing and keeps the
     # banded explode ids-only.
@@ -635,9 +556,9 @@ def minhash_incremental_pairs(
         # shingle array: grouping on the array would re-shuffle every
         # indexed document's shingles on every ingest — the exact cost
         # the index exists to amortize. Column pruning keeps shingles
-        # and sig out of this exchange (the agg only references
-        # nsh/band_keys/doc_id/__new); they rejoin by id at the σ /
-        # verify stages, candidates only. nsh and band_keys are
+        # out of this exchange (the agg only references
+        # nsh/band_keys/doc_id/__new); they rejoin by id at the verify
+        # stage, candidates only. nsh and band_keys are
         # constant within a group (identical set ⇒ identical
         # signature), so first() is deterministic here.
         # localCheckpoint(eager=False) for the same
@@ -659,14 +580,15 @@ def minhash_incremental_pairs(
         memb = g.select("__rep", F.explode("__members").alias("m")).select(
             "__rep", F.col("m.i").alias("__id"), F.col("m.n").alias("__mnew")
         )
-        # Re-spread after the collapse checkpoint (r18, the r17 minhash
-        # full-run fix applied here too): AQE coalesces the small
-        # collapse shuffle and the banding explode + hot-bucket count +
-        # bucket join would otherwise inherit 1-3 task slots.
-        work = g.select(
-            F.col("__rep").alias("doc_id"), "nsh", "band_keys",
-            F.col("__has_new").alias("__new"),
-        ).repartition(par, F.col("doc_id"))
+        # Re-spread after the collapse checkpoint (r18, as in the full
+        # run) for the banding explode, hot-bucket count and bucket join.
+        work = spread(
+            g.select(
+                F.col("__rep").alias("doc_id"), "nsh", "band_keys",
+                F.col("__has_new").alias("__new"),
+            ),
+            F.col("doc_id"),
+        )
     else:
         work = all_idx.select("doc_id", "nsh", "band_keys", "__new")
 
@@ -702,33 +624,6 @@ def minhash_incremental_pairs(
         )
         .dropDuplicates(["src_id", "dst_id"])
     )
-
-    # σ-prefilter over the STORED signatures — same cut and the same
-    # agree-count / num_hashes arithmetic as the full run, so the two
-    # paths accept/reject candidates identically.
-    cut = None
-    if prefilter_sigma is not None:
-        cut = threshold - prefilter_sigma * math.sqrt(
-            threshold * (1.0 - threshold) / num_hashes
-        )
-    if cut is not None and cut > 0:
-        sigs = all_idx.select("doc_id", "sig")
-        sa = sigs.select(F.col("doc_id").alias("src_id"), F.col("sig").alias("__siga"))
-        sb = sigs.select(F.col("doc_id").alias("dst_id"), F.col("sig").alias("__sigb"))
-        agree = F.aggregate(
-            F.zip_with(
-                F.col("__siga"), F.col("__sigb"),
-                lambda x, y: F.when(x == y, 1).otherwise(0),
-            ),
-            F.lit(0),
-            lambda acc, v: acc + v,
-        )
-        candidates = (
-            candidates.join(sa, on="src_id")
-            .join(sb, on="dst_id")
-            .filter((agree / F.lit(float(num_hashes))) >= cut)
-            .select("src_id", "dst_id")
-        )
 
     sets = all_idx.select("doc_id", "shingles")
     pairs = (
@@ -1520,18 +1415,11 @@ def jaccard_prefix_join(
         )
         memb = g.select(F.explode("__ids").alias("__id"), "__rep")
         nonempty_reps = g.filter(F.size("__setk") > 0).select("__rep")
-        # Re-spread after the checkpoint — same r17 fix as the minhash
-        # collapse tier: AQE coalesces the small collapse shuffle, and
-        # the token explode + df join + prefix window downstream would
-        # otherwise run 1-3 tasks wide. Bracketed solo A/B at the 10×
-        # tier (r18, quiet box): with 7.06s / without 10.51s / with
-        # 7.64s (mins of 3) — the repartition pays ~3s here; the r17
-        # in-bench regression vs r16 (6.6→8.5s) tracked the throttled
-        # window, not this exchange.
-        par = docs.sparkSession.sparkContext.defaultParallelism
-        base = g.select(F.col("__rep").alias("__id"), "__toks").repartition(
-            par, F.col("__id")
-        )
+        # Re-spread after the checkpoint for the token explode, df
+        # join and prefix window. Bracketed solo A/B at the 10× tier
+        # (r18, quiet box): with 7.06s / without 10.51s / with 7.64s
+        # (mins of 3) — the re-spread pays ~3s here.
+        base = spread(g.select(F.col("__rep").alias("__id"), "__toks"), F.col("__id"))
 
     toks = base.select("__id", F.size("__toks").alias("__sz"), F.explode("__toks").alias("__tok"))
     freq = toks.groupBy("__tok").agg(F.count(F.lit(1)).alias("__df"))

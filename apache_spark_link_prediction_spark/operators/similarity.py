@@ -159,28 +159,6 @@ def lsh_bucketed_top_k(
     )
 
 
-def _quantizer_fit_set(
-    df,
-    *,
-    seed: int,
-    sample_size: int,
-    id_col: str,
-    features_col: str = "__features",
-):
-    """The coarse quantizer's bounded hash-ordered fit sample (see
-    :func:`_fit_coarse_quantizer` for why hash-order top-N), cached.
-    Split out so callers can materialize it (``.count()``) from a
-    driver thread concurrently with other eager fit-chain work."""
-    return (
-        df.select(features_col, F.xxhash64(id_col, F.lit(seed)).alias("__ord"))
-        .orderBy("__ord")
-        .limit(sample_size)
-        .select(features_col)
-        .repartition(16)
-        .cache()
-    )
-
-
 def _fit_coarse_quantizer(
     df,
     *,
@@ -191,12 +169,12 @@ def _fit_coarse_quantizer(
     id_col: str,
     features_col: str = "__features",
     prediction_col: str = "__cell",
-    fit_set=None,
 ):
     """Fit a k-means coarse quantizer on a bounded UNBIASED sample,
     never the full corpus: k-means recall is insensitive to quantizer
     sample size, and a full-corpus iterative fit is unviable at 100 TB.
-    Shared by :func:`ivf_top_k` and :func:`semdedup`.
+    Shared by :func:`ivf_top_k`, :func:`ivf_pq_top_k` and
+    :func:`semdedup`.
 
     Sampling is hash-order top-N: order by xxhash64(id, seed) and take
     ``sample_size`` — Spark executes orderBy+limit as TakeOrdered
@@ -206,7 +184,8 @@ def _fit_coarse_quantizer(
     that fits the quantizer to one file's worth of vectors and skews
     every cell), and it is deterministic with no RNG state. The
     repartition spreads the sample across cores for the iterative fit;
-    the cache stops each k-means iteration from re-reading the scan.
+    the cache stops each k-means iteration from re-reading the scan,
+    and is released in ``finally`` so a failed fit does not leak it.
     The full corpus is then scanned exactly once, by model.transform.
 
     A coarse quantizer does not need convergence — cells just need to
@@ -215,21 +194,17 @@ def _fit_coarse_quantizer(
     Spark jobs (measured ~0.25s each at sf0.1; the default 20 spent
     6.3s where 8 spend 1.6s), and at 100 TB each extra iteration is a
     full pass over the fit sample.
-
-    ``fit_set``: a pre-built (and possibly pre-materialized) cached
-    sample from :func:`_quantizer_fit_set` — callers that know the
-    corpus count is pending can materialize the sample CONCURRENTLY
-    with the sizing count (§2.6 overlap; the sample does not depend on
-    ``num_cells``, only the KMeans ``k`` does, so the fitted model is
-    identical either way).
     """
     from pyspark.ml.clustering import KMeans
 
-    if fit_set is None:
-        fit_set = _quantizer_fit_set(
-            df, seed=seed, sample_size=sample_size, id_col=id_col,
-            features_col=features_col,
-        )
+    fit_set = (
+        df.select(features_col, F.xxhash64(id_col, F.lit(seed)).alias("__ord"))
+        .orderBy("__ord")
+        .limit(sample_size)
+        .select(features_col)
+        .repartition(16)
+        .cache()
+    )
     km = KMeans(
         k=num_cells,
         seed=seed,
@@ -237,9 +212,10 @@ def _fit_coarse_quantizer(
         featuresCol=features_col,
         predictionCol=prediction_col,
     )
-    model = km.fit(fit_set)
-    fit_set.unpersist()
-    return model
+    try:
+        return km.fit(fit_set)
+    finally:
+        fit_set.unpersist()
 
 
 def ivf_top_k(
@@ -292,23 +268,8 @@ def ivf_top_k(
         F.col(vec_col).alias("__cv"),
         array_to_vector(F.col(vec_col).cast("array<double>")).alias("__features"),
     )
-    fit_set = None
     if num_cells is None:
-        # §2.6 overlap (VERDICT r17 item 5): materialize the cached
-        # quantizer fit sample concurrently with the sizing count —
-        # two independent jobs that otherwise run back to back. The
-        # sample does not depend on num_cells (only the KMeans k
-        # does), so the fitted model — and therefore the query's
-        # output — is identical.
-        from concurrent.futures import ThreadPoolExecutor
-
-        fit_set = _quantizer_fit_set(
-            c_vec, seed=seed, sample_size=fit_sample_size, id_col="neighbor_id"
-        )
-        with ThreadPoolExecutor(max_workers=1) as pool:
-            warm = pool.submit(fit_set.count)
-            n = corpus.count()
-            warm.result()
+        n = corpus.count()
         num_cells = max(4, min(4096, int(round(n**0.5))))
     if nprobe is None:
         nprobe = max(2, min(64, num_cells // 8))
@@ -320,7 +281,6 @@ def ivf_top_k(
         max_iter=fit_max_iter,
         sample_size=fit_sample_size,
         id_col="neighbor_id",
-        fit_set=fit_set,
     )
     bucketed = model.transform(c_vec).select("neighbor_id", "__cv", "__cell")
 
@@ -644,7 +604,13 @@ def ivf_pq_top_k(
     rotation and its equal-budget recall gain. Pinned in
     tests/test_operators.py::test_opq_auto_probe.
     """
-    from concurrent.futures import ThreadPoolExecutor
+    if num_cells is None:
+        n = corpus.count()
+        num_cells = max(4, min(4096, int(round(n**0.5))))
+    if nprobe is None:
+        nprobe = max(2, min(64, num_cells // 8))
+    if rerank is None:
+        rerank = max(10 * k, 50)
 
     from pyspark.ml.functions import array_to_vector
 
@@ -658,52 +624,25 @@ def ivf_pq_top_k(
         as_space.alias("__nv"),
     )
     c_feat = c_norm.withColumn("__features", array_to_vector("__nv"))
-
-    def _collect_sample():
-        # PQ codebooks come from the same bounded hash-ordered sample
-        # (the collect is ≤ fit_sample_size rows — the documented
-        # bounded class).
-        return [
-            r["__nv"]
-            for r in c_norm.select(
-                "__nv", F.xxhash64("neighbor_id", F.lit(seed)).alias("__ord")
-            )
-            .orderBy("__ord")
-            .limit(fit_sample_size)
-            .collect()
-        ]
-
-    # §2.6 overlap (VERDICT r17 item 5): the PQ sample collect and the
-    # quantizer fit-sample materialization depend only on c_norm/c_feat
-    # — run them from driver threads concurrently with the sizing count
-    # and the KMeans fit chain (whose ~16 small jobs leave executors
-    # idle in the driver-side gaps between them). Deterministic
-    # hash-ordered sample, same seed, same inputs ⇒ identical fitted
-    # centroids, codebooks, and output rows.
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        sample_fut = pool.submit(_collect_sample)
-        fit_set = _quantizer_fit_set(
-            c_feat, seed=seed, sample_size=fit_sample_size, id_col="neighbor_id"
+    model = _fit_coarse_quantizer(
+        c_feat,
+        num_cells=num_cells,
+        seed=seed,
+        max_iter=fit_max_iter,
+        sample_size=fit_sample_size,
+        id_col="neighbor_id",
+    )
+    # PQ codebooks from the same bounded hash-ordered sample (the
+    # collect is ≤ fit_sample_size rows — the documented bounded class).
+    sample = [
+        r["__nv"]
+        for r in c_norm.select(
+            "__nv", F.xxhash64("neighbor_id", F.lit(seed)).alias("__ord")
         )
-        warm_fut = pool.submit(fit_set.count)
-        if num_cells is None:
-            n = corpus.count()
-            num_cells = max(4, min(4096, int(round(n**0.5))))
-        if nprobe is None:
-            nprobe = max(2, min(64, num_cells // 8))
-        if rerank is None:
-            rerank = max(10 * k, 50)
-        warm_fut.result()
-        model = _fit_coarse_quantizer(
-            c_feat,
-            num_cells=num_cells,
-            seed=seed,
-            max_iter=fit_max_iter,
-            sample_size=fit_sample_size,
-            id_col="neighbor_id",
-            fit_set=fit_set,
-        )
-        sample = sample_fut.result()
+        .orderBy("__ord")
+        .limit(fit_sample_size)
+        .collect()
+    ]
     centers = [[float(x) for x in c] for c in model.clusterCenters()]
     # OPQ-P rotation (see _fit_opq_rotation): fit in rotated residual
     # space; the same R is applied to residuals at encode and probe
@@ -1060,25 +999,8 @@ def semdedup(
 
     vec = F.col(vec_col).cast("array<double>")
     base = corpus.select(F.col(id_col).alias("__id"), vec.alias("__vec"))
-    fit_set = None
     if num_clusters is None:
-        # §2.6 overlap: warm the cached quantizer fit sample
-        # concurrently with the sizing count (see ivf_top_k — the
-        # sample does not depend on the derived k, so the fitted model
-        # is identical). The derived num_clusters is always ≥ 4, so
-        # the k == 1 closed-form branch below never wastes this.
-        from concurrent.futures import ThreadPoolExecutor
-
-        fit_set = _quantizer_fit_set(
-            base.withColumn("__features", array_to_vector("__vec")),
-            seed=seed,
-            sample_size=fit_sample_size,
-            id_col="__id",
-        )
-        with ThreadPoolExecutor(max_workers=1) as pool:
-            warm = pool.submit(fit_set.count)
-            n = corpus.count()
-            warm.result()
+        n = corpus.count()
         num_clusters = max(4, min(4096, int(round(n**0.5))))
     if num_clusters == 1:
         # MLlib KMeans requires k >= 2; with one cell the centroid is
@@ -1102,7 +1024,6 @@ def semdedup(
             max_iter=fit_max_iter,
             sample_size=fit_sample_size,
             id_col="__id",
-            fit_set=fit_set,
         )
         assigned = model.transform(feat).select("__id", "__vec", "__cell")
         centroid_rows = [

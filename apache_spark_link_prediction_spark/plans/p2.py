@@ -56,6 +56,7 @@ from pyspark.ml.feature import MinHashLSH
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.layout import spread
 from ..operators.joins import cross_validate_count
 from .text_pipeline import preprocess_documents
 
@@ -169,17 +170,12 @@ def _collapsed_rep_pairs(
         F.size("__idx").alias("__n"),
     )
 
-    # The collapse table is a handful of MB, so AQE coalesces its
-    # shuffle to ~1 partition — correct for the AGGREGATION, fatal for
-    # the bucket join downstream: the join is (AQE-converted) broadcast,
-    # so its output parallelism IS the probe side's partition count, and
-    # a 1-partition probe serializes the hot bucket's ~19M-pair cross
-    # product + intersects onto one core (measured 110s vs 14s). An
-    # explicit keyed repartition (pinned count = defaultParallelism —
-    # cluster-sized, not a local constant; explicit N so AQE cannot
-    # re-coalesce it) spreads hot-bucket members across every core.
-    par = features.sparkSession.sparkContext.defaultParallelism
-    hashed = model.transform(reps).repartition(par, F.col("__id"))
+    # Re-spread the collapse table: the bucket join downstream is
+    # (AQE-converted) broadcast, so its output parallelism IS the probe
+    # side's partition count, and a 1-partition probe serializes the
+    # hot bucket's ~19M-pair cross product + intersects onto one core
+    # (measured 110s vs 14s).
+    hashed = spread(model.transform(reps), F.col("__id"))
     buckets = (
         hashed.select(
             "__id", "__n", "__idx", F.posexplode("minhash_lsh").alias("__t", "__hvec")

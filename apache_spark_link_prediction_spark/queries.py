@@ -45,6 +45,7 @@ from .functions.textstats import (
     quality_features,
     whitespace_token_count,
 )
+from .functions.layout import spread
 from .functions.timeutils import epoch_seconds
 from .functions.vectors import cosine_similarity
 from .operators.dedup import (
@@ -763,14 +764,8 @@ def dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     verify); verified-exact jaccard output, so recall<1 but precision=1
     vs dedup_ngram_jaccard's ground truth (asserted in tests)."""
     docs = load_table(spark, sf_dir, "documents")
-    # prefilter_sigma off: at threshold 0.8 over token sets the lossless
-    # in-join size-ratio filter already removes ~97% of what the
-    # signature-agreement estimate would (835k vs 813k candidates at
-    # sf0.1), so the two 32-long signature joins cost more than the ~3%
-    # extra exact verifications they save. Keep σ-prefilter for n-gram
-    # shingles / lower thresholds, where set sizes are less informative.
     return minhash_near_dup_pairs(
-        docs, shingle_n=1, num_hashes=32, bands=8, threshold=0.8, prefilter_sigma=None
+        docs, shingle_n=1, num_hashes=32, bands=8, threshold=0.8
     )
 
 
@@ -791,32 +786,16 @@ def dedup_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Simulate the PERSISTED index honestly (r18): the operator
     # contract is that the accumulated corpus index is state on disk,
     # built once — but built inline here, its shingle+signature lineage
-    # would re-run once per downstream consumer (collapse agg, σ joins,
-    # verify joins: 5×). One keyed-repartition + localCheckpoint stands
-    # in for the parquet read (within-run only — recomputed from the
-    # source tables on every invocation; the pinned width stops AQE's
-    # coalesced aggregation from narrowing every consumer, the r17
-    # lesson). Physical-only: pair-for-pair parity with the full run is
-    # pinned in pytest.
-    par = spark.sparkContext.defaultParallelism
-    idx = (
-        minhash_index(docs.filter(F.col("doc_id") % 5 != 0), shingle_n=1)
-        .repartition(par, "doc_id")
-        .localCheckpoint(eager=False)
-    )
-    # prefilter_sigma off (r18): the dedup_minhash rationale applies to
-    # the incremental shape too — its σ tier is two extra
-    # broadcast-joins of stored 32-long signatures over the candidate
-    # stream, and at unigram/0.8 the in-join size-ratio filter already
-    # removes ~97% of what the agreement estimate would (bracketed A/B
-    # at the 10× tier: 6.5s with σ vs 3.1-4.7s without, identical
-    # output; σ only drops candidates the exact verify rejects anyway).
+    # would re-run once per downstream consumer (collapse agg, verify
+    # joins: 3×). A spread + localCheckpoint stands in for the parquet
+    # read (within-run only — recomputed from the source tables on
+    # every invocation). Physical-only: pair-for-pair parity with the
+    # full run is pinned in pytest.
+    idx = spread(
+        minhash_index(docs.filter(F.col("doc_id") % 5 != 0), shingle_n=1), "doc_id"
+    ).localCheckpoint(eager=False)
     return minhash_incremental_pairs(
-        idx,
-        docs.filter(F.col("doc_id") % 5 == 0),
-        shingle_n=1,
-        threshold=0.8,
-        prefilter_sigma=None,
+        idx, docs.filter(F.col("doc_id") % 5 == 0), shingle_n=1, threshold=0.8
     )
 
 
@@ -1054,17 +1033,14 @@ def semantic_dedup_incremental_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # dedup_minhash_incremental pattern): built inline, the index
     # lineage — the full semdedup decision DAG plus the vector
     # join-back — would re-run once per consumer (_cell_means and the
-    # old-kept anchor side). One pinned-width localCheckpoint stands in
-    # for the parquet read the operator contract assumes; within-run
-    # only, recomputed from the source tables every invocation.
+    # old-kept anchor side). A spread + localCheckpoint stands in for
+    # the parquet read the operator contract assumes; within-run only,
+    # recomputed from the source tables every invocation.
     # Physical-only: rows identical (python-reference parity pinned in
     # pytest).
-    par = spark.sparkContext.defaultParallelism
-    idx = (
-        semdedup_index(emb.filter(F.col("vec_id") % 5 != 0), eps=0.6)
-        .repartition(par, "vec_id")
-        .localCheckpoint(eager=False)
-    )
+    idx = spread(
+        semdedup_index(emb.filter(F.col("vec_id") % 5 != 0), eps=0.6), "vec_id"
+    ).localCheckpoint(eager=False)
     return semdedup_incremental(idx, emb.filter(F.col("vec_id") % 5 == 0), eps=0.6)
 
 
@@ -2306,16 +2282,7 @@ def dedup_clusters_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.dedup import dedup_clusters, minhash_near_dup_pairs
 
     docs = load_table(spark, sf_dir, "documents")
-    # prefilter_sigma off (r18): the dedup_minhash rationale, stronger at
-    # 0.9 — the lossless in-join size-ratio filter (min >= 0.9*max) is
-    # MORE selective than at 0.8, so the 2x32-long signature columns and
-    # their per-candidate agreement sum cost far more than the handful of
-    # exact verifications they save (bracketed A/B at sf0.1: 6.3-19.5s
-    # with sigma vs 3.6s without, identical output). The prefilter only
-    # discards candidates the exact hashed-shingle verify rejects anyway.
-    pairs = minhash_near_dup_pairs(
-        docs, shingle_n=1, threshold=0.9, prefilter_sigma=None
-    )
+    pairs = minhash_near_dup_pairs(docs, shingle_n=1, threshold=0.9)
     return dedup_clusters(docs, pairs)
 
 
@@ -2340,17 +2307,11 @@ def dedup_clusters_incremental_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     old = docs.filter(F.col("doc_id") % 5 != 0)
     new = docs.filter(F.col("doc_id") % 5 == 0)
-    # prefilter_sigma off on both tiers (r18) — see dedup_clusters.
     assignment = dedup_clusters(
-        old,
-        minhash_near_dup_pairs(
-            old, shingle_n=1, threshold=0.9, prefilter_sigma=None
-        ),
+        old, minhash_near_dup_pairs(old, shingle_n=1, threshold=0.9)
     )
     idx = minhash_index(old, shingle_n=1)
-    inc = minhash_incremental_pairs(
-        idx, new, shingle_n=1, threshold=0.9, prefilter_sigma=None
-    )
+    inc = minhash_incremental_pairs(idx, new, shingle_n=1, threshold=0.9)
     return dedup_clusters_incremental(assignment, new.select("doc_id"), inc)
 
 
@@ -2435,17 +2396,11 @@ def incremental_curation_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     old = docs.filter(F.col("doc_id") % 5 != 0)
     new = docs.filter(F.col("doc_id") % 5 == 0)
-    # prefilter_sigma off on both tiers (r18) — see dedup_clusters.
     assignment = dedup_clusters(
-        old,
-        minhash_near_dup_pairs(
-            old, shingle_n=1, threshold=0.9, prefilter_sigma=None
-        ),
+        old, minhash_near_dup_pairs(old, shingle_n=1, threshold=0.9)
     )
     idx = minhash_index(old, shingle_n=1)
-    inc = minhash_incremental_pairs(
-        idx, new, shingle_n=1, threshold=0.9, prefilter_sigma=None
-    )
+    inc = minhash_incremental_pairs(idx, new, shingle_n=1, threshold=0.9)
     updated = dedup_clusters_incremental(assignment, new.select("doc_id"), inc)
     kept_new = new.join(
         updated.filter(F.col("keeper_id") == F.col("doc_id")).select("doc_id"),
@@ -10239,12 +10194,7 @@ def neardup_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "source", "n_chars"
     )
-    # prefilter_sigma off (r18): same measured rationale as dedup_minhash
-    # (unigram sets at 0.8 — the size-ratio filter already removes ~97%
-    # of what the signature estimate would).
-    pairs = minhash_near_dup_pairs(
-        docs, shingle_n=1, threshold=0.8, prefilter_sigma=None
-    )
+    pairs = minhash_near_dup_pairs(docs, shingle_n=1, threshold=0.8)
     comp = connected_components(pairs)
     labeled = docs.join(
         comp, docs.doc_id == comp.node_id, "left"
@@ -13932,13 +13882,10 @@ def cross_source_neardup_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     # base-SF documents table is ONE single-row-group parquet file, so
     # the tokenize-heavy pre-join map stage of the pair stream ran as
     # one task regardless of split config (row-group granularity
-    # bounds splitting). One keyed repartition — deterministic, no
-    # sampling downstream — spreads it; at real scale the input is
-    # many files and this is a cheap corpus-linear exchange ahead of
-    # heavier ones.
-    docs = docs.repartition(
-        spark.sparkContext.defaultParallelism, F.col("doc_id")
-    )
+    # bounds splitting). One spread — deterministic, no sampling
+    # downstream — fixes it; at real scale the input is many files and
+    # this is a cheap corpus-linear exchange ahead of heavier ones.
+    docs = spread(docs, F.col("doc_id"))
     pairs = _xsource_pair_stream(docs, docs)
     return pairs.groupBy("source_a", "source_b").agg(
         F.count(F.lit(1)).cast("long").alias("n_pairs"),
@@ -14714,9 +14661,7 @@ def cross_source_neardup_incremental(spark: SparkSession, sf_dir: str) -> DataFr
     )
     # same scan-parallelism floor as cross_source_neardup_matrix
     # (single-row-group base file serializes the tokenize map stage)
-    docs = docs.repartition(
-        spark.sparkContext.defaultParallelism, F.col("doc_id")
-    )
+    docs = spread(docs, F.col("doc_id"))
     old = docs.filter(F.col("doc_id") % 5 != 0)
     new = docs.filter(F.col("doc_id") % 5 == 0)
 

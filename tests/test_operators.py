@@ -149,15 +149,14 @@ def test_minhash_collapse_emits_full_mega_cluster(spark):
     rows += [(1000 + i, f"unique{i} filler{i} text{i} words{i}") for i in range(20)]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     pairs = minhash_near_dup_pairs(
-        docs, shingle_n=1, threshold=0.8, max_bucket_size=200, prefilter_sigma=None
+        docs, shingle_n=1, threshold=0.8, max_bucket_size=200
     )
     cluster_pairs = pairs.filter("src_id < 1000 AND dst_id < 1000")
     assert cluster_pairs.count() == k * (k - 1) // 2
     assert cluster_pairs.filter("jaccard_micro != 1000000").count() == 0
     # the uncollapsed pipeline drops the over-cap cluster entirely
     legacy = minhash_near_dup_pairs(
-        docs, shingle_n=1, threshold=0.8, max_bucket_size=200,
-        prefilter_sigma=None, collapse_exact=False,
+        docs, shingle_n=1, threshold=0.8, max_bucket_size=200, collapse_exact=False
     )
     assert legacy.filter("src_id < 1000 AND dst_id < 1000").count() == 0
 
@@ -176,11 +175,10 @@ def test_minhash_incremental_matches_full(spark, docs):
     pair-for-pair (including jaccard values) the full-run output over
     old ∪ new restricted to pairs touching the new batch — the
     contract that lets a 100 TB corpus ingest increments without
-    re-reading indexed text. Pinned at BOTH the default settings
-    (collapse_exact=True, prefilter_sigma=5.0 on both sides — ADVICE
-    r07: the incremental collapse tier and σ-prefilter must accept and
-    cap exactly what the default full run does) and the legacy
-    collapse-off/σ-off settings; same banding/cap params both sides."""
+    re-reading indexed text. Pinned with the exact-collapse tier on
+    (the default — ADVICE r07: the incremental collapse tier must
+    accept and cap exactly what the full run does) and off; same
+    banding/cap params both sides."""
     from apache_spark_link_prediction_spark.operators.dedup import (
         minhash_incremental_pairs,
         minhash_index,
@@ -190,25 +188,22 @@ def test_minhash_incremental_matches_full(spark, docs):
     new = docs.filter(F.col("doc_id") % 5 == 0)
     idx = minhash_index(old, shingle_n=1)
     new_ids = {r["doc_id"] for r in new.select("doc_id").collect()}
-    for opts in (
-        dict(collapse_exact=True, prefilter_sigma=5.0),
-        dict(collapse_exact=False, prefilter_sigma=None),
-    ):
+    for collapse_exact in (True, False):
         inc = {
             (r["src_id"], r["dst_id"], r["jaccard_micro"])
             for r in minhash_incremental_pairs(
-                idx, new, shingle_n=1, threshold=0.6, **opts
+                idx, new, shingle_n=1, threshold=0.6, collapse_exact=collapse_exact
             ).collect()
         }
         full = {
             (r["src_id"], r["dst_id"], r["jaccard_micro"])
             for r in minhash_near_dup_pairs(
-                docs, shingle_n=1, threshold=0.6, **opts
+                docs, shingle_n=1, threshold=0.6, collapse_exact=collapse_exact
             ).collect()
             if r["src_id"] in new_ids or r["dst_id"] in new_ids
         }
-        assert inc == full, f"divergence at {opts}"
-        assert inc, f"fixture produced no pairs touching the new batch ({opts})"
+        assert inc == full, f"divergence at collapse_exact={collapse_exact}"
+        assert inc, f"fixture produced no pairs touching the new batch ({collapse_exact=})"
 
 
 def test_minhash_incremental_collapse_survives_hot_cluster(spark):
@@ -362,6 +357,25 @@ def test_ivf_derived_defaults_recall(spark, emb):
     a = {(r["query_id"], r["neighbor_id"]) for r in approx.collect()}
     recall = len(a & t) / len(t)
     assert recall >= 0.4, f"IVF derived-default recall {recall:.2f}"
+
+
+def test_ivf_failed_fit_releases_cached_sample(spark, emb, monkeypatch):
+    """The quantizer's cached fit sample is unpersisted even when the
+    KMeans fit raises: a failed fit must not leave a persisted RDD
+    behind in a long-lived session (derived num_cells path)."""
+    from pyspark.ml.clustering import KMeans
+
+    from apache_spark_link_prediction_spark.operators.similarity import ivf_top_k
+
+    def boom(self, dataset, params=None):
+        raise RuntimeError("fit failed")
+
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    before = persisted().size()
+    monkeypatch.setattr(KMeans, "fit", boom)
+    with pytest.raises(RuntimeError, match="fit failed"):
+        ivf_top_k(emb, emb.filter(F.col("vec_id") < 8), k=5, num_cells=None)
+    assert persisted().size() == before
 
 
 def test_ivfpq_recall_vs_brute_force(spark, emb):
@@ -1877,38 +1891,6 @@ def test_train_bpe_flat_window_falls_back_to_sequential(spark):
     batched = train_bpe(docs, num_merges=3, batch_size=4, stats=stats)
     assert len(batched) == 3, "flat window truncated the merge list"
     assert batched == train_bpe(docs, num_merges=3, batch_size=1)
-
-
-def test_minhash_incremental_tolerates_pre_r08_index(spark, docs):
-    """ADVICE r08 regression: an index persisted by the pre-r08 format
-    (no sig/set_key columns) must still feed minhash_incremental_pairs
-    — set_key is recomputed from the stored shingles and the
-    σ-prefilter is disabled — with pair-for-pair identical output to
-    the current-format run (the prefilter only drops candidates the
-    exact verify rejects anyway)."""
-    from apache_spark_link_prediction_spark.operators.dedup import (
-        minhash_incremental_pairs,
-        minhash_index,
-    )
-
-    old = docs.filter(F.col("doc_id") % 5 != 0)
-    new = docs.filter(F.col("doc_id") % 5 == 0)
-    idx = minhash_index(old, shingle_n=1)
-    legacy_idx = idx.drop("sig", "set_key")
-    want = {
-        (r["src_id"], r["dst_id"], r["jaccard_micro"])
-        for r in minhash_incremental_pairs(
-            idx, new, shingle_n=1, threshold=0.6
-        ).collect()
-    }
-    got = {
-        (r["src_id"], r["dst_id"], r["jaccard_micro"])
-        for r in minhash_incremental_pairs(
-            legacy_idx, new, shingle_n=1, threshold=0.6
-        ).collect()
-    }
-    assert got == want
-    assert got, "fixture produced no pairs touching the new batch"
 
 
 def test_jaccard_prefix_join_boundary_geometry(spark):

@@ -62,8 +62,7 @@ def main() -> None:
         d.count()
         t0 = time.perf_counter()
         n = minhash_near_dup_pairs(
-            d, shingle_n=1, num_hashes=32, bands=8, threshold=0.8,
-            prefilter_sigma=None,
+            d, shingle_n=1, num_hashes=32, bands=8, threshold=0.8
         ).count()
         wall = time.perf_counter() - t0
         print(
