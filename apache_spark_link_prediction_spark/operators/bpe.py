@@ -59,12 +59,6 @@ def _pair_counts(vocab: DataFrame) -> DataFrame:
     )
 
 
-def _apply_merge(vocab: DataFrame, a: str, b: str) -> DataFrame:
-    """Fuse every adjacent (a, b) into ``a+b`` across the vocab via the
-    shared left-to-right Catalyst fold."""
-    return vocab.select(_merge_expr(a, b).alias("symbols"), "count")
-
-
 def _merge_expr(a: str, b: str):
     """Left-to-right fold fusing every adjacent (a, b) into ``a+b``.
     Non-overlap is structural: the fused element ``a+b`` can never equal

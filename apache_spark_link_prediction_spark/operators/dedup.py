@@ -59,6 +59,107 @@ def _drop_hot_buckets(banded: DataFrame, keys: list[str], max_bucket_size: int) 
 
 
 # ---------------------------------------------------------------------------
+# Exact-collapse tier shared by the near-dup operators
+# ---------------------------------------------------------------------------
+
+def exact_groups(
+    df: DataFrame, keys: list[str], *carry: Column, new_col: str | None = None
+) -> tuple[DataFrame, DataFrame]:
+    """Group ``df`` (which has an ``__id`` column) on the exact key
+    ``keys``; returns ``(groups, members)``.
+
+    ``groups``: one row per distinct key — the keys, ``__rep`` (the min
+    ``__id``, the representative the operator's pipeline runs on), the
+    caller's ``carry`` aggregates, and ``__ids``, the members collected
+    in the same aggregation (one shuffle, no second key-join back). With
+    ``new_col`` (the incremental twins' is-new-row flag) it adds
+    ``__has_new`` and ``members`` is ``(__rep, __id, __mnew)``;
+    otherwise ``members`` is ``(__id, __rep)``. Member lists are bounded
+    by the duplicate-cluster size, far below a hot LSH bucket.
+
+    The grouped table feeds the representative pipeline and the member
+    expansion, so it is ``localCheckpoint(eager=False)``'d once here —
+    not ``cache()``'d: cache-manager entries live until an explicit
+    unpersist nobody can place, so repeated invocations in a long-lived
+    session accumulated storage memory, while a checkpointed RDD is
+    reclaimed by the ContextCleaner once the returned plan is
+    garbage-collected. ``eager=False`` does NOT make construction
+    side-effect-free under AQE: ``localCheckpoint`` executes the adaptive
+    plan, which runs the grouping's shuffle-map stage at construction
+    (one job); the result stage runs on the first action. The checkpoint
+    trades away lineage-based recovery — fine for a bounded side table;
+    on a cluster with preemptible executors use reliable checkpointing
+    or persist + explicit unpersist instead."""
+    ids = F.col("__id")
+    aggs = [F.min("__id").alias("__rep"), *carry]
+    if new_col is not None:
+        aggs.append(F.max(new_col).alias("__has_new"))
+        ids = F.struct("__id", new_col)
+    groups = (
+        df.groupBy(*keys)
+        .agg(*aggs, F.collect_list(ids).alias("__ids"))
+        .localCheckpoint(eager=False)
+    )
+    if new_col is None:
+        return groups, groups.select(F.explode("__ids").alias("__id"), "__rep")
+    members = groups.select("__rep", F.explode("__ids").alias("m")).select(
+        "__rep", F.col("m.__id").alias("__id"), F.col(f"m.{new_col}").alias("__mnew")
+    )
+    return groups, members
+
+
+def expand_groups(
+    pairs: DataFrame, members: DataFrame, intra: Column | DataFrame
+) -> DataFrame:
+    """Expand representative pairs ``(src, dst, score)`` — column names
+    taken from ``pairs`` — back to canonical member pairs over the
+    :func:`exact_groups` membership.
+
+    Cross-group pairs inherit the representative pair's score (identical
+    items ⇒ identical score); members of distinct groups are disjoint, so
+    ``least``/``greatest`` re-canonicalizes ``src < dst`` exactly.
+    Intra-group pairs are the ``x.__id < y.__id`` member self-join, scored
+    by ``intra``: a literal Column (every group self-pairs — no extra
+    join), or a ``(__rep, score)`` DataFrame naming the groups that
+    self-pair and their score (the embedding tier's cos(v, v), the prefix
+    join's non-empty-set rule). When ``members`` carries ``__mnew`` (the
+    incremental twins), both parts keep only pairs touching a new member.
+    """
+    src, dst, score = pairs.columns
+    new = "__mnew" in members.columns
+    ma = members.select(
+        F.col("__rep").alias(src), F.col("__id").alias("__a"),
+        *([F.col("__mnew").alias("__an")] if new else []),
+    )
+    mb = members.select(
+        F.col("__rep").alias(dst), F.col("__id").alias("__b"),
+        *([F.col("__mnew").alias("__bn")] if new else []),
+    )
+    cross = pairs.join(ma, src).join(mb, dst)
+    if new:
+        cross = cross.filter(F.col("__an") | F.col("__bn"))
+    cross = cross.select(
+        F.least("__a", "__b").alias(src), F.greatest("__a", "__b").alias(dst), score
+    )
+    if isinstance(intra, DataFrame):
+        x, value = members.join(intra, "__rep"), F.col(f"x.{score}")
+    else:
+        x, value = members, intra
+    keep = F.col("x.__id") < F.col("y.__id")
+    if new:
+        keep = keep & (F.col("x.__mnew") | F.col("y.__mnew"))
+    intra = (
+        x.alias("x")
+        .join(members.alias("y"), "__rep")
+        .filter(keep)
+        .select(
+            F.col("x.__id").alias(src), F.col("y.__id").alias(dst), value.alias(score)
+        )
+    )
+    return cross.unionByName(intra)
+
+
+# ---------------------------------------------------------------------------
 # Exact dedup
 # ---------------------------------------------------------------------------
 
@@ -216,33 +317,16 @@ def minhash_near_dup_pairs(
     # candidate pairs each paying an exact intersection (the sf0.1
     # corpus has a 248-member cluster → ~61k pairs from ONE text; at
     # 100 TB boilerplate replication makes this the dominant term).
-    # Group by the sorted shingle-set (via a 64-bit set key — the same
-    # negligible collision class as the hashed verify below), run
-    # band→bucket→verify over one representative per DISTINCT set, then
-    # expand: intra-group pairs are jaccard 1.0 by construction
-    # (closed-form, no verification), cross-group pairs inherit the
-    # verified representative jaccard (identical sets ⇒ identical
-    # jaccard). Output is pair-for-pair what the uncollapsed pipeline
-    # produces, except strictly better under the hot-bucket cap: the
-    # cap now counts distinct SETS per bucket, so replication can no
-    # longer evict genuine neighbours. Measured at sf0.1 (5000 docs →
-    # 3935 sets): candidates 827k → 667k, in-bench 9.0s → 7.5-8.5s —
-    # modest here, decisive under replication (10× stress exponent
-    # 0.07 → 0.01; BASELINE.md Round 6). One grouped side table —
-    # one row per distinct set, carrying rep + member ids — is
-    # localCheckpoint(eager=False)'d rather than .cache()'d (ADVICE
-    # r06): cache-manager entries live until an explicit unpersist
-    # nobody can place, so repeated invocations in a long-lived session
-    # accumulated storage memory; checkpointed RDDs are reclaimed by
-    # the ContextCleaner as soon as the returned plan is
-    # garbage-collected. eager=False (ADVICE r07) keeps plan
-    # construction side-effect-free — the checkpoint materializes on
-    # the first action and still breaks the double-computation of the
-    # grouping between the rep pipeline and the membership expansion.
-    # (localCheckpoint trades away lineage-based recovery — fine for a
-    # bounded side table; on a cluster with preemptible or
-    # failure-prone executors use reliable checkpointing or
-    # persist+explicit-unpersist instead.)
+    # Band→bucket→verify runs over one representative per DISTINCT
+    # shingle set; intra-group pairs are jaccard 1.0 by construction,
+    # cross-group pairs inherit the verified representative jaccard.
+    # Output is pair-for-pair what the uncollapsed pipeline produces,
+    # except strictly better under the hot-bucket cap: the cap now
+    # counts distinct SETS per bucket, so replication can no longer
+    # evict genuine neighbours. Measured at sf0.1 (5000 docs → 3935
+    # sets): candidates 827k → 667k, in-bench 9.0s → 7.5-8.5s — modest
+    # here, decisive under replication (10× stress exponent 0.07 →
+    # 0.01; BASELINE.md Round 6).
     memb = None
     if collapse_exact:
         # Group on the sorted shingle ARRAY itself — exact set
@@ -251,18 +335,10 @@ def minhash_near_dup_pairs(
         # would merge two distinct sets and fabricate jaccard-1.0
         # pairs (ADVICE r06). The shuffle carries the array either
         # way (it is the grouped payload), so exactness is free.
-        # Membership comes out of the SAME aggregation (collect_list →
-        # explode), not a second array-keyed join: one wide-key shuffle
-        # instead of two plus a join — per-group id lists are bounded
-        # by the duplicate-cluster size, orders of magnitude below a
-        # hot LSH bucket.
-        g = (
-            base.select("__id", F.array_sort("__shingles").alias("__setarr"))
-            .groupBy("__setarr")
-            .agg(F.min("__id").alias("__rep"), F.collect_list("__id").alias("__ids"))
-            .localCheckpoint(eager=False)
+        g, memb = exact_groups(
+            base.select("__id", F.array_sort("__shingles").alias("__setarr")),
+            ["__setarr"],
         )
-        memb = g.select(F.explode("__ids").alias("__id"), "__rep")
         # Re-spread the rep table after the checkpoint (r17): without it
         # the 32-seed signature aggregation's explode+hash map stage was
         # measured running as a 3-task stage at the 10× tier (~15
@@ -378,32 +454,7 @@ def minhash_near_dup_pairs(
     )
     if memb is None:
         return pairs
-
-    # Expand representative pairs back to document pairs (see the
-    # collapse-tier note above). Members of distinct groups are
-    # disjoint, so least/greatest re-canonicalizes src < dst exactly.
-    ma = memb.select(F.col("__rep").alias("src_id"), F.col("__id").alias("__a"))
-    mb = memb.select(F.col("__rep").alias("dst_id"), F.col("__id").alias("__b"))
-    cross = (
-        pairs.join(ma, "src_id")
-        .join(mb, "dst_id")
-        .select(
-            F.least("__a", "__b").alias("src_id"),
-            F.greatest("__a", "__b").alias("dst_id"),
-            "jaccard_micro",
-        )
-    )
-    intra = (
-        memb.alias("x")
-        .join(memb.alias("y"), "__rep")
-        .filter(F.col("x.__id") < F.col("y.__id"))
-        .select(
-            F.col("x.__id").alias("src_id"),
-            F.col("y.__id").alias("dst_id"),
-            F.lit(1_000_000).cast("long").alias("jaccard_micro"),
-        )
-    )
-    return cross.unionByName(intra)
+    return expand_groups(pairs, memb, F.lit(1_000_000).cast("long"))
 
 
 def minhash_index(
@@ -503,19 +554,12 @@ def minhash_incremental_pairs(
     tests/test_operators.py::test_minhash_incremental_matches_full;
     requires index ids and new ids disjoint, same index parameters).
 
-    ``collapse_exact`` mirrors the full run's exact-collapse tier
-    (ADVICE r07): old ∪ new is grouped by the index's 128-bit
-    ``set_key`` — an ids+2-longs shuffle, never the shingle arrays —
-    so a replicated duplicate cluster costs ONE representative through
-    banding instead of k²/2 candidate pairs, and the hot-bucket cap
-    counts distinct sets exactly like the default full run (a cluster
-    larger than ``max_bucket_size`` can no longer fill its buckets and
-    silently lose pairs). Intra-group pairs touching the new batch are
-    emitted closed-form at jaccard_micro 1_000_000; cross-group pairs inherit the
-    verified representative jaccard. The only divergence from the full
-    run's group-by-array tier is a 128-bit set_key collision
-    (P ≈ 2⁻¹²⁸ per set pair — below the hashed-shingle verify's own
-    ~1e-16 class).
+    ``collapse_exact`` runs the full run's exact-collapse tier
+    (:func:`exact_groups` → :func:`expand_groups`) over old ∪ new
+    grouped by the index's 128-bit ``set_key`` — an ids+2-longs shuffle,
+    never the shingle arrays — diverging from the full run's
+    group-by-array tier only on a set_key collision (P ≈ 2⁻¹²⁸ per set
+    pair, below the hashed-shingle verify's own ~1e-16 class).
 
     Scale shape: the index side never touches text — per indexed doc it
     contributes (id, set_key, nsh, band_keys) to the collapse + bucket
@@ -561,24 +605,12 @@ def minhash_incremental_pairs(
         # stage, candidates only. nsh and band_keys are
         # constant within a group (identical set ⇒ identical
         # signature), so first() is deterministic here.
-        # localCheckpoint(eager=False) for the same
-        # reclaim-without-unpersist + side-effect-free-construction
-        # reasons as the full run's tier.
-        g = (
-            all_idx.groupBy("set_key")
-            .agg(
-                F.min("doc_id").alias("__rep"),
-                F.first("nsh").alias("nsh"),
-                F.first("band_keys").alias("band_keys"),
-                F.max("__new").alias("__has_new"),
-                F.collect_list(
-                    F.struct(F.col("doc_id").alias("i"), F.col("__new").alias("n"))
-                ).alias("__members"),
-            )
-            .localCheckpoint(eager=False)
-        )
-        memb = g.select("__rep", F.explode("__members").alias("m")).select(
-            "__rep", F.col("m.i").alias("__id"), F.col("m.n").alias("__mnew")
+        g, memb = exact_groups(
+            all_idx.withColumnRenamed("doc_id", "__id"),
+            ["set_key"],
+            F.first("nsh").alias("nsh"),
+            F.first("band_keys").alias("band_keys"),
+            new_col="__new",
         )
         # Re-spread after the collapse checkpoint (r18, as in the full
         # run) for the banding explode, hot-bucket count and bucket join.
@@ -642,46 +674,9 @@ def minhash_incremental_pairs(
     if memb is None:
         return pairs
 
-    # Expand representative pairs back to document pairs, keeping only
-    # pairs that touch the new batch (the full run emits them all; the
-    # incremental contract is the touching-new subset). Members of
-    # distinct groups are disjoint, so least/greatest re-canonicalizes
-    # src < dst exactly.
-    ma = memb.select(
-        F.col("__rep").alias("src_id"),
-        F.col("__id").alias("__a"), F.col("__mnew").alias("__an"),
-    )
-    mb = memb.select(
-        F.col("__rep").alias("dst_id"),
-        F.col("__id").alias("__b"), F.col("__mnew").alias("__bn"),
-    )
-    cross = (
-        pairs.join(ma, "src_id")
-        .join(mb, "dst_id")
-        .filter(F.col("__an") | F.col("__bn"))
-        .select(
-            F.least("__a", "__b").alias("src_id"),
-            F.greatest("__a", "__b").alias("dst_id"),
-            "jaccard_micro",
-        )
-    )
-    # Intra-group: jaccard 1.0 by construction (minhash shingle sets
-    # are never empty — empty text shingles to [""]), new-touching
-    # member pairs only.
-    intra = (
-        memb.alias("x")
-        .join(memb.alias("y"), "__rep")
-        .filter(
-            (F.col("x.__id") < F.col("y.__id"))
-            & (F.col("x.__mnew") | F.col("y.__mnew"))
-        )
-        .select(
-            F.col("x.__id").alias("src_id"),
-            F.col("y.__id").alias("dst_id"),
-            F.lit(1_000_000).cast("long").alias("jaccard_micro"),
-        )
-    )
-    return cross.unionByName(intra)
+    # Intra-group pairs are jaccard 1.0 by construction (minhash
+    # shingle sets are never empty — empty text shingles to [""]).
+    return expand_groups(pairs, memb, F.lit(1_000_000).cast("long"))
 
 
 # ---------------------------------------------------------------------------
@@ -791,15 +786,10 @@ def signature_band_pairs(
     runs only inside buckets. Hot buckets are deterministically dropped
     at ``max_bucket_size`` (recall/cost cap, same contract as minhash).
 
-    ``collapse_exact``: identical signatures (replicated texts; same-
-    class perceptual hashes) are collapsed to one representative before
-    banding — the signature twin of minhash_near_dup_pairs' collapse
-    tier. Intra-group pairs are Hamming 0 by definition and emitted
-    closed-form; cross-group pairs inherit the representative distance
-    (identical signatures ⇒ identical xor). Output is pair-for-pair the
-    uncollapsed result, except the hot-bucket cap now counts distinct
-    SIGNATURES per bucket, so replication can't evict genuine
-    neighbours. The two side tables are 2 longs/row, cached.
+    ``collapse_exact``: identical signatures band as one representative
+    (:func:`exact_groups` → :func:`expand_groups`; intra-group pairs are
+    Hamming 0), so the hot-bucket cap counts distinct SIGNATURES and
+    replication can't evict genuine neighbours.
 
     Emits (src_id, dst_id, hamming) with src_id < dst_id.
     """
@@ -810,19 +800,7 @@ def signature_band_pairs(
 
     memb = None
     if collapse_exact:
-        # localCheckpoint(eager=False), not cache(): reclaimed by the
-        # ContextCleaner once the returned plan is dropped —
-        # cache-manager entries from repeated invocations accumulated
-        # storage memory (ADVICE r06) — and lazy so plan construction
-        # stays side-effect-free (ADVICE r07). Membership via
-        # collect_list→explode in the same aggregation — one shuffle,
-        # no second join (see the minhash collapse tier).
-        g = (
-            sigs.groupBy("__sh")
-            .agg(F.min("__id").alias("__rep"), F.collect_list("__id").alias("__ids"))
-            .localCheckpoint(eager=False)
-        )
-        memb = g.select(F.explode("__ids").alias("__id"), "__rep")
+        g, memb = exact_groups(sigs, ["__sh"])
         sigs = g.select(F.col("__rep").alias("__id"), "__sh")
 
     banded = sigs.select(
@@ -860,31 +838,7 @@ def signature_band_pairs(
     )
     if memb is None:
         return pairs
-
-    # Expand representative pairs to member pairs (disjoint groups, so
-    # least/greatest re-canonicalizes src < dst exactly).
-    ma = memb.select(F.col("__rep").alias("src_id"), F.col("__id").alias("__a"))
-    mb = memb.select(F.col("__rep").alias("dst_id"), F.col("__id").alias("__b"))
-    cross = (
-        pairs.join(ma, "src_id")
-        .join(mb, "dst_id")
-        .select(
-            F.least("__a", "__b").alias("src_id"),
-            F.greatest("__a", "__b").alias("dst_id"),
-            "hamming",
-        )
-    )
-    intra = (
-        memb.alias("x")
-        .join(memb.alias("y"), "__rep")
-        .filter(F.col("x.__id") < F.col("y.__id"))
-        .select(
-            F.col("x.__id").alias("src_id"),
-            F.col("y.__id").alias("dst_id"),
-            F.lit(0).cast("integer").alias("hamming"),
-        )
-    )
-    return cross.unionByName(intra)
+    return expand_groups(pairs, memb, F.lit(0).cast("integer"))
 
 
 def signature_incremental_pairs(
@@ -912,11 +866,9 @@ def signature_incremental_pairs(
     setting both sides — whose pairs include at least one new id
     (pinned pair-for-pair by tests/test_operators.py::
     test_signature_incremental_matches_full; requires index ids and new
-    ids disjoint, same bits/blocks). ``collapse_exact`` groups
-    old ∪ new by the signature long itself (2 longs/row through the
-    shuffle — no set_key indirection needed), so the hot-bucket cap
-    counts distinct SIGNATURES exactly like the full run and an
-    over-cap duplicate cluster still pairs via its one representative.
+    ids disjoint, same bits/blocks). ``collapse_exact`` runs the
+    :func:`exact_groups` → :func:`expand_groups` tier over old ∪ new
+    grouped by the signature long itself (no set_key indirection).
     """
     assert bits % blocks == 0
     assert max_hamming < blocks, "pigeonhole completeness needs max_hamming < blocks"
@@ -930,20 +882,7 @@ def signature_incremental_pairs(
 
     memb = None
     if collapse_exact:
-        g = (
-            all_sigs.groupBy("__sh")
-            .agg(
-                F.min("__id").alias("__rep"),
-                F.max("__new").alias("__has_new"),
-                F.collect_list(
-                    F.struct(F.col("__id").alias("i"), F.col("__new").alias("n"))
-                ).alias("__members"),
-            )
-            .localCheckpoint(eager=False)
-        )
-        memb = g.select("__rep", F.explode("__members").alias("m")).select(
-            "__rep", F.col("m.i").alias("__id"), F.col("m.n").alias("__mnew")
-        )
+        g, memb = exact_groups(all_sigs, ["__sh"], new_col="__new")
         work = g.select(
             F.col("__rep").alias("__id"), "__sh", F.col("__has_new").alias("__new")
         )
@@ -992,39 +931,7 @@ def signature_incremental_pairs(
     )
     if memb is None:
         return pairs
-
-    ma = memb.select(
-        F.col("__rep").alias("src_id"),
-        F.col("__id").alias("__a"), F.col("__mnew").alias("__an"),
-    )
-    mb = memb.select(
-        F.col("__rep").alias("dst_id"),
-        F.col("__id").alias("__b"), F.col("__mnew").alias("__bn"),
-    )
-    cross = (
-        pairs.join(ma, "src_id")
-        .join(mb, "dst_id")
-        .filter(F.col("__an") | F.col("__bn"))
-        .select(
-            F.least("__a", "__b").alias("src_id"),
-            F.greatest("__a", "__b").alias("dst_id"),
-            "hamming",
-        )
-    )
-    intra = (
-        memb.alias("x")
-        .join(memb.alias("y"), "__rep")
-        .filter(
-            (F.col("x.__id") < F.col("y.__id"))
-            & (F.col("x.__mnew") | F.col("y.__mnew"))
-        )
-        .select(
-            F.col("x.__id").alias("src_id"),
-            F.col("y.__id").alias("dst_id"),
-            F.lit(0).cast("integer").alias("hamming"),
-        )
-    )
-    return cross.unionByName(intra)
+    return expand_groups(pairs, memb, F.lit(0).cast("integer"))
 
 
 # ---------------------------------------------------------------------------
@@ -1379,8 +1286,6 @@ def jaccard_prefix_join(
     BIGINT micro-units — same contract as ngram_jaccard_pairs(ngram=1) run
     unblocked.
     """
-    from pyspark.sql import Window
-
     base = docs.select(
         F.col(id_col).alias("__id"),
         F.array_distinct(tokenize(text_col)).alias("__toks"),
@@ -1399,22 +1304,14 @@ def jaccard_prefix_join(
     # path); cross-group pairs inherit the representative jaccard.
     memb = None
     if collapse_exact:
-        # localCheckpoint, not cache() — see the minhash collapse tier
-        # (ADVICE r06: unbounded cache-manager accumulation).
-        # Membership via collect_list→explode in the same aggregation —
-        # one shuffle, no second array-keyed join.
-        g = (
-            base.select("__id", "__toks", F.array_sort("__toks").alias("__setk"))
-            .groupBy("__setk")
-            .agg(
-                F.min("__id").alias("__rep"),
-                F.first("__toks").alias("__toks"),
-                F.collect_list("__id").alias("__ids"),
-            )
-            .localCheckpoint()
+        g, memb = exact_groups(
+            base.select("__id", "__toks", F.array_sort("__toks").alias("__setk")),
+            ["__setk"],
+            F.first("__toks").alias("__toks"),
         )
-        memb = g.select(F.explode("__ids").alias("__id"), "__rep")
-        nonempty_reps = g.filter(F.size("__setk") > 0).select("__rep")
+        intra = g.filter(F.size("__setk") > 0).select(
+            "__rep", F.lit(1_000_000).cast("long").alias("jaccard_micro")
+        )
         # Re-spread after the checkpoint for the token explode, df
         # join and prefix window. Bracketed solo A/B at the 10× tier
         # (r18, quiet box): with 7.06s / without 10.51s / with 7.64s
@@ -1522,30 +1419,7 @@ def jaccard_prefix_join(
     )
     if memb is None:
         return pairs
-
-    ma = memb.select(F.col("__rep").alias("src_id"), F.col("__id").alias("__a"))
-    mb = memb.select(F.col("__rep").alias("dst_id"), F.col("__id").alias("__b"))
-    cross = (
-        pairs.join(ma, "src_id")
-        .join(mb, "dst_id")
-        .select(
-            F.least("__a", "__b").alias("src_id"),
-            F.greatest("__a", "__b").alias("dst_id"),
-            "jaccard_micro",
-        )
-    )
-    intra = (
-        memb.join(nonempty_reps, "__rep")
-        .alias("x")
-        .join(memb.alias("y"), "__rep")
-        .filter(F.col("x.__id") < F.col("y.__id"))
-        .select(
-            F.col("x.__id").alias("src_id"),
-            F.col("y.__id").alias("dst_id"),
-            F.lit(1_000_000).cast("long").alias("jaccard_micro"),
-        )
-    )
-    return cross.unionByName(intra)
+    return expand_groups(pairs, memb, intra)
 
 
 def containment_prefix_join(
@@ -1617,8 +1491,6 @@ def containment_prefix_join(
         "__id", F.size("__toks").alias("__sz"), F.explode("__toks").alias("__tok")
     )
     freq = toks.groupBy("__tok").agg(F.count(F.lit(1)).alias("__df"))
-    from pyspark.sql import Window
-
     w = Window.partitionBy("__id").orderBy("__df", "__tok")
     ranked = toks.join(freq, on="__tok").withColumn("__rn", F.row_number().over(w))
     t_eff = threshold - 1e-6
@@ -1697,8 +1569,6 @@ def levenshtein_near_dup_pairs(
     Oracle-matched twin: queries.py::dedup_levenshtein_banded runs the
     identical blocking + cap in DuckDB SQL.
     """
-    from pyspark.sql import Window
-
     pfx = F.substring(
         F.regexp_replace(F.trim(F.lower(F.col(text_col))), r"\s+", " "),
         1,
@@ -1790,8 +1660,6 @@ def exact_substring_regions(
     bounds. No driver-side suffix array: the sorted-adjacency property
     the suffix array provides is exactly what the gram equi-join +
     per-diagonal window reconstructs distributively."""
-    from pyspark.sql import Window
-
     L = int(min_match_tokens)
     if L < 2:
         raise ValueError(f"min_match_tokens must be >= 2, got {min_match_tokens}")
@@ -1883,8 +1751,6 @@ def exact_substring_remove(
     per doc ~ regions, small); the rewrite is ONE doc-keyed join of the
     corpus against its island lists followed by a per-doc map — no
     token-level shuffle, tokens never leave their partition."""
-    from pyspark.sql import Window
-
     regions = exact_substring_regions(
         docs,
         id_col=id_col,

@@ -23,6 +23,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.vectors import cosine_similarity
+from .dedup import _drop_hot_buckets, connected_components, exact_groups, expand_groups
 
 
 def _rank_window(query_id: str = "query_id"):
@@ -855,37 +856,24 @@ def embedding_near_dup_pairs(
     the O(bucket²) self-join on near-identical embedding clusters is
     the blow-up a 100 TB corpus hits on templated content.
 
-    ``collapse_exact``: bitwise-identical vectors collapse to one
-    representative before hashing (grouped on the raw array — exact
-    value equality, no hash-collision class at all). Intra-group pairs
-    take the pipeline's own cosine(v, v) expression (NOT a literal 1.0
-    — an all-zero vector must keep its defined cosine and threshold
-    behavior), cross-group pairs inherit the representative cosine
-    (identical vectors ⇒ identical arithmetic). Same contract as the
-    minhash/simhash collapse tiers."""
+    ``collapse_exact``: bitwise-identical vectors (grouped on the raw
+    array) hash as one representative (:func:`exact_groups` →
+    :func:`expand_groups`), intra-group pairs scored by the pipeline's
+    own cosine(v, v) — NOT a literal 1.0, so an all-zero vector keeps
+    its defined cosine and threshold behavior."""
     v = F.col(vec_col)
     memb = None
     if collapse_exact:
-        # localCheckpoint(eager=False), not cache() — see the minhash
-        # collapse tier (ADVICE r06: unbounded cache-manager
-        # accumulation; ADVICE r07: lazy keeps plan construction
-        # side-effect-free). Membership via collect_list→explode in the
-        # same aggregation — one wide-key shuffle, no second
-        # array-keyed join.
-        g = (
-            corpus.select(F.col(id_col).alias("__id"), v.alias("__gvec"))
-            .groupBy("__gvec")
-            .agg(F.min("__id").alias("__rep"), F.collect_list("__id").alias("__ids"))
-            .localCheckpoint(eager=False)
+        g, memb = exact_groups(
+            corpus.select(F.col(id_col).alias("__id"), v.alias("__gvec")), ["__gvec"]
         )
-        memb = g.select(F.explode("__ids").alias("__id"), "__rep")
         corpus = g.select(
             F.col("__rep").alias(id_col), F.col("__gvec").alias(vec_col)
         )
-        intra_vals = g.select(
+        intra = g.select(
             "__rep",
-            F.round(cosine_similarity("__gvec", "__gvec"), round_to).alias("__c"),
-        ).filter(F.col("__c") >= threshold)
+            F.round(cosine_similarity("__gvec", "__gvec"), round_to).alias("cosine"),
+        ).filter(F.col("cosine") >= threshold)
     # Ids-only through the band explode + bucket self-join + pair
     # dropDuplicates; vectors rejoin once per side at verification
     # (same pattern as dedup.minhash_near_dup_pairs).
@@ -895,10 +883,7 @@ def embedding_near_dup_pairs(
             "__table", "__key"
         ),
     )
-    if max_bucket_size is not None:
-        from .dedup import _drop_hot_buckets
-
-        banded = _drop_hot_buckets(banded, ["__table", "__key"], max_bucket_size)
+    banded = _drop_hot_buckets(banded, ["__table", "__key"], max_bucket_size)
     a = banded.select("__table", "__key", F.col("__id").alias("src_id"))
     b = banded.select("__table", "__key", F.col("__id").alias("dst_id"))
     vecs = corpus.select(F.col(id_col).alias("__vid"), v.alias("__vec"))
@@ -915,32 +900,7 @@ def embedding_near_dup_pairs(
     )
     if memb is None:
         return pairs
-
-    # Expand representative pairs to member pairs (disjoint groups, so
-    # least/greatest re-canonicalizes src < dst exactly).
-    ma = memb.select(F.col("__rep").alias("src_id"), F.col("__id").alias("__a"))
-    mb = memb.select(F.col("__rep").alias("dst_id"), F.col("__id").alias("__b"))
-    cross = (
-        pairs.join(ma, "src_id")
-        .join(mb, "dst_id")
-        .select(
-            F.least("__a", "__b").alias("src_id"),
-            F.greatest("__a", "__b").alias("dst_id"),
-            "cosine",
-        )
-    )
-    intra = (
-        memb.alias("x")
-        .join(memb.alias("y"), "__rep")
-        .filter(F.col("x.__id") < F.col("y.__id"))
-        .join(intra_vals, "__rep")
-        .select(
-            F.col("x.__id").alias("src_id"),
-            F.col("y.__id").alias("dst_id"),
-            F.col("__c").alias("cosine"),
-        )
-    )
-    return cross.unionByName(intra)
+    return expand_groups(pairs, memb, intra)
 
 
 def semdedup(
@@ -1033,11 +993,7 @@ def semdedup(
     # Exact-collapse: bitwise-identical vectors → one representative
     # (min id). model.transform is deterministic, so a group has one
     # cell; grouping on (__cell, __vec) keeps the shuffle key honest.
-    groups = (
-        assigned.groupBy("__cell", "__vec")
-        .agg(F.min("__id").alias("__rep"), F.collect_list("__id").alias("__ids"))
-        .localCheckpoint(eager=False)
-    )
+    groups, memb = exact_groups(assigned, ["__cell", "__vec"])
     norm = F.sqrt(F.aggregate("__vec", F.lit(0.0), lambda a, x: a + x * x))
     reps = groups.select(
         "__cell",
@@ -1052,8 +1008,6 @@ def semdedup(
         F.col("__vec"),
     )
     if max_cluster_block is not None:
-        from .dedup import _drop_hot_buckets
-
         paired_reps = _drop_hot_buckets(reps, ["__cell"], max_cluster_block)
     else:
         paired_reps = reps
@@ -1076,8 +1030,6 @@ def semdedup(
         .filter(F.col("__sim") >= 1.0 - eps)
         .select("src_id", "dst_id")
     )
-
-    from .dedup import connected_components
 
     comp = connected_components(pairs)
 
@@ -1116,7 +1068,6 @@ def semdedup(
     # member m survives iff its rep won its component AND m is the rep
     # — except identical-vector groups whose self-cosine is below the
     # threshold (zero vectors): those members are not dups at all.
-    memb = groups.select("__rep", F.explode("__ids").alias("__id"))
     return (
         memb.join(rep_keep, on="__rep")
         .select(
@@ -1251,11 +1202,7 @@ def semdedup_incremental(
         .select("__id", "__vec", F.col("cluster_id").alias("__cell"))
     )
 
-    groups = (
-        assigned.groupBy("__cell", "__vec")
-        .agg(F.min("__id").alias("__rep"), F.collect_list("__id").alias("__ids"))
-        .localCheckpoint(eager=False)
-    )
+    groups, memb = exact_groups(assigned, ["__cell", "__vec"])
     norm = F.sqrt(F.aggregate("__vec", F.lit(0.0), lambda a, x: a + x * x))
     nvec = F.when(norm > 0, F.transform("__vec", lambda x: x / norm)).otherwise(
         F.col("__vec")
@@ -1284,8 +1231,6 @@ def semdedup_incremental(
         .alias("__nvec"),
     )
     if max_cluster_block is not None:
-        from .dedup import _drop_hot_buckets
-
         population = new_reps.select("__cell", "__rep", "__nvec").unionByName(
             old_reps
         )
@@ -1344,8 +1289,6 @@ def semdedup_incremental(
     )
     pairs = pairs.unionByName(ident).dropDuplicates(["src_id", "dst_id"])
 
-    from .dedup import connected_components
-
     comp = connected_components(pairs)
     # Component roll-up: does it contain an old exemplar?  Election
     # happens only in all-new components.
@@ -1383,7 +1326,6 @@ def semdedup_incremental(
         "__rkeep", ~F.col("__has_old") & (F.row_number().over(w) == 1)
     ).select("__cell", "__rep", "__multi", "__self_dup", "__rkeep")
 
-    memb = groups.select("__rep", F.explode("__ids").alias("__id"))
     return (
         memb.join(rep_keep, on="__rep")
         .select(
@@ -1449,11 +1391,10 @@ def embedding_incremental_pairs(
     same tables/planes), modulo only a 128-bit ``vec_key`` collision
     (the full run groups on the raw array; ≈2⁻¹²⁸ per vector pair).
 
-    Collapse semantics follow the embedding tier's zero-vector rule:
-    intra-group pairs take the pipeline's own cosine(v, v) expression
-    (never a literal 1.0), evaluated on the representative's stored
-    vector. The index side contributes (id, vec_key, bucket_keys) to
-    the collapse + bucket join; stored vectors join in by id for
+    ``collapse_exact`` follows the embedding tier's zero-vector rule:
+    intra-group pairs are scored by cos(v, v) of the representative's
+    stored vector. The index side contributes (id, vec_key, bucket_keys)
+    to the collapse + bucket join; stored vectors join in by id for
     VERIFIED candidates only. Caller appends
     ``embedding_index(new_corpus)`` to the stored index afterwards."""
     new_idx = embedding_index(
@@ -1466,32 +1407,22 @@ def embedding_incremental_pairs(
     )
 
     memb = None
-    intra_vals = None
     if collapse_exact:
         # Group on vec_key (ids + 2 longs through the shuffle — column
         # pruning keeps embedding/bucket_keys out of the exchange
         # except first(bucket_keys), tables longs); the rep's vector
         # joins back by id for the intra cosine(v, v) values.
-        g = (
-            all_idx.groupBy("vec_key")
-            .agg(
-                F.min("vec_id").alias("__rep"),
-                F.first("bucket_keys").alias("bucket_keys"),
-                F.max("__new").alias("__has_new"),
-                F.collect_list(
-                    F.struct(F.col("vec_id").alias("i"), F.col("__new").alias("n"))
-                ).alias("__members"),
-            )
-            .localCheckpoint(eager=False)
-        )
-        memb = g.select("__rep", F.explode("__members").alias("m")).select(
-            "__rep", F.col("m.i").alias("__id"), F.col("m.n").alias("__mnew")
+        g, memb = exact_groups(
+            all_idx.withColumnRenamed("vec_id", "__id"),
+            ["vec_key"],
+            F.first("bucket_keys").alias("bucket_keys"),
+            new_col="__new",
         )
         work = g.select(
             F.col("__rep").alias("vec_id"), "bucket_keys",
             F.col("__has_new").alias("__new"),
         )
-        intra_vals = (
+        intra = (
             g.select("__rep")
             .join(
                 all_idx.select(F.col("vec_id").alias("__rep"), "embedding"), "__rep"
@@ -1500,9 +1431,9 @@ def embedding_incremental_pairs(
                 "__rep",
                 F.round(
                     cosine_similarity("embedding", "embedding"), round_to
-                ).alias("__c"),
+                ).alias("cosine"),
             )
-            .filter(F.col("__c") >= threshold)
+            .filter(F.col("cosine") >= threshold)
         )
     else:
         work = all_idx.select("vec_id", "bucket_keys", "__new")
@@ -1512,10 +1443,7 @@ def embedding_incremental_pairs(
         "__new",
         F.posexplode("bucket_keys").alias("__table", "__key"),
     )
-    if max_bucket_size is not None:
-        from .dedup import _drop_hot_buckets
-
-        banded = _drop_hot_buckets(banded, ["__table", "__key"], max_bucket_size)
+    banded = _drop_hot_buckets(banded, ["__table", "__key"], max_bucket_size)
 
     a = banded.filter("__new").select(
         "__table", "__key", F.col("vec_id").alias("__ida")
@@ -1538,40 +1466,7 @@ def embedding_incremental_pairs(
     )
     if memb is None:
         return pairs
-
-    ma = memb.select(
-        F.col("__rep").alias("src_id"),
-        F.col("__id").alias("__a"), F.col("__mnew").alias("__an"),
-    )
-    mb = memb.select(
-        F.col("__rep").alias("dst_id"),
-        F.col("__id").alias("__b"), F.col("__mnew").alias("__bn"),
-    )
-    cross = (
-        pairs.join(ma, "src_id")
-        .join(mb, "dst_id")
-        .filter(F.col("__an") | F.col("__bn"))
-        .select(
-            F.least("__a", "__b").alias("src_id"),
-            F.greatest("__a", "__b").alias("dst_id"),
-            "cosine",
-        )
-    )
-    intra = (
-        memb.alias("x")
-        .join(memb.alias("y"), "__rep")
-        .filter(
-            (F.col("x.__id") < F.col("y.__id"))
-            & (F.col("x.__mnew") | F.col("y.__mnew"))
-        )
-        .join(intra_vals, "__rep")
-        .select(
-            F.col("x.__id").alias("src_id"),
-            F.col("y.__id").alias("dst_id"),
-            F.col("__c").alias("cosine"),
-        )
-    )
-    return cross.unionByName(intra)
+    return expand_groups(pairs, memb, intra)
 
 
 # ---------------------------------------------------------------------------

@@ -57,6 +57,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.layout import spread
+from ..operators.dedup import exact_groups, expand_groups
 from ..operators.joins import cross_validate_count
 from .text_pipeline import preprocess_documents
 
@@ -103,8 +104,8 @@ def _collapsed_rep_pairs(
     ``(__id, __rep)``).
 
     Plan shape: one pass over ``features`` extracts the nonzero index
-    set per doc (the exact set ``keyDistance`` uses), one aggregation
-    collapses identical sets (checkpointed — it feeds four consumers),
+    set per doc (the exact set ``keyDistance`` uses), one
+    ``exact_groups`` aggregation collapses identical sets,
     the model hashes ONE representative per distinct set, banding
     explodes ids+one double per table, the bucket self-join and the
     pair ``dropDuplicates`` move ids only, and the index arrays rejoin
@@ -153,16 +154,7 @@ def _collapsed_rep_pairs(
     base = features.select(
         F.col(id_col).alias("__id"), F.col(vec_col).alias(vec_col), idx.alias("__idx")
     )
-    g = (
-        base.groupBy("__idx")
-        .agg(
-            F.min("__id").alias("__rep"),
-            F.min_by(vec_col, "__id").alias(vec_col),
-            F.collect_list("__id").alias("__ids"),
-        )
-        .localCheckpoint(eager=False)
-    )
-    memb = g.select(F.explode("__ids").alias("__id"), "__rep")
+    g, memb = exact_groups(base, ["__idx"], F.min_by(vec_col, "__id").alias(vec_col))
     reps = g.select(
         F.col("__rep").alias("__id"),
         F.col(vec_col),
@@ -251,7 +243,19 @@ def lsh_similarity_join(
     similarity self-join, emit (srcId, dstId, jaccardSimilarity).
     Pair-for-pair identical to the MLlib ``approxSimilarityJoin``
     formulation (see module docstring; parity pinned in
-    tests/test_p2.py) via the collapsed ids-only plan."""
+    tests/test_p2.py) via the collapsed ids-only plan.
+
+    ``threshold >= 1.0`` returns an empty result without fitting: intent
+    mode's strict ``dist < 1 − threshold`` and reference mode's
+    ``dist >= threshold`` (on pairs with ``dist < 1.0``) both admit
+    nothing there."""
+    if mode not in ("intent", "reference"):
+        raise ValueError(f"unknown mode: {mode!r}")
+    if threshold >= 1.0:
+        t = features.schema[id_col].dataType.simpleString()
+        return features.sparkSession.createDataFrame(
+            [], f"srcId {t} NOT NULL, dstId {t} NOT NULL, jaccardSimilarity double"
+        )
     model = _fit_model(features, vec_col, num_hash_tables, seed)
     if mode == "intent":
         verified, memb = _collapsed_rep_pairs(
@@ -262,39 +266,16 @@ def lsh_similarity_join(
             1.0 - threshold,
             size_prefilter_sim=threshold,
         )
-        ma = memb.select(F.col("__rep").alias("__ra"), F.col("__id").alias("__a"))
-        mb = memb.select(F.col("__rep").alias("__rb"), F.col("__id").alias("__b"))
-        cross = (
-            verified.join(ma, "__ra")
-            .join(mb, "__rb")
-            .select(
-                F.least("__a", "__b").alias("srcId"),
-                F.greatest("__a", "__b").alias("dstId"),
-                (F.lit(1.0) - F.col("__dist")).alias("jaccardSimilarity"),
-            )
-        )
         # Intra-group pairs: identical index sets ⇒ keyDistance 0.0
-        # exactly ⇒ similarity 1.0 − 0.0. MLlib's join filter is
-        # ``dist < 1 − threshold`` STRICT, so dist-0.0 pairs clear it
-        # only when 1 − threshold > 0 — the guard below (ADVICE r17,
-        # the mirror of reference-mode's ``threshold > 0.0`` guard)
-        # keeps pair-for-pair parity at the threshold ≥ 1.0 edge,
-        # where MLlib emits nothing (callers use 0.97/0.8/0.5; this
-        # edge is latent there).
-        if not (1.0 - threshold > 0.0):
-            return cross
-        intra = (
-            memb.alias("x")
-            .join(memb.alias("y"), "__rep")
-            .filter(F.col("x.__id") < F.col("y.__id"))
-            .select(
-                F.col("x.__id").alias("srcId"),
-                F.col("y.__id").alias("dstId"),
-                F.lit(1.0 - 0.0).alias("jaccardSimilarity"),
-            )
+        # exactly ⇒ similarity 1.0 − 0.0, which clears the strict
+        # ``dist < 1 − threshold`` filter since threshold < 1 here.
+        pairs = verified.select(
+            F.col("__ra").alias("srcId"),
+            F.col("__rb").alias("dstId"),
+            (F.lit(1.0) - F.col("__dist")).alias("jaccardSimilarity"),
         )
-        return cross.unionByName(intra)
-    elif mode == "reference":
+        return expand_groups(pairs, memb, F.lit(1.0 - 0.0))
+    else:
         # approxSimilarityJoin(..., 1.0) keeps colliding pairs with
         # dist < 1.0 STRICT (self-pairs and both orientations
         # included), then the reference filters distCol >= threshold.
@@ -346,7 +327,6 @@ def lsh_similarity_join(
             F.lit(0.0).alias("jaccardSimilarity"),
         )
         return both.unionByName(same_set).unionByName(selfp)
-    raise ValueError(f"unknown mode: {mode!r}")
 
 
 def run_p2(

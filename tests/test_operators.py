@@ -1090,6 +1090,22 @@ def test_jaccard_prefix_collapse_tier_is_output_identical(spark, docs):
     assert not any(9_000_001 in p[:2] or 9_000_002 in p[:2] for p in with_c)
 
 
+def test_jaccard_prefix_collapse_builds_no_more_jobs_than_minhash(spark, docs, count_jobs):
+    """The prefix join's collapse checkpoint is lazy like the minhash
+    tier's: building the plan fires no more jobs than building
+    minhash_near_dup_pairs (under AQE both run only the grouping's
+    shuffle-map stage at construction)."""
+    from apache_spark_link_prediction_spark.operators.dedup import jaccard_prefix_join
+
+    docs.count()  # materialize the fixture's cache outside the counted builds
+    corpus = docs.select("doc_id", "text")
+    _, minhash_jobs = count_jobs(
+        lambda: minhash_near_dup_pairs(corpus, shingle_n=1, threshold=0.8)
+    )
+    _, prefix_jobs = count_jobs(lambda: jaccard_prefix_join(corpus))
+    assert prefix_jobs <= minhash_jobs
+
+
 def test_signature_collapse_emits_full_over_cap_cluster(spark):
     """Signature twin of the minhash mega-cluster guarantee: more
     identical signatures than max_bucket_size used to be dropped whole

@@ -102,3 +102,20 @@ def test_fast_join_matches_mllib_intent_exact_dups(spark):
     assert len(old) >= 3  # the 3 intra pairs at least
     assert new == old
     feats.unpersist()
+
+
+def test_threshold_one_returns_empty_without_jobs(spark, sf_dir, count_jobs):
+    """At threshold >= 1.0 neither mode admits a pair (intent: strict
+    dist < 1 - t; reference: dist >= t among dist < 1.0 pairs), so the
+    join returns an empty frame of the normal schema without fitting the
+    model or building the collapse tier: no Spark job fires."""
+    feats = _sampled_feats(spark, sf_dir)
+    for mode in ("intent", "reference"):
+        ref = lsh_similarity_join(feats, threshold=0.8, mode=mode)
+        out, jobs = count_jobs(
+            lambda: lsh_similarity_join(feats, threshold=1.0, mode=mode)
+        )
+        assert jobs == 0, mode
+        assert out.schema == ref.schema, mode
+        assert out.count() == 0, mode
+    feats.unpersist()
