@@ -1006,7 +1006,7 @@ def semantic_dedup_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.similarity import semdedup
 
     emb = load_table(spark, sf_dir, "embeddings")
-    return semdedup(emb, eps=0.6, fit_max_iter=8)
+    return semdedup(emb, eps=0.6)
 
 
 @register("semantic_dedup_incremental")  # rows-only — inherits both

@@ -112,8 +112,10 @@ SF1_RECORDED: dict[str, float] = {
     "p2_scale_path_jaccard_deep": 6.0,
     "embedding_ann_ivf": 6.17,
     # First measurement round 10: 10× tier solo-warm best-of-2; the
-    # eager fit chain (count + coarse KMeans + bounded sample collect +
-    # numpy codebooks) is the ~7s constant term — 1× measures 7.0s.
+    # eager fit chain (count + MLlib coarse KMeans + bounded sample
+    # collect + numpy codebooks) was the ~7s constant term — 1× measured
+    # 7.0s. The fit is now one sample collect and a driver-side numpy
+    # Lloyd, so this pin is loose.
     "embedding_ann_ivfpq": 10.16,
     "json_props_extract_agg": 0.65,
     "semi_anti_existence": 0.94,

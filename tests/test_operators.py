@@ -360,22 +360,91 @@ def test_ivf_derived_defaults_recall(spark, emb):
 
 
 def test_ivf_failed_fit_releases_cached_sample(spark, emb, monkeypatch):
-    """The quantizer's cached fit sample is unpersisted even when the
-    KMeans fit raises: a failed fit must not leave a persisted RDD
-    behind in a long-lived session (derived num_cells path)."""
-    from pyspark.ml.clustering import KMeans
-
+    """A quantizer fit that raises propagates its error and leaves no
+    persisted RDD behind in a long-lived session (derived num_cells
+    path)."""
+    from apache_spark_link_prediction_spark.operators import similarity
     from apache_spark_link_prediction_spark.operators.similarity import ivf_top_k
 
-    def boom(self, dataset, params=None):
+    def boom(x, k, seed):
         raise RuntimeError("fit failed")
 
+    emb.count()  # the cached fixture's own RDD is not the fit's to release
     persisted = spark.sparkContext._jsc.getPersistentRDDs
     before = persisted().size()
-    monkeypatch.setattr(KMeans, "fit", boom)
+    monkeypatch.setattr(similarity, "_lloyd", boom)
     with pytest.raises(RuntimeError, match="fit failed"):
         ivf_top_k(emb, emb.filter(F.col("vec_id") < 8), k=5, num_cells=None)
     assert persisted().size() == before
+
+
+def test_nearest_is_batch_invariant_with_lowest_id_ties():
+    """A row's nearest centroid depends only on the row and the
+    centroids — one call over 3,000 rows equals 3,000 single-row calls
+    bit for bit, near-ties included (SemDeDup's exact collapse and
+    core-count-independent outputs both need it) — and exact ties go to
+    the lowest cell id."""
+    import numpy as np
+
+    from apache_spark_link_prediction_spark.operators.similarity import _nearest
+
+    rng = np.random.default_rng(7)
+    centers = rng.normal(size=(141, 64))
+    centers[1] = centers[0]  # a duplicated centroid: every pick of it ties
+    x = rng.normal(size=(3000, 64))
+    i, j = rng.integers(0, 141, 1000), rng.integers(0, 141, 1000)
+    x[:1000] = (centers[i] + centers[j]) / 2  # midpoints: near-ties
+    x[1000:1100] = centers[0]  # exact ties between cells 0 and 1
+    batch = _nearest(x, centers)
+    single = np.array([_nearest(x[r : r + 1], centers)[0] for r in range(3000)])
+    assert np.array_equal(batch, single)
+    assert (batch[1000:1100] == 0).all()
+    assert not (batch == 1).any()
+
+
+def test_quantizers_on_degenerate_corpora(spark, emb):
+    """Empty, 1-row and 3-row corpora: IVF (derived and fixed cell
+    counts) and IVF-PQ with nprobe >= the fitted cell count return
+    exactly the brute-force rows and schema, and SemDeDup keeps a lone
+    row (MLlib KMeans raised on all of these)."""
+    from apache_spark_link_prediction_spark.operators.similarity import (
+        ivf_pq_top_k,
+        ivf_top_k,
+        semdedup,
+    )
+
+    rows = emb.orderBy("vec_id").take(3)
+    for n in (0, 1, 3):
+        c = spark.createDataFrame(rows[:n], emb.schema)
+        exact = brute_force_top_k(c, c, k=5)
+        for approx in (
+            ivf_top_k(c, c, k=5, nprobe=4),
+            ivf_top_k(c, c, k=5, num_cells=16, nprobe=16),
+            ivf_pq_top_k(c, c, k=5, num_cells=16, nprobe=16),
+        ):
+            assert approx.columns == exact.columns
+            assert sorted(approx.collect()) == sorted(exact.collect()), n
+    lone = spark.createDataFrame(rows[:1], emb.schema)
+    assert [r["keep"] for r in semdedup(lone).collect()] == [True]
+    assert semdedup(spark.createDataFrame([], emb.schema)).collect() == []
+
+
+def test_quantizer_build_runs_only_the_sample_collect(spark, emb, count_jobs):
+    """With explicit cell counts, building the IVF and IVF-PQ plans
+    fires exactly one Spark job each: the bounded fit-sample collect
+    (MLlib KMeans fired ~20 per fit)."""
+    from apache_spark_link_prediction_spark.operators.similarity import (
+        ivf_pq_top_k,
+        ivf_top_k,
+    )
+
+    emb.count()  # materialize the cached fixture outside the count
+    queries = emb.filter(F.col("vec_id") < 8)
+    _, ivf_jobs = count_jobs(
+        lambda: ivf_top_k(emb, queries, k=5, num_cells=16, nprobe=4)
+    )
+    _, pq_jobs = count_jobs(lambda: ivf_pq_top_k(emb, queries, k=5, num_cells=16))
+    assert (ivf_jobs, pq_jobs) == (1, 1)
 
 
 def test_ivfpq_recall_vs_brute_force(spark, emb):
@@ -1469,7 +1538,7 @@ def test_semdedup_kept_set_is_maximal_independent(spark, emb):
     from apache_spark_link_prediction_spark.operators.similarity import semdedup
 
     eps = 0.6
-    out = semdedup(emb, eps=eps, max_cluster_block=None, fit_max_iter=8).collect()
+    out = semdedup(emb, eps=eps, max_cluster_block=None).collect()
     vecs = {r["vec_id"]: np.array(r["embedding"], dtype=np.float64)
             for r in emb.collect()}
     assert sorted(r["vec_id"] for r in out) == sorted(vecs)
@@ -1533,7 +1602,7 @@ def test_semdedup_keeper_is_farthest_from_centroid(spark):
     ]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     out = {r["vec_id"]: r["keep"]
-           for r in semdedup(df, eps=0.12, num_clusters=1, fit_max_iter=20).collect()}
+           for r in semdedup(df, eps=0.12, num_clusters=1).collect()}
     assert out == {1: False, 2: True, 3: True}
 
 

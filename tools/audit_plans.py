@@ -30,7 +30,7 @@ EXECUTES_ON_BUILD = {
     "p1_link_prediction",       # LogisticRegression fit
     "p2_lsh_similarity",        # MinHashLSH fit + approxSimilarityJoin
     "p2_lsh_reference_mode",    # same, bug-compatible mode
-    "embedding_ann_ivf",        # k-means quantizer fit
+    "embedding_ann_ivf",        # sizing count + quantizer fit-sample collect
     "dedup_clusters",           # iterative connected components
     "dedup_clusters_exact",     # iterative connected components
     "graph_pagerank",           # unrolled iterations + cached degree
