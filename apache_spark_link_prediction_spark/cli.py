@@ -126,7 +126,7 @@ def main(argv: list[str] | None = None, spark=None) -> int:
             print("Running Logistic Regression classification...\n")
             result = run_p1(
                 spark, info, train, test, truth,
-                fraction=args.fraction, seed=args.seed,
+                fraction=args.fraction, seed=args.seed, max_iter=args.max_iter,
             )
             print("Calculating metrics...\n")
             # Predictor.scala:328-341 print shape, from the DataFrame-

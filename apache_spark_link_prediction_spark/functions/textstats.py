@@ -147,10 +147,10 @@ def doc_fingerprint(text: Column | str) -> Column:
     return F.md5(normalized)
 
 
-def doc_rolling_hash(text: Column | str, *, base: int = 131, mod: int = 2147483647) -> Column:
+def doc_rolling_hash(text: Column | str) -> Column:
     """Polynomial rolling hash (Rabin-Karp) over the whitespace-
-    normalized, lowercased text: ``h = Σ h·base + codepoint (mod p)``,
-    left-to-right. The content-defined-chunking / incremental-dedup
+    normalized, lowercased text: ``h = Σ h·131 + codepoint (mod
+    2^31 − 1)``, left-to-right. The content-defined-chunking / incremental-dedup
     primitive next to the md5 fingerprint; mod applied every step keeps
     the fold inside BIGINT in any engine (SQL twins can't wrap on
     overflow). Empty text → 0."""
@@ -160,7 +160,7 @@ def doc_rolling_hash(text: Column | str, *, base: int = 131, mod: int = 21474836
     h = F.aggregate(
         codes,
         F.lit(0).cast("long"),
-        lambda acc, code: (acc * base + code) % mod,
+        lambda acc, code: (acc * 131 + code) % 2147483647,
     )
     return F.when(F.length(normalized) == 0, F.lit(0).cast("long")).otherwise(h)
 

@@ -37,12 +37,10 @@ END = "</w>"
 SEP = "\x1f"
 
 
-def words_to_symbols(words: DataFrame, word_col: str = "word") -> DataFrame:
+def words_to_symbols(words: DataFrame) -> DataFrame:
     """(word, count) → (symbols array<string>, count): characters plus
     the end-of-word marker."""
-    syms = F.expr(
-        f"concat(transform(split({word_col}, ''), c -> c), array('{END}'))"
-    )
+    syms = F.expr(f"concat(transform(split(word, ''), c -> c), array('{END}'))")
     return words.select(syms.alias("symbols"), "count")
 
 
@@ -84,7 +82,6 @@ def _lit(s: str) -> str:
 def train_bpe(
     docs: DataFrame,
     *,
-    text_col: str = "text",
     num_merges: int = 8,
     batch_size: int = 1,
     stats: dict | None = None,
@@ -127,7 +124,7 @@ def train_bpe(
     from ..functions.pairwise import tokenize
 
     words = (
-        docs.select(F.explode(tokenize(text_col)).alias("word"))
+        docs.select(F.explode(tokenize("text")).alias("word"))
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("count"))
     )
@@ -444,21 +441,14 @@ def _replay_batch(head, decs, want: int, w_size: int) -> list[tuple[str, str]]:
     return accepted
 
 
-def apply_bpe(
-    docs: DataFrame,
-    merges: list[tuple[str, str]],
-    *,
-    text_col: str = "text",
-) -> DataFrame:
+def apply_bpe(docs: DataFrame, merges: list[tuple[str, str]]) -> DataFrame:
     """Segment a corpus with a learned merge list: per doc, the BPE
     token multiset sizes (n_tokens after segmentation vs n_chars) — the
     fertility statistic used to compare tokenizers. Merges apply in
     learned order, greedy left-to-right, exactly as trained."""
     from ..functions.pairwise import tokenize
 
-    words = docs.select(
-        "doc_id", F.explode(tokenize(text_col)).alias("word")
-    )
+    words = docs.select("doc_id", F.explode(tokenize("text")).alias("word"))
     vocab = words.select(
         "doc_id",
         F.expr(f"concat(transform(split(word, ''), c -> c), array('{END}'))").alias(

@@ -29,6 +29,14 @@ from ..functions.pairwise import (
 )
 from ..functions.textstats import doc_fingerprint, doc_rolling_hash
 
+# MinHash signature length; the full run, the persisted index and the
+# incremental join must agree on it (and the index on its band count).
+NUM_HASHES = 32
+INDEX_BANDS = 8
+# Round cap of the min-label propagation in connected_components — a
+# guard against non-convergence, not a tuning knob.
+CC_MAX_ROUNDS = 20
+
 
 def _drop_hot_buckets(banded: DataFrame, keys: list[str], max_bucket_size: int) -> DataFrame:
     """Drop rows in over-cap LSH buckets via ``groupBy(keys).count()`` +
@@ -163,9 +171,7 @@ def expand_groups(
 # Exact dedup
 # ---------------------------------------------------------------------------
 
-def dedup_exact(
-    docs: DataFrame, *, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def dedup_exact(docs: DataFrame) -> DataFrame:
     """Exact near-identical dedup: md5 fingerprint of normalized text →
     keep the min-id representative per fingerprint.
 
@@ -174,10 +180,10 @@ def dedup_exact(
     at the scan and never moves.
     """
     return (
-        docs.select(doc_fingerprint(text_col).alias("fingerprint"), F.col(id_col))
+        docs.select(doc_fingerprint("text").alias("fingerprint"), "doc_id")
         .groupBy("fingerprint")
         .agg(
-            F.min(id_col).alias("keeper_id"),
+            F.min("doc_id").alias("keeper_id"),
             (F.count(F.lit(1)) - 1).alias("n_dups"),
         )
     )
@@ -263,11 +269,8 @@ def minhash_signature_cols(
 def minhash_near_dup_pairs(
     docs: DataFrame,
     *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     shingle_n: int = 3,
-    num_hashes: int = 32,
-    bands: int = 8,
+    bands: int = INDEX_BANDS,
     threshold: float = 0.5,
     max_bucket_size: int = 1000,
     collapse_exact: bool = True,
@@ -276,7 +279,7 @@ def minhash_near_dup_pairs(
 
     shingle → minhash → band → bucket-join → size-ratio bound → verify.
     Emits (src_id, dst_id, jaccard_micro) with src_id < dst_id and
-    jaccard ≥ threshold. Bands of r = num_hashes/bands rows; a pair
+    jaccard ≥ threshold. Bands of r = NUM_HASHES/bands rows; a pair
     collides if any band's sub-signature matches exactly. Every
     candidate that passes the lossless size-ratio bound is verified
     exactly — no probabilistic filter drops pairs.
@@ -291,8 +294,8 @@ def minhash_near_dup_pairs(
     the threshold pushed *into* candidate verification rather than
     filtered post-hoc, and canonical (src<dst) pairs (SURVEY.md §2.7-3).
     """
-    assert num_hashes % bands == 0
-    rows_per_band = num_hashes // bands
+    assert NUM_HASHES % bands == 0
+    rows_per_band = NUM_HASHES // bands
 
     # Hash the shingle STRINGS to 64-bit longs up front; everything
     # downstream — the 32 per-seed minhashes AND the exact verification
@@ -306,9 +309,9 @@ def minhash_near_dup_pairs(
     # page-cached, codegen'd scan. At 100 TB with a cold object store
     # that tradeoff flips; persist(MEMORY_AND_DISK_SER) there.
     base = docs.select(
-        F.col(id_col).alias("__id"),
+        F.col("doc_id").alias("__id"),
         F.transform(
-            word_shingles(text_col, shingle_n), lambda s: F.xxhash64(s)
+            word_shingles("text", shingle_n), lambda s: F.xxhash64(s)
         ).alias("__shingles"),
     )
 
@@ -352,7 +355,7 @@ def minhash_near_dup_pairs(
     # minhash_signature_cols — avoids CollapseProject's nested-HOF
     # recompute blowup in the band keys below). Seeded re-hash of an
     # already-hashed long is a constant-time mix, not a per-byte pass.
-    sig = minhash_signature_cols(base, "__id", F.col("__shingles"), num_hashes)
+    sig = minhash_signature_cols(base, "__id", F.col("__shingles"), NUM_HASHES)
 
     # INLINE-VERIFY restructure (r17, the p2 fast-join lesson): the
     # hashed shingle arrays ride the band explode and the ONE
@@ -457,18 +460,10 @@ def minhash_near_dup_pairs(
     return expand_groups(pairs, memb, F.lit(1_000_000).cast("long"))
 
 
-def minhash_index(
-    docs: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    shingle_n: int = 3,
-    num_hashes: int = 32,
-    bands: int = 8,
-) -> DataFrame:
+def minhash_index(docs: DataFrame, *, shingle_n: int = 3) -> DataFrame:
     """Persistable near-dup index: one row per document —
     ``(doc_id, nsh, shingles: sorted array<long>, band_keys:
-    array<long> of size bands, set_key: array<long> of size 2)``.
+    array<long> of size INDEX_BANDS, set_key: array<long> of size 2)``.
 
     This is the state a 100 TB corpus keeps BETWEEN ingest batches:
     write it as parquet partitioned however the corpus is, and each
@@ -478,7 +473,7 @@ def minhash_index(
     keys and shingle hashes use the same seeds/expressions as
     :func:`minhash_near_dup_pairs`, so index rows built at different
     times (or by the full pipeline) are mutually compatible as long as
-    (shingle_n, num_hashes, bands) match. An index that also stores a
+    ``shingle_n`` matches. An index that also stores a
     ``sig`` column (the earlier format) still loads: the extra column is
     never selected.
 
@@ -489,15 +484,14 @@ def minhash_index(
     — collision probability per set pair ≈ 2⁻¹²⁸, far below the
     hashed-shingle verify's own documented ~1e-16 collision class.
     """
-    assert num_hashes % bands == 0
-    rows_per_band = num_hashes // bands
+    rows_per_band = NUM_HASHES // INDEX_BANDS
     base = docs.select(
-        F.col(id_col).alias("doc_id"),
+        "doc_id",
         F.array_sort(
-            F.transform(word_shingles(text_col, shingle_n), lambda s: F.xxhash64(s))
+            F.transform(word_shingles("text", shingle_n), lambda s: F.xxhash64(s))
         ).alias("shingles"),
     )
-    sig = minhash_signature_cols(base, "doc_id", F.col("shingles"), num_hashes)
+    sig = minhash_signature_cols(base, "doc_id", F.col("shingles"), NUM_HASHES)
     band_keys = F.array(
         *[
             F.xxhash64(
@@ -507,7 +501,7 @@ def minhash_index(
                     for i in range(b * rows_per_band, (b + 1) * rows_per_band)
                 ],
             )
-            for b in range(bands)
+            for b in range(INDEX_BANDS)
         ]
     )
     return (
@@ -532,11 +526,7 @@ def minhash_incremental_pairs(
     index: DataFrame,
     new_docs: DataFrame,
     *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     shingle_n: int = 3,
-    num_hashes: int = 32,
-    bands: int = 8,
     threshold: float = 0.5,
     max_bucket_size: int = 1000,
     collapse_exact: bool = True,
@@ -568,14 +558,7 @@ def minhash_incremental_pairs(
     shingle/signature cost only for its own rows. Caller appends
     ``minhash_index(new_docs)`` to the stored index afterwards.
     """
-    new_idx = minhash_index(
-        new_docs,
-        id_col=id_col,
-        text_col=text_col,
-        shingle_n=shingle_n,
-        num_hashes=num_hashes,
-        bands=bands,
-    )
+    new_idx = minhash_index(new_docs, shingle_n=shingle_n)
     # Checkpoint the new batch's index rows (r18): all_idx below feeds
     # three consumers (collapse agg, two verify joins), and each would
     # re-run the batch's shingle+signature lineage — the pipeline's
@@ -745,25 +728,21 @@ def simhash_cols(docs: DataFrame, id_col: str, text: Column | str, bits: int) ->
 def simhash_near_dup_pairs(
     docs: DataFrame,
     *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    bits: int = 32,
-    blocks: int = 4,
     max_hamming: int = 3,
     max_bucket_size: int = 1000,
 ) -> DataFrame:
-    """SimHash near-dup pairs: by pigeonhole, two signatures within
-    Hamming distance < blocks must agree exactly on ≥1 of ``blocks``
-    bit-blocks — block equality is the LSH bucket key; candidates are
+    """32-bit SimHash near-dup pairs: by pigeonhole, two signatures
+    within Hamming distance < 4 must agree exactly on ≥1 of 4 8-bit
+    blocks — block equality is the LSH bucket key; candidates are
     verified with ``bit_count(xor) <= max_hamming``.
 
     Emits (src_id, dst_id, hamming) with src_id < dst_id.
     """
-    base = simhash_cols(docs, id_col, text_col, bits)
+    base = simhash_cols(docs, "doc_id", "text", 32)
     return signature_band_pairs(
         base,
-        bits=bits,
-        blocks=blocks,
+        bits=32,
+        blocks=4,
         max_hamming=max_hamming,
         max_bucket_size=max_bucket_size,
     )
@@ -941,46 +920,38 @@ def signature_incremental_pairs(
 def ngram_jaccard_pairs(
     docs: DataFrame,
     *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     block_col: str | None = None,
     ngram: int = 2,
     threshold: float = 0.2,
-    window: int | None = None,
     allow_quadratic: bool = False,
 ) -> DataFrame:
     """Exact word-n-gram Jaccard similarity over blocked candidate
-    pairs: pairs share ``block_col`` (e.g. source/partition key) and —
-    optionally — have ids within ``window`` of each other. Fully
+    pairs: pairs share ``block_col`` (e.g. source/partition key). Fully
     SQL-expressible (the oracle-checkable exact-similarity operator;
     MinHash above approximates exactly this).
 
-    Without ``window`` the pair count is O(block²) and block size grows
-    with the corpus — correct as the small-scale ground-truth twin for
-    MinHash recall checks, catastrophic as a production dedup path at
-    100 TB. Callers must therefore either bound pairs with ``window``
-    or state the intent with ``allow_quadratic=True``.
+    The pair count is O(block²) and block size grows with the corpus —
+    correct as the small-scale ground-truth twin for MinHash recall
+    checks, catastrophic as a production dedup path at 100 TB. Callers
+    must therefore state the intent with ``allow_quadratic=True``.
 
     Emits (src_id, dst_id, jaccard) with src_id < dst_id, jaccard ≥
     threshold, rounded to 6 decimals.
     """
-    if window is None and not allow_quadratic:
+    if not allow_quadratic:
         raise ValueError(
-            "ngram_jaccard_pairs without a `window` bound is O(block²) per "
-            "block — pass window=N to bound candidate pairs, or "
+            "ngram_jaccard_pairs is O(block²) per block — pass "
             "allow_quadratic=True if this is a deliberate small-scale "
             "ground-truth run (use minhash_near_dup_pairs in production)."
         )
     base = docs.select(
-        F.col(id_col).alias("__id"),
+        F.col("doc_id").alias("__id"),
         *( [F.col(block_col).alias("__blk")] if block_col else [F.lit(0).alias("__blk")] ),
-        word_shingles(text_col, ngram).alias("__grams"),
+        word_shingles("text", ngram).alias("__grams"),
     )
     a = base.select(F.col("__blk"), F.col("__id").alias("src_id"), F.col("__grams").alias("__ga"))
     b = base.select(F.col("__blk"), F.col("__id").alias("dst_id"), F.col("__grams").alias("__gb"))
     pairs = a.join(b, on="__blk", how="inner").filter(F.col("src_id") < F.col("dst_id"))
-    if window is not None:
-        pairs = pairs.filter(F.col("dst_id") - F.col("src_id") <= window)
     # NOTE: no size-ratio prefilter here, deliberately. At this
     # operator's low default threshold the min/max-size bound prunes
     # almost nothing, and A/B measurement showed the extra per-pair
@@ -1000,13 +971,7 @@ def ngram_jaccard_pairs(
 # Duplicate clustering: pairs → connected components → keeper per cluster
 # ---------------------------------------------------------------------------
 
-def connected_components(
-    pairs: DataFrame,
-    *,
-    src: str = "src_id",
-    dst: str = "dst_id",
-    max_iterations: int = 20,
-) -> DataFrame:
+def connected_components(pairs: DataFrame) -> DataFrame:
     """Connected components by iterative min-label propagation over
     DataFrames (GraphX has no Python API; this is the PySpark-native
     formulation, SURVEY.md §7-6).
@@ -1014,15 +979,16 @@ def connected_components(
     Each node's component starts as its own id; every round each node
     adopts the min component among itself and its neighbors; converged
     when no label changes. Rounds are O(diameter) — near-dup clusters
-    are dense and shallow, so few rounds in practice (cap asserts).
+    are dense and shallow, so few rounds in practice (``CC_MAX_ROUNDS``
+    asserts).
     ``localCheckpoint`` truncates lineage each round (an iterative plan
     would otherwise grow exponentially and re-execute from the scan).
 
     Returns (node_id, component) with component = min node id reachable.
     """
     edges = (
-        pairs.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .unionAll(pairs.select(F.col(dst).alias("a"), F.col(src).alias("b")))
+        pairs.select(F.col("src_id").alias("a"), F.col("dst_id").alias("b"))
+        .unionAll(pairs.select(F.col("dst_id").alias("a"), F.col("src_id").alias("b")))
         .dropDuplicates()
         .localCheckpoint(eager=True)
     )
@@ -1032,7 +998,7 @@ def connected_components(
         .withColumn("component", F.col("node_id"))
         .localCheckpoint(eager=True)
     )
-    for _ in range(max_iterations):
+    for _ in range(CC_MAX_ROUNDS):
         neighbor_min = (
             edges.join(labels, edges["b"] == labels["node_id"])
             .groupBy(F.col("a").alias("node_id"))
@@ -1059,29 +1025,22 @@ def connected_components(
         if changed == 0:
             break
     else:
-        raise RuntimeError(f"connected_components: no convergence in {max_iterations} rounds")
+        raise RuntimeError(f"connected_components: no convergence in {CC_MAX_ROUNDS} rounds")
     return labels
 
 
-def dedup_clusters(
-    docs: DataFrame,
-    pairs: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    src: str = "src_id",
-    dst: str = "dst_id",
-) -> DataFrame:
+def dedup_clusters(docs: DataFrame, pairs: DataFrame) -> DataFrame:
     """Near-dup pairs → duplicate clusters: every doc mapped to its
     cluster representative (min doc id in the component); singletons map
     to themselves. The output drives the actual dedup filter
     (``keep iff doc_id == keeper_id``)."""
-    comp = connected_components(pairs, src=src, dst=dst)
+    comp = connected_components(pairs)
     return (
-        docs.select(F.col(id_col))
-        .join(comp, docs[id_col] == comp["node_id"], "left")
+        docs.select("doc_id")
+        .join(comp, docs["doc_id"] == comp["node_id"], "left")
         .select(
-            F.col(id_col),
-            F.coalesce(F.col("component"), F.col(id_col)).alias("keeper_id"),
+            "doc_id",
+            F.coalesce(F.col("component"), F.col("doc_id")).alias("keeper_id"),
         )
     )
 
@@ -1090,11 +1049,6 @@ def dedup_clusters_incremental(
     assignment: DataFrame,
     new_ids: DataFrame,
     new_pairs: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    src: str = "src_id",
-    dst: str = "dst_id",
-    max_iterations: int = 20,
 ) -> DataFrame:
     """Incremental keeper maintenance — the step a daily ingest runs
     AFTER :func:`minhash_incremental_pairs` (or the signature/embedding
@@ -1125,36 +1079,34 @@ def dedup_clusters_incremental(
     as the next ingest's ``assignment``.
     """
     keeper = assignment.select(
-        F.col(id_col).alias("__n"), F.col("keeper_id").alias("__k")
+        F.col("doc_id").alias("__n"), F.col("keeper_id").alias("__k")
     )
-    p = new_pairs.select(F.col(src).alias("__s"), F.col(dst).alias("__d"))
+    p = new_pairs.select(F.col("src_id").alias("__s"), F.col("dst_id").alias("__d"))
     contracted = (
         p.join(keeper.withColumnRenamed("__n", "__s").withColumnRenamed("__k", "__ks"),
                on="__s", how="left")
         .join(keeper.withColumnRenamed("__n", "__d").withColumnRenamed("__k", "__kd"),
               on="__d", how="left")
         .select(
-            F.coalesce(F.col("__ks"), F.col("__s")).alias(src),
-            F.coalesce(F.col("__kd"), F.col("__d")).alias(dst),
+            F.coalesce(F.col("__ks"), F.col("__s")).alias("src_id"),
+            F.coalesce(F.col("__kd"), F.col("__d")).alias("dst_id"),
         )
-        .filter(F.col(src) != F.col(dst))  # intra-cluster pairs are no-ops
+        .filter(F.col("src_id") != F.col("dst_id"))  # intra-cluster pairs are no-ops
     )
-    comp = connected_components(
-        contracted, src=src, dst=dst, max_iterations=max_iterations
-    )
+    comp = connected_components(contracted)
     old_updated = (
         assignment.join(comp, assignment["keeper_id"] == comp["node_id"], "left")
         .select(
-            F.col(id_col),
+            "doc_id",
             F.coalesce(F.col("component"), F.col("keeper_id")).alias("keeper_id"),
         )
     )
     new_assign = (
-        new_ids.select(F.col(id_col))
-        .join(comp, new_ids[id_col] == comp["node_id"], "left")
+        new_ids.select("doc_id")
+        .join(comp, new_ids["doc_id"] == comp["node_id"], "left")
         .select(
-            F.col(id_col),
-            F.coalesce(F.col("component"), F.col(id_col)).alias("keeper_id"),
+            "doc_id",
+            F.coalesce(F.col("component"), F.col("doc_id")).alias("keeper_id"),
         )
     )
     return old_updated.unionByName(new_assign)
@@ -1165,11 +1117,6 @@ def keep_best_incremental(
     old_keepers: DataFrame,
     new_scored: DataFrame,
     new_pairs: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    src: str = "src_id",
-    dst: str = "dst_id",
-    max_iterations: int = 20,
 ) -> DataFrame:
     """Incremental QUALITY-keeper maintenance (round 16, VERDICT r15
     item 4) — :func:`dedup_clusters_incremental` extended from min-id
@@ -1209,16 +1156,10 @@ def keep_best_incremental(
     Returns (id, keeper_id, kept) over old ∪ new with keeper_id = the
     QUALITY keeper."""
     assign2 = dedup_clusters_incremental(
-        assignment,
-        new_scored.select(F.col(id_col)),
-        new_pairs,
-        id_col=id_col,
-        src=src,
-        dst=dst,
-        max_iterations=max_iterations,
+        assignment, new_scored.select("doc_id"), new_pairs
     )
     comp2 = assign2.select(
-        F.col(id_col).alias("__m"), F.col("keeper_id").alias("__c2")
+        F.col("doc_id").alias("__m"), F.col("keeper_id").alias("__c2")
     )
     cand_old = old_keepers.join(
         comp2, old_keepers["keeper_doc"] == comp2["__m"]
@@ -1228,10 +1169,10 @@ def keep_best_incremental(
         F.col("keeper_score").alias("__score"),
     )
     cand_new = new_scored.join(
-        comp2, new_scored[id_col] == comp2["__m"]
+        comp2, new_scored["doc_id"] == comp2["__m"]
     ).select(
         F.col("__c2").alias("__comp"),
-        F.col(id_col).alias("__cand"),
+        F.col("doc_id").alias("__cand"),
         F.col("score").alias("__score"),
     )
     w = Window.partitionBy("__comp").orderBy(
@@ -1246,9 +1187,9 @@ def keep_best_incremental(
     return (
         assign2.join(best, assign2["keeper_id"] == best["__comp"])
         .select(
-            F.col(id_col),
+            "doc_id",
             F.col("__q_keeper").alias("keeper_id"),
-            (F.col(id_col) == F.col("__q_keeper")).cast("int").alias("kept"),
+            (F.col("doc_id") == F.col("__q_keeper")).cast("int").alias("kept"),
         )
     )
 
@@ -1256,8 +1197,6 @@ def keep_best_incremental(
 def jaccard_prefix_join(
     docs: DataFrame,
     *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     threshold: float = 0.8,
     collapse_exact: bool = True,
 ) -> DataFrame:
@@ -1287,8 +1226,8 @@ def jaccard_prefix_join(
     unblocked.
     """
     base = docs.select(
-        F.col(id_col).alias("__id"),
-        F.array_distinct(tokenize(text_col)).alias("__toks"),
+        F.col("doc_id").alias("__id"),
+        F.array_distinct(tokenize("text")).alias("__toks"),
     )
 
     # Exact-collapse first tier (the production sequence for replicated
@@ -1422,16 +1361,9 @@ def jaccard_prefix_join(
     return expand_groups(pairs, memb, intra)
 
 
-def containment_prefix_join(
-    docs: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    threshold: float = 0.8,
-    shingle_n: int = 1,
-) -> DataFrame:
+def containment_prefix_join(docs: DataFrame, *, shingle_n: int = 1) -> DataFrame:
     """EXACT directed token-set CONTAINMENT join (Broder 1997's
-    C(A,B) = |A∩B| / |A| ≥ t) — the quote/subset detector next to
+    C(A,B) = |A∩B| / |A| ≥ t, t = 0.8) — the quote/subset detector next to
     :func:`jaccard_prefix_join`'s symmetric near-dup tier: a short doc
     fully quoted inside a long one has containment ~1.0 but Jaccard
     ~|A|/|B| → 0, so the Jaccard family structurally cannot find it.
@@ -1480,12 +1412,12 @@ def containment_prefix_join(
     # (word_shingles' contract); zero-token docs are excluded
     # (containment undefined on an empty set).
     grams = (
-        word_shingles(text_col, shingle_n)
+        word_shingles("text", shingle_n)
         if shingle_n > 1
-        else F.array_distinct(tokenize(text_col))
+        else F.array_distinct(tokenize("text"))
     )
-    base = docs.filter(F.size(tokenize(text_col)) > 0).select(
-        F.col(id_col).alias("__id"), grams.alias("__toks")
+    base = docs.filter(F.size(tokenize("text")) > 0).select(
+        F.col("doc_id").alias("__id"), grams.alias("__toks")
     )
     toks = base.select(
         "__id", F.size("__toks").alias("__sz"), F.explode("__toks").alias("__tok")
@@ -1493,7 +1425,7 @@ def containment_prefix_join(
     freq = toks.groupBy("__tok").agg(F.count(F.lit(1)).alias("__df"))
     w = Window.partitionBy("__id").orderBy("__df", "__tok")
     ranked = toks.join(freq, on="__tok").withColumn("__rn", F.row_number().over(w))
-    t_eff = threshold - 1e-6
+    t_eff = 0.8 - 1e-6
     _EPS = 1e-9
     prefix_len = F.col("__sz") - F.ceil(F.lit(t_eff) * F.col("__sz") - F.lit(_EPS)) + 1
     a = ranked.filter(F.col("__rn") <= prefix_len).select(
@@ -1540,28 +1472,20 @@ def containment_prefix_join(
                 " div size(__ta)"
             ),
         )
-        .filter(F.col("containment_micro") >= micro_threshold(threshold))
+        .filter(F.col("containment_micro") >= micro_threshold(0.8))
         .select("src_id", "dst_id", "containment_micro")
     )
 
 
 def levenshtein_near_dup_pairs(
-    docs: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    block_col: str | None = "lang",
-    prefix_len: int = 40,
-    band_width: int = 32,
-    max_block: int = 64,
-    max_dist: int = 8,
+    docs: DataFrame, *, block_col: str | None = "lang"
 ) -> DataFrame:
-    """Edit-distance near-dup pairs with banded blocking: candidates
-    share (``block_col``, length band) — an equi-join, never all-pairs —
-    and verify with ``levenshtein`` on a ``prefix_len``-char normalized
-    prefix (edit distance is O(len²) per pair; bounding the operand
-    bounds the per-pair cost). Blocks larger than ``max_block`` are
-    dropped WHOLE by a deterministic windowed count — lossy by design:
+    """Edit-distance near-dup pairs (distance ≤ 8) with banded blocking:
+    candidates share (``block_col``, 32-char length band) — an
+    equi-join, never all-pairs — and verify with ``levenshtein`` on a
+    40-char normalized prefix (edit distance is O(len²) per pair;
+    bounding the operand bounds the per-pair cost). Blocks larger than
+    64 rows are dropped WHOLE by a deterministic windowed count — lossy by design:
     over-weight blocks are boilerplate mega-clusters whose quadratic
     pair volume the cap exists to refuse (the same posture as the
     MinHash/SimHash ``max_bucket_size`` caps, applied pre-join).
@@ -1570,16 +1494,14 @@ def levenshtein_near_dup_pairs(
     identical blocking + cap in DuckDB SQL.
     """
     pfx = F.substring(
-        F.regexp_replace(F.trim(F.lower(F.col(text_col))), r"\s+", " "),
-        1,
-        prefix_len,
+        F.regexp_replace(F.trim(F.lower(F.col("text"))), r"\s+", " "), 1, 40
     )
     block = F.col(block_col) if block_col else F.lit("_")
     d = docs.select(
-        F.col(id_col),
+        "doc_id",
         block.alias("__blk"),
         pfx.alias("__pfx"),
-        (F.length(F.col(text_col)).cast("int") / F.lit(band_width))
+        (F.length(F.col("text")).cast("int") / F.lit(32))
         .cast("int")
         .alias("__band"),
     )
@@ -1587,28 +1509,26 @@ def levenshtein_near_dup_pairs(
         d.withColumn(
             "__bs", F.count(F.lit(1)).over(Window.partitionBy("__blk", "__band"))
         )
-        .filter(F.col("__bs") <= max_block)
+        .filter(F.col("__bs") <= 64)
         .drop("__bs")
     )
     a = capped.select(
-        "__blk", "__band", F.col(id_col).alias("src_id"), F.col("__pfx").alias("__pa")
+        "__blk", "__band", F.col("doc_id").alias("src_id"), F.col("__pfx").alias("__pa")
     )
     b = capped.select(
-        "__blk", "__band", F.col(id_col).alias("dst_id"), F.col("__pfx").alias("__pb")
+        "__blk", "__band", F.col("doc_id").alias("dst_id"), F.col("__pfx").alias("__pb")
     )
     return (
         a.join(b, ["__blk", "__band"])
         .filter(F.col("dst_id") > F.col("src_id"))
         .select("src_id", "dst_id", F.levenshtein("__pa", "__pb").alias("lev"))
-        .filter(F.col("lev") <= max_dist)
+        .filter(F.col("lev") <= 8)
     )
 
 
 def exact_substring_regions(
     docs: DataFrame,
     *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     min_match_tokens: int = 50,
     within_doc: bool = False,
     max_gram_positions: int = 1000,
@@ -1663,8 +1583,8 @@ def exact_substring_regions(
     L = int(min_match_tokens)
     if L < 2:
         raise ValueError(f"min_match_tokens must be >= 2, got {min_match_tokens}")
-    toks = tokenize(text_col)
-    base = docs.select(F.col(id_col).alias("__id"), toks.alias("__t"))
+    toks = tokenize("text")
+    base = docs.select(F.col("doc_id").alias("__id"), toks.alias("__t"))
     n = F.size("__t")
     grams_arr = F.when(
         n >= L,
@@ -1717,8 +1637,6 @@ def exact_substring_regions(
 def exact_substring_remove(
     docs: DataFrame,
     *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     min_match_tokens: int = 50,
     max_gram_positions: int = 1000,
 ) -> DataFrame:
@@ -1753,8 +1671,6 @@ def exact_substring_remove(
     token-level shuffle, tokens never leave their partition."""
     regions = exact_substring_regions(
         docs,
-        id_col=id_col,
-        text_col=text_col,
         min_match_tokens=min_match_tokens,
         within_doc=False,
         max_gram_positions=max_gram_positions,
@@ -1782,9 +1698,7 @@ def exact_substring_remove(
             F.sum(F.col("__e") - F.col("__s")).alias("__covered"),
         )
     )
-    base = docs.select(
-        F.col(id_col).alias("__id"), tokenize(text_col).alias("__t")
-    )
+    base = docs.select(F.col("doc_id").alias("__id"), tokenize("text").alias("__t"))
     joined = base.join(isl, on="__id", how="left").select(
         "__id",
         "__t",
@@ -1813,7 +1727,7 @@ def exact_substring_remove(
         F.concat_ws(" ", kept).alias("__kept"),
     )
     return staged.select(
-        F.col("__id").alias(id_col),
+        F.col("__id").alias("doc_id"),
         "n_tokens",
         "n_removed",
         doc_rolling_hash(F.col("__kept")).alias("kept_hash"),

@@ -107,12 +107,11 @@ def pagerank(
     src: str = "src",
     dst: str = "dst",
     iterations: int = 3,
-    damping: float = 0.85,
     truncate_lineage_every: int | None = None,
 ) -> DataFrame:
     """Fixed-iteration PageRank over a DIRECTED edge list (symmetrize
     upstream for undirected graphs): r_{k+1}(v) = (1-d)/N + d·Σ_{u→v}
-    r_k(u)/outdeg(u).
+    r_k(u)/outdeg(u), damping d = 0.85.
 
     Per iteration: one equi-join (ranks ⋈ edges on src) + one
     aggregation (sum contributions by dst) — both shuffle on node id,
@@ -161,8 +160,8 @@ def pagerank(
             .select(
                 "node",
                 (
-                    F.lit(1.0 - damping) / F.col("__n")
-                    + F.lit(damping) * F.coalesce(F.col("__in"), F.lit(0.0))
+                    F.lit(1.0 - 0.85) / F.col("__n")
+                    + F.lit(0.85) * F.coalesce(F.col("__in"), F.lit(0.0))
                 ).alias("rank"),
             )
         )
@@ -177,7 +176,6 @@ def bfs_min_hops(
     *,
     src: str = "src",
     dst: str = "dst",
-    seed_col: str = "node",
     max_hops: int = 3,
 ) -> DataFrame:
     """Bounded-depth BFS over a DIRECTED edge list: minimum hop count
@@ -198,9 +196,7 @@ def bfs_min_hops(
     Returns (node, min_hops).
     """
     e = edges.select(F.col(src).alias("__u"), F.col(dst).alias("__v"))
-    reached = seeds.select(
-        F.col(seed_col).alias("node"), F.lit(0).alias("min_hops")
-    ).distinct()
+    reached = seeds.select("node", F.lit(0).alias("min_hops")).distinct()
     frontier = reached
     for hop in range(1, max_hops + 1):
         frontier = (

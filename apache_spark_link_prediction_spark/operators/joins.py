@@ -3,8 +3,8 @@ re-expressed with alias hygiene and scale hints.
 
 Scale posture: the node/info table is the small side of every join in
 the reference workload (27,770 rows vs 100 TB-class edge tables at the
-north star), so both endpoint-enrichment joins take an optional
-broadcast hint; the existence join uses composite null-safe keys, which
+north star), so both endpoint-enrichment joins broadcast it; the
+existence join uses composite null-safe keys, which
 remain hash-joinable (``EqualNullSafe`` is an equi-key for Catalyst).
 """
 
@@ -14,6 +14,9 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+# The reference's composite edge key (srcId, dstId), as (left, right) pairs.
+_EDGE_KEYS = (("srcId", "srcId"), ("dstId", "dstId"))
 
 
 def _null_safe_on(left: DataFrame, right: DataFrame, keys: Sequence[tuple[str, str]]) -> Column:
@@ -33,7 +36,6 @@ def enrich_edges_both_sides(
     src: str = "srcId",
     dst: str = "dstId",
     attrs: Sequence[str] | None = None,
-    broadcast_info: bool = True,
 ) -> DataFrame:
     """J1+J2 — the double self-join: one row per edge carrying both
     endpoints' attributes, suffixed ``_from`` / ``_to``.
@@ -54,7 +56,7 @@ def enrich_edges_both_sides(
             F.col(info_id).alias(f"__id{suffix}"),
             *[F.col(a).alias(f"{a}{suffix}") for a in attrs],
         )
-        return F.broadcast(proj) if broadcast_info else proj
+        return F.broadcast(proj)
 
     from_info = side("_from")
     to_info = side("_to")
@@ -70,8 +72,7 @@ def label_by_existence(
     pairs: DataFrame,
     truth: DataFrame,
     *,
-    keys: Sequence[tuple[str, str]] = (("srcId", "srcId"), ("dstId", "dstId")),
-    label_col: str = "label",
+    keys: Sequence[tuple[str, str]] = _EDGE_KEYS,
 ) -> DataFrame:
     """J3 — composite-key null-safe LEFT join + null-flag labeling:
     ``label = 1`` iff the pair exists in ``truth``.
@@ -98,23 +99,18 @@ def label_by_existence(
         cond = c if cond is None else (cond & c)
     out = (
         pairs.join(truth_proj, cond, "left")
-        .withColumn(label_col, F.coalesce(F.col("__t_exists"), F.lit(0)).cast("int"))
+        .withColumn("label", F.coalesce(F.col("__t_exists"), F.lit(0)).cast("int"))
         .drop("__t_exists", *[f"__t_{rk}" for rk in right_keys])
     )
     return out
 
 
-def cross_validate_count(
-    predicted: DataFrame,
-    truth: DataFrame,
-    *,
-    keys: Sequence[tuple[str, str]] = (("srcId", "srcId"), ("dstId", "dstId")),
-) -> tuple[int, int]:
-    """J4+A1 — inner join on composite null-safe keys; returns
+def cross_validate_count(predicted: DataFrame, truth: DataFrame) -> tuple[int, int]:
+    """J4+A1 — inner join on the null-safe (srcId, dstId) key; returns
     (predicted_count, correct_count). Reference: Predictor.scala:411-421.
     """
-    truth_proj = truth.select(*[rk for _, rk in keys]).dropDuplicates()
-    cond = _null_safe_on(predicted, truth_proj, keys)
+    truth_proj = truth.select("srcId", "dstId").dropDuplicates()
+    cond = _null_safe_on(predicted, truth_proj, _EDGE_KEYS)
     correct = predicted.join(truth_proj, cond, "inner").count()
     return predicted.count(), correct
 
@@ -240,7 +236,6 @@ def range_join(
     lo: str,
     hi: str,
     bucket_width: float,
-    how: str = "inner",
 ) -> DataFrame:
     """Range join (point-in-interval, intervals may overlap) via grid
     bucketing: each interval explodes into the grid buckets it covers,
@@ -267,7 +262,7 @@ def range_join(
         ),
     )
     return (
-        p.join(i, on="__bucket", how=how)
+        p.join(i, on="__bucket")
         .filter((F.col(value) >= F.col(lo)) & (F.col(value) < F.col(hi)))
         .drop("__bucket")
     )
@@ -339,18 +334,16 @@ def bloom_semi_join(
     *,
     probe_key: str,
     build_key: str,
-    num_bits: int = 1 << 17,
-    num_hashes: int = 3,
     exact: bool = True,
 ) -> DataFrame:
     """Bloom-filter-accelerated semi join: keep probe rows whose
     ``probe_key`` appears in ``build[build_key]``.
 
-    The build side folds into a fixed-size bitmap: each key sets
-    ``num_hashes`` bit positions (``pmod(xxhash64(key, seed), m)``),
-    exploded to (word, mask) pairs and ``bit_or``-aggregated into at
-    most ``m/64`` rows. That bitmap is collected to the driver — bounded
-    by ``num_bits`` (16 KiB at the default) REGARDLESS of build
+    The build side folds into a fixed-size bitmap of m = 2^17 bits:
+    each key sets k = 3 bit positions (``pmod(xxhash64(key, seed),
+    m)``), exploded to (word, mask) pairs and ``bit_or``-aggregated into
+    at most ``m/64`` rows. That bitmap is collected to the driver —
+    bounded at 16 KiB REGARDLESS of build
     cardinality, the same control-plane-sketch design as Spark's own
     runtime bloom-filter join pruning — and re-enters the plan as an
     array literal, so the probe-side membership test is pure codegen:
@@ -364,11 +357,10 @@ def bloom_semi_join(
 
     At 100 TB: probe side never shuffles unless it survives the bitmap
     test; build side shuffles only ``m/64`` aggregated rows. False
-    positive rate ≈ (1 - e^(-k·n/m))^k — size ``num_bits`` ≥ ~10 bits
-    per distinct build key to stay near 1%.
+    positive rate ≈ (1 - e^(-k·n/m))^k — near 1% up to ~13k distinct
+    build keys (~10 bits per key).
     """
-    m = num_bits
-    assert m % 64 == 0
+    m, num_hashes = 1 << 17, 3
     words = m // 64
 
     def word_and_mask(key: Column, seed: int) -> tuple[Column, Column]:

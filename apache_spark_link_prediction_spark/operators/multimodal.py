@@ -26,7 +26,7 @@ import struct
 from collections.abc import Callable, Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -336,13 +336,13 @@ PNG_FEATURE_SCHEMA = T.StructType(
 )
 
 
-def png_from_documents(docs: DataFrame, *, width: int = 16, height: int = 4) -> DataFrame:
-    """Testbed adapter: a REAL RGB PNG per document, pixels closed-form
+def png_from_documents(docs: DataFrame) -> DataFrame:
+    """Testbed adapter: a REAL 16×4 RGB PNG per document, pixels closed-form
     from doc_id (pixel i = (doc_id·31 + i·7) mod 256) so downstream
     decode results are reproducible by any engine from the id alone.
     encode_png needs zlib, so this is an Arrow ``mapInPandas`` step —
     payload built worker-side, never driver-side."""
-    n = width * height * 3
+    n = 16 * 4 * 3
 
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -353,9 +353,7 @@ def png_from_documents(docs: DataFrame, *, width: int = 16, height: int = 4) -> 
                     "mime": "image/png",
                     "payload": [
                         encode_png(
-                            width,
-                            height,
-                            bytes((int(d) * 31 + i * 7) % 256 for i in range(n)),
+                            16, 4, bytes((int(d) * 31 + i * 7) % 256 for i in range(n))
                         )
                         for d in pdf["doc_id"]
                     ],
@@ -614,7 +612,7 @@ def audio_impulse_from_documents(docs: DataFrame) -> DataFrame:
     rFFT → centroid path (audio_spectral_centroid) end to end: FFT
     round-off perturbs the zero bins by ~1e-13 of the peak, orders of
     magnitude inside the 4-dp rounding. P | 256 keeps every
-    frame_samples=256 window (and the P-multiple tail) phase-aligned."""
+    256-sample centroid window (and the P-multiple tail) phase-aligned."""
     import io
     import wave as wave_mod
 
@@ -656,8 +654,8 @@ def audio_impulse_from_documents(docs: DataFrame) -> DataFrame:
     return docs.select("doc_id", "n_chars").mapInPandas(op, schema=schema)
 
 
-def audio_energy_windows(media: DataFrame, *, window_samples: int = 50) -> DataFrame:
-    """Windowed RMS energy over PCM WAV payloads — the first feature
+def audio_energy_windows(media: DataFrame) -> DataFrame:
+    """50-sample windowed RMS energy over PCM WAV payloads — the first feature
     any audio curation pipeline computes (silence/clipping detection,
     energy-based segmentation). REAL decode via the stdlib ``wave``
     reader, vectorized RMS via numpy inside an exploding mapInPandas
@@ -689,8 +687,8 @@ def audio_energy_windows(media: DataFrame, *, window_samples: int = 50) -> DataF
                     samples = np.frombuffer(
                         w.readframes(w.getnframes()), dtype="<i2"
                     ).astype(np.float64)
-                for win in range(0, (len(samples) + window_samples - 1) // window_samples):
-                    chunk = samples[win * window_samples : (win + 1) * window_samples]
+                for win in range(0, (len(samples) + 49) // 50):
+                    chunk = samples[win * 50 : (win + 1) * 50]
                     ids.append(media_id)
                     wins.append(win)
                     ns.append(len(chunk))
@@ -825,41 +823,47 @@ def image_phash(media: DataFrame) -> DataFrame:
     return media.mapInPandas(op, schema=PHASH_SCHEMA)
 
 
-def phash_near_dup_pairs(
-    media: DataFrame,
-    *,
-    blocks: int = 8,
-    max_hamming: int = 7,
-    max_bucket_size: int = 1000,
-) -> DataFrame:
-    """Image near-duplicate pairs: perceptual hash → banded Hamming
-    join (operators.dedup.signature_band_pairs — the same pigeonhole
-    machinery as SimHash text dedup, reused on image signatures).
-    Emits (src_id, dst_id, hamming), src_id < dst_id."""
+# pHash pigeonhole shape: 8 blocks of 8 bits, so two 64-bit hashes
+# within Hamming distance 7 share at least one block key.
+_PHASH_BLOCKS = 8
+_PHASH_MAX_HAMMING = 7
+
+
+def _phash_block_keys(phash: Column) -> Column:
+    """``(__block, __key)`` posexplode of a 64-bit hash's 8-bit blocks."""
+    return F.posexplode(
+        F.array(
+            *[
+                F.shiftright(phash, b * 8).bitwiseAND(F.lit(0xFF).cast("long"))
+                for b in range(_PHASH_BLOCKS)
+            ]
+        )
+    ).alias("__block", "__key")
+
+
+def phash_near_dup_pairs(media: DataFrame) -> DataFrame:
+    """Image near-duplicate pairs (Hamming ≤ 7): perceptual hash →
+    banded Hamming join (operators.dedup.signature_band_pairs — the
+    same pigeonhole machinery as SimHash text dedup, reused on image
+    signatures). Emits (src_id, dst_id, hamming), src_id < dst_id."""
     from .dedup import signature_band_pairs
 
     sigs = image_phash(media).filter(F.col("phash").isNotNull()).select(
         F.col("media_id").alias("__id"), F.col("phash").alias("__sh")
     )
     return signature_band_pairs(
-        sigs,
-        bits=64,
-        blocks=blocks,
-        max_hamming=max_hamming,
-        max_bucket_size=max_bucket_size,
+        sigs, bits=64, blocks=_PHASH_BLOCKS, max_hamming=_PHASH_MAX_HAMMING
     )
 
 
-def png_near_dup_testbed(
-    docs: DataFrame, *, classes: int = 100, width: int = 32, height: int = 32
-) -> DataFrame:
+def png_near_dup_testbed(docs: DataFrame, *, classes: int = 100) -> DataFrame:
     """Testbed adapter with ENGINEERED near-duplicates: every doc in the
-    same ``doc_id % classes`` class renders the same closed-form
+    same ``doc_id % classes`` class renders the same closed-form 32×32
     grayscale PNG except for a one-byte perturbation at a doc-specific
     position — visually near-identical images whose perceptual hashes
     collide or differ by a few bits, never exact payload duplicates
     (sha256 dedup would miss ALL of them; that is the point of pHash)."""
-    n = width * height
+    n = 32 * 32
 
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -875,7 +879,7 @@ def png_near_dup_testbed(
                     ((2 * cls + 3) * i + (i * i) // 7) % 256 for i in range(n)
                 )
                 base[d % n] ^= 3  # per-doc one-byte wiggle
-                payloads.append(encode_png(width, height, bytes(base), color_type=0))
+                payloads.append(encode_png(32, 32, bytes(base), color_type=0))
             yield pd.DataFrame(
                 {
                     "media_id": pdf["doc_id"],
@@ -888,12 +892,10 @@ def png_near_dup_testbed(
     return docs.select("doc_id").mapInPandas(op, schema=MEDIA_SCHEMA)
 
 
-def png_class_testbed(
-    docs: DataFrame, *, classes: int = 100, width: int = 32, height: int = 32
-) -> DataFrame:
+def png_class_testbed(docs: DataFrame) -> DataFrame:
     """Hash-gate twin of :func:`png_near_dup_testbed`: the SAME
     closed-form class-frequency PNG family but WITHOUT the per-doc
-    one-byte wiggle, so every doc in class ``doc_id % classes`` renders
+    one-byte wiggle, so every doc in class ``doc_id % 100`` renders
     a byte-identical payload and the perceptual hash is a pure function
     of the class. That makes the full binary pipeline (stdlib PNG
     encode → decode → 32×32 DCT → 64-bit pHash) oracle-checkable
@@ -902,12 +904,12 @@ def png_class_testbed(
     testbed stays the near-dup demo (sha256 misses its pairs); this one
     pins the hash computation itself.
 
-    The payload is a pure function of ``doc_id % classes``, so each
-    task memoizes the ≤``classes`` encoded PNGs in the mapInPandas
-    closure (ADVICE r11: the unmemoized form paid n_docs PNG encodes
-    where ``classes`` suffice — at 100 TB that is the difference
-    between O(docs) and O(classes) encode work per task)."""
-    n = width * height
+    The payload is a pure function of ``doc_id % 100``, so each
+    task memoizes the ≤100 encoded PNGs in the mapInPandas closure
+    (ADVICE r11: the unmemoized form paid n_docs PNG encodes where 100
+    suffice — at 100 TB that is the difference between O(docs) and
+    O(classes) encode work per task)."""
+    n = 32 * 32
 
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         by_cls: dict[int, bytes] = {}
@@ -918,11 +920,11 @@ def png_class_testbed(
                 base = bytes(
                     ((2 * cls + 3) * i + (i * i) // 7) % 256 for i in range(n)
                 )
-                png = by_cls[cls] = encode_png(width, height, base, color_type=0)
+                png = by_cls[cls] = encode_png(32, 32, base, color_type=0)
             return png
 
         for pdf in batches:
-            payloads = [payload_for(int(d) % classes) for d in pdf["doc_id"]]
+            payloads = [payload_for(int(d) % 100) for d in pdf["doc_id"]]
             yield pd.DataFrame(
                 {
                     "media_id": pdf["doc_id"],
@@ -945,10 +947,8 @@ AUDIO_CENTROID_SCHEMA = T.StructType(
 )
 
 
-def audio_spectral_centroid(
-    media: DataFrame, *, frame_samples: int = 256
-) -> DataFrame:
-    """Windowed spectral centroid over 16-bit mono PCM WAV payloads —
+def audio_spectral_centroid(media: DataFrame) -> DataFrame:
+    """256-sample windowed spectral centroid over 16-bit mono PCM WAV payloads —
     the brightness feature audio curation filters on (speech vs music
     vs noise), and the repo's real frequency-domain tier next to the
     time-domain RMS (audio_energy_windows): per frame, rFFT magnitude
@@ -977,9 +977,8 @@ def audio_spectral_centroid(
                     samples = np.frombuffer(
                         w.readframes(w.getnframes()), dtype="<i2"
                     ).astype(np.float64)
-                n_frames = (len(samples) + frame_samples - 1) // frame_samples
-                for win in range(n_frames):
-                    chunk = samples[win * frame_samples : (win + 1) * frame_samples]
+                for win in range((len(samples) + 255) // 256):
+                    chunk = samples[win * 256 : (win + 1) * 256]
                     ids.append(int(media_id))
                     wins.append(win)
                     ns.append(len(chunk))
@@ -1050,40 +1049,22 @@ def image_phash_by_path(files: DataFrame) -> DataFrame:
     return files.select("path", "content").mapInPandas(op, schema=PHASH_BY_PATH_SCHEMA)
 
 
-def phash_block_index(sigs: DataFrame, *, blocks: int = 8) -> DataFrame:
+def phash_block_index(sigs: DataFrame) -> DataFrame:
     """Blocked pigeonhole index over a (media_id, phash) signature
     table: one row per (block, key) per signature — the static side of
-    a stream-static near-dup join. |index| = blocks × |sigs|; at 100 TB
+    a stream-static near-dup join. |index| = 8 × |sigs|; at 100 TB
     of media this is still 8 longs per asset, a dimension table."""
-    block_bits = 64 // blocks
-    mask = (1 << block_bits) - 1
     return sigs.filter(F.col("phash").isNotNull()).select(
-        "media_id",
-        F.col("phash").alias("__idx_ph"),
-        F.posexplode(
-            F.array(
-                *[
-                    F.shiftright(F.col("phash"), b * block_bits)
-                    .bitwiseAND(F.lit(mask).cast("long"))
-                    for b in range(blocks)
-                ]
-            )
-        ).alias("__block", "__key"),
+        "media_id", F.col("phash").alias("__idx_ph"), _phash_block_keys(F.col("phash"))
     )
 
 
-def streaming_phash_match(
-    files: DataFrame,
-    index: DataFrame,
-    *,
-    blocks: int = 8,
-    max_hamming: int = 7,
-) -> DataFrame:
+def streaming_phash_match(files: DataFrame, index: DataFrame) -> DataFrame:
     """Continuous media near-dup flagging: a binaryFile STREAM of
     ``(path, content)`` images is decoded + pHashed map-side, exploded
     into pigeonhole blocks, and stream-static equi-joined (left outer)
     against :func:`phash_block_index` — by pigeonhole, any asset within
-    Hamming ``max_hamming < blocks`` of an indexed one shares at least
+    Hamming 7 < 8 blocks of an indexed one shares at least
     one block key, so recall vs the index is exact. Emits one row per
     (file, matching block) — ``(path, phash, media_id, hamming)`` with
     nulls for no-match blocks; the per-file best-match fold is a tiny
@@ -1092,27 +1073,13 @@ def streaming_phash_match(
     join AQE can broadcast — no streaming state at all, which is what
     makes this the always-on ingest tier (the stateful suppressor
     handles within-stream dups)."""
-    block_bits = 64 // blocks
-    mask = (1 << block_bits) - 1
     sigs = image_phash_by_path(files).filter(F.col("phash").isNotNull())
-    banded = sigs.select(
-        "path",
-        "phash",
-        F.posexplode(
-            F.array(
-                *[
-                    F.shiftright(F.col("phash"), b * block_bits)
-                    .bitwiseAND(F.lit(mask).cast("long"))
-                    for b in range(blocks)
-                ]
-            )
-        ).alias("__block", "__key"),
-    )
+    banded = sigs.select("path", "phash", _phash_block_keys(F.col("phash")))
     joined = banded.join(index, on=["__block", "__key"], how="left")
     hamming = F.bit_count(F.col("phash").bitwiseXOR(F.col("__idx_ph")))
     return joined.select(
         "path",
         "phash",
-        F.when(hamming <= max_hamming, F.col("media_id")).alias("media_id"),
-        F.when(hamming <= max_hamming, hamming.cast("integer")).alias("hamming"),
+        F.when(hamming <= _PHASH_MAX_HAMMING, F.col("media_id")).alias("media_id"),
+        F.when(hamming <= _PHASH_MAX_HAMMING, hamming.cast("integer")).alias("hamming"),
     )

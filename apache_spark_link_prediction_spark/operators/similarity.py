@@ -27,6 +27,21 @@ from pyspark.sql import functions as F
 from ..functions.vectors import cosine_similarity
 from .dedup import _drop_hot_buckets, connected_components, exact_groups, expand_groups
 
+# Decimal places cosines are rounded to before ranking (top-k family) or
+# thresholding (near-dup family), so last-bit float noise cannot flip a
+# rank or a threshold decision across engines.
+_TOPK_DIGITS = 4
+_DUP_DIGITS = 6
+# Seed of every quantizer fit (sample order and Lloyd init).
+_SEED = 12345
+# IVF-PQ code shape: _PQ_M subspaces of _PQ_KS centroids each.
+_PQ_M = 8
+_PQ_KS = 16
+# Sign-LSH shape of the stream-static embedding index and its stream
+# side, which must agree.
+_STREAM_TABLES = 8
+_STREAM_PLANES = 4
+
 
 def _rank_window(query_id: str = "query_id"):
     # Deterministic tie-break: score desc, neighbor id asc.
@@ -40,9 +55,6 @@ def brute_force_top_k(
     queries: DataFrame,
     *,
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_to: int = 4,
 ) -> DataFrame:
     """Exact cosine top-k: broadcast the query set, score every
     (query, corpus) pair JVM-side, keep k best per query.
@@ -52,12 +64,12 @@ def brute_force_top_k(
     engines (floating-point last-bit noise can't flip ranks).
     """
     q = F.broadcast(
-        queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qv"))
+        queries.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("__qv"))
     )
-    c = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__cv"))
+    c = corpus.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("__cv"))
     scored = (
         c.join(q, F.col("query_id") != F.col("neighbor_id"), "inner")
-        .withColumn("cosine", F.round(cosine_similarity("__qv", "__cv"), round_to))
+        .withColumn("cosine", F.round(cosine_similarity("__qv", "__cv"), _TOPK_DIGITS))
         .select("query_id", "neighbor_id", "cosine")
     )
     return (
@@ -107,11 +119,8 @@ def lsh_bucketed_top_k(
     queries: DataFrame,
     *,
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     tables: int = 4,
     planes: int = 8,
-    round_to: int = 4,
 ) -> DataFrame:
     """Approximate top-k: score only (query, corpus) pairs that collide
     in ≥1 of ``tables`` sign-LSH tables. Same output contract as
@@ -121,9 +130,9 @@ def lsh_bucketed_top_k(
     # join, or the pair dropDuplicates — they rejoin once per side at
     # scoring (same pattern as dedup.minhash_near_dup_pairs).
     def with_buckets(df: DataFrame, idname: str) -> DataFrame:
-        v = F.col(vec_col)
+        v = F.col("embedding")
         return df.select(
-            F.col(id_col).alias(idname),
+            F.col("vec_id").alias(idname),
             F.posexplode(_bucket_keys(v, tables=tables, planes=planes)).alias(
                 "__table", "__key"
             ),
@@ -140,7 +149,9 @@ def lsh_bucketed_top_k(
     scored = (
         candidates.join(
             F.broadcast(
-                queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qv"))
+                queries.select(
+                    F.col("vec_id").alias("query_id"), F.col("embedding").alias("__qv")
+                )
             ),
             on="query_id",
         )
@@ -149,11 +160,11 @@ def lsh_bucketed_top_k(
             # unsorted row_number window partitioned by query_id — the
             # sort-merge sort of candidates+vector payload buys nothing
             corpus.select(
-                F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__cv")
+                F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("__cv")
             ).hint("shuffle_hash"),
             on="neighbor_id",
         )
-        .withColumn("cosine", F.round(cosine_similarity("__qv", "__cv"), round_to))
+        .withColumn("cosine", F.round(cosine_similarity("__qv", "__cv"), _TOPK_DIGITS))
         .select("query_id", "neighbor_id", "cosine")
     )
     return (
@@ -330,12 +341,8 @@ def ivf_top_k(
     queries: DataFrame,
     *,
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     num_cells: int | None = None,
     nprobe: int | None = None,
-    seed: int = 12345,
-    round_to: int = 4,
 ) -> DataFrame:
     """IVF (inverted-file) ANN: k-means coarse quantizer → corpus
     bucketed by nearest-centroid cell → queries probe their ``nprobe``
@@ -369,13 +376,13 @@ def ivf_top_k(
     if nprobe is None:
         nprobe = max(2, min(64, num_cells // 8))
 
-    centers = _lloyd(_fit_sample(corpus, id_col, vec_col, seed), num_cells, seed)
+    centers = _lloyd(_fit_sample(corpus, "vec_id", "embedding", _SEED), num_cells, _SEED)
     bucketed = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("__cv"),
-        _cell_of(F.col(vec_col), centers).alias("__cell"),
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("__cv"),
+        _cell_of(F.col("embedding"), centers).alias("__cell"),
     )
-    q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qv"))
+    q = queries.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("__qv"))
     probes = _probe_cells(
         q, "query_id", "__qv", _centroid_table(corpus.sparkSession, centers), nprobe
     ).select("query_id", "__qv", "__cell")
@@ -383,7 +390,7 @@ def ivf_top_k(
     scored = (
         bucketed.join(probes, on="__cell")
         .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("cosine", F.round(cosine_similarity("__qv", "__cv"), round_to))
+        .withColumn("cosine", F.round(cosine_similarity("__qv", "__cv"), _TOPK_DIGITS))
         .select("query_id", "neighbor_id", "cosine")
     )
     return (
@@ -411,14 +418,13 @@ def _residuals(sample: np.ndarray, centers: np.ndarray) -> np.ndarray:
 
 def _pq_subdim(dim: int, m: int) -> int:
     """Shared PQ-subspace precondition (ValueError, not assert: the
-    contract must survive ``python -O`` and name the tunable at the
-    ivf_pq_top_k call site instead of an opaque numpy reshape error —
+    contract must survive ``python -O`` and say what the embedding
+    dimension violates instead of an opaque numpy reshape error —
     ADVICE r10, low; hoisted so the rotation and codebook fits can't
     drift apart — code review r11)."""
     if dim % m != 0:
         raise ValueError(
-            f"vector dim {dim} must be divisible by m={m} PQ subspaces; "
-            "pass an m that divides the embedding dimension"
+            f"vector dim {dim} must be divisible by m={m} PQ subspaces"
         )
     return dim // m
 
@@ -536,15 +542,9 @@ def ivf_pq_top_k(
     queries: DataFrame,
     *,
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     num_cells: int | None = None,
     nprobe: int | None = None,
-    m: int = 8,
-    ks: int = 16,
     rerank: int | None = None,
-    seed: int = 12345,
-    round_to: int = 4,
     normalize: bool = False,
     opq_rotate: bool | str = False,
 ) -> DataFrame:
@@ -554,7 +554,7 @@ def ivf_pq_top_k(
 
     This is the step that makes 100 TB ANN memory-feasible (VERDICT
     r08 item 6): after the one encode pass, each corpus vector's
-    search-time state is ``(id, cell, m small codes)`` — for dim-64
+    search-time state is ``(id, cell, _PQ_M small codes)`` — for dim-64
     float vectors at m=8/ks=16 that is ~8 bytes of codes vs 256 bytes
     of floats (~3%), so the scored side of the probe join carries
     codes only, never vectors. Raw vectors are touched exactly twice:
@@ -631,23 +631,22 @@ def ivf_pq_top_k(
     if rerank is None:
         rerank = max(10 * k, 50)
 
+    m = _PQ_M
     as_space = (
-        _l2_normalize(F.col(vec_col))
+        _l2_normalize(F.col("embedding"))
         if normalize
-        else F.transform(F.col(vec_col), lambda x: x.cast("double"))
+        else F.transform(F.col("embedding"), lambda x: x.cast("double"))
     )
     c_norm = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
+        F.col("vec_id").alias("neighbor_id"),
         as_space.alias("__nv"),
     )
     # One bounded sample fits the coarse cells, the OPQ rotation and
     # the PQ codebooks.
-    sample = _fit_sample(c_norm, "neighbor_id", "__nv", seed)
+    sample = _fit_sample(c_norm, "neighbor_id", "__nv", _SEED)
     if len(sample) == 0:  # empty corpus: nothing to quantize or return
-        return brute_force_top_k(
-            corpus, queries, k=k, id_col=id_col, vec_col=vec_col, round_to=round_to
-        )
-    centers = _lloyd(sample, num_cells, seed)
+        return brute_force_top_k(corpus, queries, k=k)
+    centers = _lloyd(sample, num_cells, _SEED)
     dim = sample.shape[1]
     # OPQ-P rotation (see _fit_opq_rotation): fit in rotated residual
     # space; the same R is applied to residuals at encode and probe
@@ -661,7 +660,7 @@ def ivf_pq_top_k(
         _fit_opq_rotation(sample, centers, m=m) if opq_rotate else None
     )
     codebooks = _fit_pq_codebooks(
-        sample, centers, m=m, ks=ks, seed=seed, rotation=rot
+        sample, centers, m=m, ks=_PQ_KS, seed=_SEED, rotation=rot
     )
     sub = dim // m
     centroid_tbl = _centroid_table(corpus.sparkSession, centers)
@@ -740,9 +739,7 @@ def ivf_pq_top_k(
     )
 
     # ---- query probes: nprobe nearest cells (same space as encode) ----
-    q_norm = queries.select(
-        F.col(id_col).alias("query_id"), as_space.alias("__qn")
-    )
+    q_norm = queries.select(F.col("vec_id").alias("query_id"), as_space.alias("__qn"))
     probes = (
         _probe_cells(q_norm, "query_id", "__qn", centroid_tbl, nprobe)
         .withColumn("__qres", residual("__qn"))
@@ -788,18 +785,18 @@ def ivf_pq_top_k(
         candidates.join(
             F.broadcast(
                 queries.select(
-                    F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qv")
+                    F.col("vec_id").alias("query_id"), F.col("embedding").alias("__qv")
                 )
             ),
             on="query_id",
         )
         .join(
             corpus.select(
-                F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__cv")
+                F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("__cv")
             ),
             on="neighbor_id",
         )
-        .withColumn("cosine", F.round(cosine_similarity("__qv", "__cv"), round_to))
+        .withColumn("cosine", F.round(cosine_similarity("__qv", "__cv"), _TOPK_DIGITS))
         .select("query_id", "neighbor_id", "cosine")
     )
     return (
@@ -811,12 +808,9 @@ def ivf_pq_top_k(
 def embedding_near_dup_pairs(
     corpus: DataFrame,
     *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     threshold: float = 0.95,
     tables: int = 4,
     planes: int = 8,
-    round_to: int = 6,
     max_bucket_size: int = 1000,
     collapse_exact: bool = True,
 ) -> DataFrame:
@@ -835,24 +829,24 @@ def embedding_near_dup_pairs(
     :func:`expand_groups`), intra-group pairs scored by the pipeline's
     own cosine(v, v) — NOT a literal 1.0, so an all-zero vector keeps
     its defined cosine and threshold behavior."""
-    v = F.col(vec_col)
+    v = F.col("embedding")
     memb = None
     if collapse_exact:
         g, memb = exact_groups(
-            corpus.select(F.col(id_col).alias("__id"), v.alias("__gvec")), ["__gvec"]
+            corpus.select(F.col("vec_id").alias("__id"), v.alias("__gvec")), ["__gvec"]
         )
         corpus = g.select(
-            F.col("__rep").alias(id_col), F.col("__gvec").alias(vec_col)
+            F.col("__rep").alias("vec_id"), F.col("__gvec").alias("embedding")
         )
         intra = g.select(
             "__rep",
-            F.round(cosine_similarity("__gvec", "__gvec"), round_to).alias("cosine"),
+            F.round(cosine_similarity("__gvec", "__gvec"), _DUP_DIGITS).alias("cosine"),
         ).filter(F.col("cosine") >= threshold)
     # Ids-only through the band explode + bucket self-join + pair
     # dropDuplicates; vectors rejoin once per side at verification
     # (same pattern as dedup.minhash_near_dup_pairs).
     banded = corpus.select(
-        F.col(id_col).alias("__id"),
+        F.col("vec_id").alias("__id"),
         F.posexplode(_bucket_keys(v, tables=tables, planes=planes)).alias(
             "__table", "__key"
         ),
@@ -860,7 +854,7 @@ def embedding_near_dup_pairs(
     banded = _drop_hot_buckets(banded, ["__table", "__key"], max_bucket_size)
     a = banded.select("__table", "__key", F.col("__id").alias("src_id"))
     b = banded.select("__table", "__key", F.col("__id").alias("dst_id"))
-    vecs = corpus.select(F.col(id_col).alias("__vid"), v.alias("__vec"))
+    vecs = corpus.select(F.col("vec_id").alias("__vid"), v.alias("__vec"))
     pairs = (
         a.join(b, on=["__table", "__key"], how="inner")
         .filter(F.col("src_id") < F.col("dst_id"))
@@ -868,7 +862,7 @@ def embedding_near_dup_pairs(
         .dropDuplicates(["src_id", "dst_id"])
         .join(vecs.select(F.col("__vid").alias("src_id"), F.col("__vec").alias("__va")), on="src_id")
         .join(vecs.select(F.col("__vid").alias("dst_id"), F.col("__vec").alias("__vb")), on="dst_id")
-        .withColumn("cosine", F.round(cosine_similarity("__va", "__vb"), round_to))
+        .withColumn("cosine", F.round(cosine_similarity("__va", "__vb"), _DUP_DIGITS))
         .filter(F.col("cosine") >= threshold)
         .select("src_id", "dst_id", "cosine")
     )
@@ -880,13 +874,9 @@ def embedding_near_dup_pairs(
 def semdedup(
     corpus: DataFrame,
     *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     eps: float = 0.05,
     num_clusters: int | None = None,
-    seed: int = 12345,
     max_cluster_block: int = 1000,
-    round_to: int = 6,
 ) -> DataFrame:
     """SemDeDup semantic deduplication (Abbas et al. 2023,
     arXiv:2303.09540): k-means the embedding space into
@@ -928,11 +918,11 @@ def semdedup(
     (functions.vectors.cosine_similarity), so they are never semantic
     duplicates of anything — identical zero vectors are all kept.
     """
-    vec = F.col(vec_col).cast("array<double>")
-    base = corpus.select(F.col(id_col).alias("__id"), vec.alias("__vec"))
+    vec = F.col("embedding").cast("array<double>")
+    base = corpus.select(F.col("vec_id").alias("__id"), vec.alias("__vec"))
     if num_clusters is None:
         num_clusters = _sqrt_cells(corpus)
-    centers = _lloyd(_fit_sample(base, "__id", "__vec", seed), num_clusters, seed)
+    centers = _lloyd(_fit_sample(base, "__id", "__vec", _SEED), num_clusters, _SEED)
     assigned = base.withColumn("__cell", _cell_of(F.col("__vec"), centers))
 
     # Exact-collapse: bitwise-identical vectors → one representative
@@ -949,7 +939,7 @@ def semdedup(
         ).otherwise(F.col("__vec")).alias("__nvec"),
         (F.size("__ids") > 1).alias("__multi"),
         (
-            F.round(cosine_similarity("__vec", "__vec"), round_to) >= 1.0 - eps
+            F.round(cosine_similarity("__vec", "__vec"), _DUP_DIGITS) >= 1.0 - eps
         ).alias("__self_dup"),
         F.col("__vec"),
     )
@@ -972,7 +962,7 @@ def semdedup(
     pairs = (
         a.join(b, on="__cell")
         .filter(F.col("src_id") < F.col("dst_id"))
-        .withColumn("__sim", F.round(dot, round_to))
+        .withColumn("__sim", F.round(dot, _DUP_DIGITS))
         .filter(F.col("__sim") >= 1.0 - eps)
         .select("src_id", "dst_id")
     )
@@ -995,7 +985,7 @@ def semdedup(
             F.coalesce("component", "__rep").alias("__comp"),
             F.when(
                 F.col("component").isNotNull(),
-                F.round(cosine_similarity("__vec", "__centroid"), round_to),
+                F.round(cosine_similarity("__vec", "__centroid"), _DUP_DIGITS),
             ).alias("__csim"),
         )
     )
@@ -1013,7 +1003,7 @@ def semdedup(
     return (
         memb.join(rep_keep, on="__rep")
         .select(
-            F.col("__id").alias(id_col),
+            F.col("__id").alias("vec_id"),
             F.col("__cell").cast("int").alias("cluster_id"),
             F.when(~F.col("__self_dup") & F.col("__multi"), F.lit(True))
             .otherwise(F.col("__rkeep") & (F.col("__id") == F.col("__rep")))
@@ -1022,17 +1012,7 @@ def semdedup(
     )
 
 
-def semdedup_index(
-    corpus: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    eps: float = 0.05,
-    num_clusters: int | None = None,
-    seed: int = 12345,
-    max_cluster_block: int = 1000,
-    round_to: int = 6,
-) -> DataFrame:
+def semdedup_index(corpus: DataFrame, *, eps: float = 0.05) -> DataFrame:
     """Persisted index for :func:`semdedup_incremental`: the full
     :func:`semdedup` decision frame JOINED BACK with each vector —
     ``(id, cluster_id, keep, vector)``, one row per corpus document.
@@ -1041,21 +1021,9 @@ def semdedup_index(
     NOT persisted — cell centroids are recomputed from the index as
     exact cell means (cells × dim tiny aggregate), which keeps the
     index pure data with no model-serialization coupling."""
-    decisions = semdedup(
-        corpus,
-        id_col=id_col,
-        vec_col=vec_col,
-        eps=eps,
-        num_clusters=num_clusters,
-        seed=seed,
-        max_cluster_block=max_cluster_block,
-        round_to=round_to,
-    )
-    return decisions.join(
-        corpus.select(
-            F.col(id_col), F.col(vec_col).cast("array<double>").alias(vec_col)
-        ),
-        on=id_col,
+    return semdedup(corpus, eps=eps).join(
+        corpus.select("vec_id", F.col("embedding").cast("array<double>").alias("embedding")),
+        on="vec_id",
     )
 
 
@@ -1082,11 +1050,8 @@ def semdedup_incremental(
     index: DataFrame,
     new_batch: DataFrame,
     *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     eps: float = 0.05,
     max_cluster_block: int = 1000,
-    round_to: int = 6,
 ) -> DataFrame:
     """Incremental SemDeDup ingest with FROZEN history — the semantic
     tier's member of the round-8 ``*_incremental`` family (minhash /
@@ -1118,10 +1083,10 @@ def semdedup_incremental(
     the next ingest. Pinned against an independent pure-python
     implementation of this spec in tests/test_operators.py::
     test_semdedup_incremental_matches_python_reference."""
-    vec = F.col(vec_col).cast("array<double>")
-    base = new_batch.select(F.col(id_col).alias("__id"), vec.alias("__vec"))
+    vec = F.col("embedding").cast("array<double>")
+    base = new_batch.select(F.col("vec_id").alias("__id"), vec.alias("__vec"))
     centroids = F.broadcast(
-        _cell_means(index, vec_col=vec_col).withColumnRenamed("cluster_id", "__cell")
+        _cell_means(index, vec_col="embedding").withColumnRenamed("cluster_id", "__cell")
     )
     # Nearest-cell assignment: the multi-probe block at nprobe=1.
     assigned = _probe_cells(base, "__id", "__vec", centroids, 1).select(
@@ -1139,14 +1104,14 @@ def semdedup_incremental(
         nvec.alias("__nvec"),
         (F.size("__ids") > 1).alias("__multi"),
         (
-            F.round(cosine_similarity("__vec", "__vec"), round_to) >= 1.0 - eps
+            F.round(cosine_similarity("__vec", "__vec"), _DUP_DIGITS) >= 1.0 - eps
         ).alias("__self_dup"),
         F.col("__vec"),
     )
     old_kept = index.filter(F.col("keep")).select(
         F.col("cluster_id").alias("__cell"),
-        F.col(id_col).alias("__rep"),
-        F.col(vec_col).alias("__vec"),
+        F.col("vec_id").alias("__rep"),
+        F.col("embedding").alias("__vec"),
     )
     onorm = F.sqrt(F.aggregate("__vec", F.lit(0.0), lambda a, x: a + x * x))
     old_reps = old_kept.select(
@@ -1182,7 +1147,7 @@ def semdedup_incremental(
     pairs = (
         a.join(b, on="__cell")
         .filter(F.col("src_id") != F.col("dst_id"))
-        .withColumn("__sim", F.round(dot, round_to))
+        .withColumn("__sim", F.round(dot, _DUP_DIGITS))
         .filter(F.col("__sim") >= 1.0 - eps)
         .select(
             F.least("src_id", "dst_id").alias("src_id"),
@@ -1206,7 +1171,7 @@ def semdedup_incremental(
             F.col("n.__vec") == F.col("o.__vec"),
         )
         .filter(
-            F.round(cosine_similarity("n.__vec", "n.__vec"), round_to) >= 1.0 - eps
+            F.round(cosine_similarity("n.__vec", "n.__vec"), _DUP_DIGITS) >= 1.0 - eps
         )
         .select(
             F.col("n.__rep").alias("src_id"), F.col("o.__rep").alias("dst_id")
@@ -1241,7 +1206,7 @@ def semdedup_incremental(
             F.coalesce("__has_old", F.lit(False)).alias("__has_old"),
             F.when(
                 F.col("component").isNotNull(),
-                F.round(cosine_similarity("__vec", "__centroid"), round_to),
+                F.round(cosine_similarity("__vec", "__centroid"), _DUP_DIGITS),
             ).alias("__csim"),
         )
     )
@@ -1255,7 +1220,7 @@ def semdedup_incremental(
     return (
         memb.join(rep_keep, on="__rep")
         .select(
-            F.col("__id").alias(id_col),
+            F.col("__id").alias("vec_id"),
             F.col("__cell").cast("int").alias("cluster_id"),
             F.when(~F.col("__self_dup") & F.col("__multi"), F.lit(True))
             .otherwise(F.col("__rkeep") & (F.col("__id") == F.col("__rep")))
@@ -1265,12 +1230,7 @@ def semdedup_incremental(
 
 
 def embedding_index(
-    corpus: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    tables: int = 4,
-    planes: int = 8,
+    corpus: DataFrame, *, tables: int = 4, planes: int = 8
 ) -> DataFrame:
     """Persistable embedding near-dup index: one row per vector —
     ``(vec_id, embedding, bucket_keys: array<long> of size tables,
@@ -1284,10 +1244,10 @@ def embedding_index(
     collapse tier groups on — ids+2 longs through the per-ingest
     shuffle instead of every indexed vector (same design and ≈2⁻¹²⁸
     collision class as ``minhash_index.set_key``)."""
-    v = F.col(vec_col)
+    v = F.col("embedding")
     return corpus.select(
-        F.col(id_col).alias("vec_id"),
-        v.alias("embedding"),
+        "vec_id",
+        "embedding",
         _bucket_keys(v, tables=tables, planes=planes).alias("bucket_keys"),
         F.array(F.xxhash64(F.lit(0), v), F.xxhash64(F.lit(1), v)).alias("vec_key"),
     )
@@ -1297,13 +1257,9 @@ def embedding_incremental_pairs(
     index: DataFrame,
     new_corpus: DataFrame,
     *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     threshold: float = 0.95,
     tables: int = 4,
     planes: int = 8,
-    round_to: int = 6,
-    max_bucket_size: int = 1000,
     collapse_exact: bool = True,
 ) -> DataFrame:
     """Embedding-cosine near-dup pairs TOUCHING a new ingest batch,
@@ -1323,9 +1279,7 @@ def embedding_incremental_pairs(
     to the collapse + bucket join; stored vectors join in by id for
     VERIFIED candidates only. Caller appends
     ``embedding_index(new_corpus)`` to the stored index afterwards."""
-    new_idx = embedding_index(
-        new_corpus, id_col=id_col, vec_col=vec_col, tables=tables, planes=planes
-    )
+    new_idx = embedding_index(new_corpus, tables=tables, planes=planes)
     cols = ["vec_id", "embedding", "bucket_keys", "vec_key"]
     all_idx = (
         index.select(*cols).withColumn("__new", F.lit(False))
@@ -1356,7 +1310,7 @@ def embedding_incremental_pairs(
             .select(
                 "__rep",
                 F.round(
-                    cosine_similarity("embedding", "embedding"), round_to
+                    cosine_similarity("embedding", "embedding"), _DUP_DIGITS
                 ).alias("cosine"),
             )
             .filter(F.col("cosine") >= threshold)
@@ -1369,7 +1323,7 @@ def embedding_incremental_pairs(
         "__new",
         F.posexplode("bucket_keys").alias("__table", "__key"),
     )
-    banded = _drop_hot_buckets(banded, ["__table", "__key"], max_bucket_size)
+    banded = _drop_hot_buckets(banded, ["__table", "__key"], 1000)
 
     a = banded.filter("__new").select(
         "__table", "__key", F.col("vec_id").alias("__ida")
@@ -1386,7 +1340,7 @@ def embedding_incremental_pairs(
         .dropDuplicates(["src_id", "dst_id"])
         .join(vecs.select(F.col("__vid").alias("src_id"), F.col("__vec").alias("__va")), on="src_id")
         .join(vecs.select(F.col("__vid").alias("dst_id"), F.col("__vec").alias("__vb")), on="dst_id")
-        .withColumn("cosine", F.round(cosine_similarity("__va", "__vb"), round_to))
+        .withColumn("cosine", F.round(cosine_similarity("__va", "__vb"), _DUP_DIGITS))
         .filter(F.col("cosine") >= threshold)
         .select("src_id", "dst_id", "cosine")
     )
@@ -1401,46 +1355,30 @@ def embedding_incremental_pairs(
 # multimodal.streaming_phash_match)
 # ---------------------------------------------------------------------------
 
-def embedding_bucket_index(
-    corpus: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    tables: int = 8,
-    planes: int = 4,
-) -> DataFrame:
-    """Sign-LSH bucket index over a (vec_id, embedding) corpus: one row
+def embedding_bucket_index(corpus: DataFrame) -> DataFrame:
+    """Sign-LSH bucket index (8 tables × 4 planes) over a (vec_id,
+    embedding) corpus: one row
     per (table, key) per vector — the static side of a stream-static
     embedding near-dup join. 8 longs + one vector per asset; a
     dimension table at any corpus scale (the vectors ride along so the
     stream side can verify cosine exactly without a second lookup)."""
     return corpus.select(
-        F.col(id_col).alias("__idx_id"),
-        F.col(vec_col).alias("__idx_vec"),
+        F.col("vec_id").alias("__idx_id"),
+        F.col("embedding").alias("__idx_vec"),
         F.posexplode(
-            _bucket_keys(F.col(vec_col), tables=tables, planes=planes)
+            _bucket_keys(F.col("embedding"), tables=_STREAM_TABLES, planes=_STREAM_PLANES)
         ).alias("__table", "__key"),
     )
 
 
-def streaming_embedding_match(
-    stream: DataFrame,
-    index: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    tables: int = 8,
-    planes: int = 4,
-    threshold: float = 0.95,
-    round_to: int = 6,
-) -> DataFrame:
+def streaming_embedding_match(stream: DataFrame, index: DataFrame) -> DataFrame:
     """Continuous embedding near-dup flagging: arriving vectors get
     their sign-LSH bucket keys map-side (pure Catalyst expressions, no
     shuffle), stream-static equi-join :func:`embedding_bucket_index`,
     and verify exact cosine in-stream. Emits one row per (vector,
     TABLE, colliding index entry) — the same entry surfaces once per
     LSH table whose bucket it shares — as ``(vec_id, matched_id,
-    cosine)`` with nulls below threshold; the per-vector best-match
+    cosine)`` with nulls below 0.95; the per-vector best-match
     fold is a tiny batch groupBy downstream (the ingest-tier
     composition contract), and it must keep (matched_id, cosine) from
     ONE row — filter to the chosen match or struct-min, never fold the
@@ -1450,19 +1388,18 @@ def streaming_embedding_match(
     collide in every table deterministically (the hyperplanes are
     seed-derived functions of the components), so exact-dup recall is
     1.0; near-dups follow the tables×planes collision curve A/B'd in
-    BASELINE.md (8×4: recall 0.725 at top-k grain). The ``tables`` and
-    ``planes`` here must match the index's."""
+    BASELINE.md (8×4: recall 0.725 at top-k grain)."""
     banded = stream.select(
-        F.col(id_col),
-        F.col(vec_col).alias("__sv"),
+        "vec_id",
+        F.col("embedding").alias("__sv"),
         F.posexplode(
-            _bucket_keys(F.col(vec_col), tables=tables, planes=planes)
+            _bucket_keys(F.col("embedding"), tables=_STREAM_TABLES, planes=_STREAM_PLANES)
         ).alias("__table", "__key"),
     )
     joined = banded.join(index, on=["__table", "__key"], how="left")
-    cos = F.round(cosine_similarity("__sv", "__idx_vec"), round_to)
+    cos = F.round(cosine_similarity("__sv", "__idx_vec"), _DUP_DIGITS)
     return joined.select(
-        F.col(id_col),
-        F.when(cos >= threshold, F.col("__idx_id")).alias("matched_id"),
-        F.when(cos >= threshold, cos).alias("cosine"),
+        "vec_id",
+        F.when(cos >= 0.95, F.col("__idx_id")).alias("matched_id"),
+        F.when(cos >= 0.95, cos).alias("cosine"),
     )

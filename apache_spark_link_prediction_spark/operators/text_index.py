@@ -51,18 +51,14 @@ def text_trigrams(text: Column | str) -> Column:
     return F.array_distinct(F.when(n >= 3, grams).otherwise(empty))
 
 
-def trigram_postings(
-    docs: DataFrame, *, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def trigram_postings(docs: DataFrame) -> DataFrame:
     """``(doc_id, gram)`` posting list, distinct per doc.
 
     In production this is the materialization step: write once,
     bucketed by ``gram`` so per-query candidate generation prunes to
     the needle's gram buckets.
     """
-    return docs.select(
-        F.col(id_col), F.explode(text_trigrams(text_col)).alias("gram")
-    )
+    return docs.select("doc_id", F.explode(text_trigrams("text")).alias("gram"))
 
 
 def needle_trigrams(needle: str) -> list[str]:
@@ -70,34 +66,24 @@ def needle_trigrams(needle: str) -> list[str]:
     return sorted({low[i : i + 3] for i in range(len(low) - 2)})
 
 
-def trigram_search(
-    docs: DataFrame,
-    needle: str,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    postings: DataFrame | None = None,
-) -> DataFrame:
-    """All docs whose lowercased ``text_col`` contains ``needle``.
+def trigram_search(docs: DataFrame, needle: str) -> DataFrame:
+    """All docs whose lowercased ``text`` contains ``needle``.
 
     Index-accelerated, exact: trigram-cover candidates → LEFT SEMI →
-    ``contains`` verify. Pass a pre-materialized ``postings`` frame to
-    reuse an index across queries.
+    ``contains`` verify.
     """
     if len(needle) < 3:
         # No trigram to prune on — degrade to the scan the oracle runs.
-        return docs.filter(F.lower(F.col(text_col)).contains(needle.lower()))
+        return docs.filter(F.lower(F.col("text")).contains(needle.lower()))
     grams = needle_trigrams(needle)
-    index = postings if postings is not None else trigram_postings(
-        docs, id_col=id_col, text_col=text_col
-    )
     candidates = (
-        index.filter(F.col("gram").isin(grams))
-        .groupBy(id_col)
+        trigram_postings(docs)
+        .filter(F.col("gram").isin(grams))
+        .groupBy("doc_id")
         .agg(F.count(F.lit(1)).alias("__cover"))
         .filter(F.col("__cover") == len(grams))
-        .select(id_col)
+        .select("doc_id")
     )
-    return docs.join(candidates, on=id_col, how="left_semi").filter(
-        F.lower(F.col(text_col)).contains(needle.lower())
+    return docs.join(candidates, on="doc_id", how="left_semi").filter(
+        F.lower(F.col("text")).contains(needle.lower())
     )

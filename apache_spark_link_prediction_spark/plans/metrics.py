@@ -17,16 +17,15 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def threshold_metrics(
-    scored: DataFrame, *, score_col: str = "prediction", label_col: str = "label"
-) -> DataFrame:
-    """Per-threshold (threshold, precision, recall, f1), mirroring
-    mllib's BinaryClassificationMetrics semantics: thresholds = distinct
+def threshold_metrics(scored: DataFrame) -> DataFrame:
+    """Per-threshold (threshold, precision, recall, f1) of a
+    ``(prediction, label)`` frame, mirroring mllib's
+    BinaryClassificationMetrics semantics: thresholds = distinct
     scores; predict positive iff score >= threshold."""
     counts = (
         scored.select(
-            F.col(score_col).cast("double").alias("score"),
-            F.col(label_col).cast("double").alias("label"),
+            F.col("prediction").cast("double").alias("score"),
+            F.col("label").cast("double").alias("label"),
         )
         .groupBy("score")
         .agg(
@@ -59,10 +58,6 @@ def threshold_metrics(
     )
 
 
-def best_f1(scored: DataFrame, *, score_col: str = "prediction", label_col: str = "label") -> float:
-    row = (
-        threshold_metrics(scored, score_col=score_col, label_col=label_col)
-        .agg(F.max("f1").alias("best_f1"))
-        .first()
-    )
+def best_f1(scored: DataFrame) -> float:
+    row = threshold_metrics(scored).agg(F.max("f1").alias("best_f1")).first()
     return float(row["best_f1"] or 0.0)

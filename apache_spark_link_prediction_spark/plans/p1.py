@@ -36,63 +36,45 @@ from .text_pipeline import preprocess_documents
 MAX_ITERATIONS = 100  # Predictor.scala:30
 
 
-def pair_features(
-    edges: DataFrame,
-    info: DataFrame,
-    *,
-    info_id: str = "srcId",
-    token_cols: tuple[str, ...] = ("title_tokens", "authors_tokens", "abstract_tokens"),
-    journal_col: str = "journal",
-    year_col: str = "year",
-    tfidf_col: str = "tf_idf",
-    keep_cols: tuple[str, ...] = (),
-) -> DataFrame:
+_TOKEN_COLS = ("title", "authors", "abstract")
+
+
+def pair_features(edges: DataFrame, info: DataFrame) -> DataFrame:
     """getFinalDataFrame (Predictor.scala:251-287): enrich both edge
-    endpoints, emit the 5 scalar features + destination tf·idf.
+    endpoints (node id ``srcId``), emit the 5 scalar features
+    (``common_{title,authors,abstract}``, ``same_journal``,
+    ``year_diff``) + destination tf·idf.
 
     Only the needed attr columns are carried through the joins (the
     reference ships every intermediate ML column through both shuffles).
     """
-    attrs = [*token_cols, journal_col, year_col]
-    if tfidf_col:
-        attrs.append(tfidf_col)
-    enriched = enrich_edges_both_sides(edges, info, info_id=info_id, attrs=attrs)
+    token_cols = [f"{c}_tokens" for c in _TOKEN_COLS]
+    attrs = [*token_cols, "journal", "year", "tf_idf"]
+    enriched = enrich_edges_both_sides(edges, info, info_id="srcId", attrs=attrs)
 
     feature_cols = [
-        common_token_count(f"{c}_from", f"{c}_to").alias(f"common_{c.removesuffix('_tokens')}")
-        for c in token_cols
+        common_token_count(f"{c}_tokens_from", f"{c}_tokens_to").alias(f"common_{c}")
+        for c in _TOKEN_COLS
     ]
-    feature_cols.append(
-        equality_flag(f"{journal_col}_from", f"{journal_col}_to").alias("same_journal")
-    )
-    feature_cols.append(
-        year_difference(f"{year_col}_from", f"{year_col}_to").alias("year_diff")
-    )
-    out_cols = [F.col(c) for c in (*edges.columns, *keep_cols)]
-    if tfidf_col:
-        # §2.7-2: the vector feature is the *to*-side tf_idf only.
-        out_cols.append(F.col(f"{tfidf_col}_to").alias(tfidf_col))
+    feature_cols.append(equality_flag("journal_from", "journal_to").alias("same_journal"))
+    feature_cols.append(year_difference("year_from", "year_to").alias("year_diff"))
+    out_cols = [F.col(c) for c in edges.columns]
+    # §2.7-2: the vector feature is the *to*-side tf_idf only.
+    out_cols.append(F.col("tf_idf_to").alias("tf_idf"))
     return enriched.select(*out_cols, *feature_cols)
 
 
 SCALAR_FEATURES = ("common_title", "common_authors", "common_abstract", "same_journal", "year_diff")
 
 
-def assemble_features(
-    df: DataFrame,
-    *,
-    scalar_features: tuple[str, ...] = SCALAR_FEATURES,
-    tfidf_col: str | None = "tf_idf",
-    label_col: str | None = "label",
-) -> DataFrame:
+def assemble_features(df: DataFrame) -> DataFrame:
     """VectorAssembler (M6, Predictor.scala:274-286): scalar features +
     tf·idf → ``features`` vector; labels recast to double; na.drop."""
-    df = df.na.drop(subset=list(scalar_features))
-    inputs = list(scalar_features) + ([tfidf_col] if tfidf_col else [])
-    assembler = VectorAssembler(inputCols=inputs, outputCol="features")
+    df = df.na.drop(subset=list(SCALAR_FEATURES))
+    assembler = VectorAssembler(inputCols=[*SCALAR_FEATURES, "tf_idf"], outputCol="features")
     out = assembler.transform(df)
-    if label_col and label_col in df.columns:
-        out = out.withColumn(label_col, to_double_label(label_col))
+    if "label" in df.columns:
+        out = out.withColumn("label", to_double_label("label"))
     return out
 
 
@@ -124,49 +106,27 @@ def run_p1(
     *,
     fraction: float = 1.0,
     seed: int = 12345,
-    text_cols: tuple[str, ...] = ("abstract", "title"),
-    authors_col: str | None = "authors",
-    journal_col: str = "journal",
-    year_col: str = "year",
+    max_iter: int = MAX_ITERATIONS,
 ) -> P1Result:
-    """Full p1 (Predictor.scala:350-380) over reference-shaped tables."""
+    """Full p1 (Predictor.scala:350-380) over reference-shaped tables;
+    ``max_iter`` is the LR iteration count."""
     if fraction < 1.0:
         info = info.sample(fraction=fraction, seed=seed)  # §2.7-5: sample pre-IDF
     processed, _ = preprocess_documents(
         info,
-        text_cols=list(text_cols),
-        authors_col=authors_col,
-        fill_cols=[*text_cols, *( [authors_col] if authors_col else [] ), journal_col],
+        text_cols=["abstract", "title"],
+        authors_col="authors",
+        fill_cols=["abstract", "title", "authors", "journal"],
     )
     # Cache: both the train-side and test-side double joins consume this
     # (the reference recomputes the whole preProcess lineage twice —
     # Predictor.scala:360-361; SURVEY.md §4).
     processed = processed.cache()
 
-    token_cols = tuple(
-        [f"{c}_tokens" for c in ("title",) if f"{c}_tokens" in processed.columns]
-        + ([f"{authors_col}_tokens"] if authors_col else [])
-        + [f"{c}_tokens" for c in ("abstract",) if f"{c}_tokens" in processed.columns]
-    )
     labeled_test = label_by_existence(test_pairs, truth_edges)
-    feats = dict(
-        info_id="srcId",
-        token_cols=token_cols,
-        journal_col=journal_col,
-        year_col=year_col,
-    )
-    train_f = pair_features(train_edges, processed, **feats)
-    test_f = pair_features(labeled_test, processed, **feats)
-    # Rename positional feature names to the canonical scalar set.
-    rename = dict(zip([f"common_{c.removesuffix('_tokens')}" for c in token_cols],
-                      ("common_title", "common_authors", "common_abstract")))
-    for old, new in rename.items():
-        train_f = train_f.withColumnRenamed(old, new)
-        test_f = test_f.withColumnRenamed(old, new)
-
-    train_a = assemble_features(train_f)
-    test_a = assemble_features(test_f)
-    model, predictions = train_predict(train_a, test_a)
+    train_a = assemble_features(pair_features(train_edges, processed))
+    test_a = assemble_features(pair_features(labeled_test, processed))
+    model, predictions = train_predict(train_a, test_a, max_iter=max_iter)
     m = threshold_metrics(predictions)
     return P1Result(model=model, predictions=predictions, metrics=m,
                     best_f1=best_f1(predictions))

@@ -232,15 +232,14 @@ def _collapsed_rep_pairs(
 def lsh_similarity_join(
     features: DataFrame,
     *,
-    id_col: str = "srcId",
-    vec_col: str = "tf_idf",
     threshold: float = SIMILARITY_THRESHOLD,
     mode: str = "intent",
     num_hash_tables: int = NUM_HASH_TABLES,
     seed: int = 12345,
 ) -> DataFrame:
-    """M8+J5: fit MinHashLSH on the tf·idf vectors, approximate
-    similarity self-join, emit (srcId, dstId, jaccardSimilarity).
+    """M8+J5: fit MinHashLSH (seeded with ``seed``) on the ``tf_idf``
+    vectors of a ``(srcId, tf_idf)`` frame, approximate similarity
+    self-join, emit (srcId, dstId, jaccardSimilarity).
     Pair-for-pair identical to the MLlib ``approxSimilarityJoin``
     formulation (see module docstring; parity pinned in
     tests/test_p2.py) via the collapsed ids-only plan.
@@ -252,17 +251,17 @@ def lsh_similarity_join(
     if mode not in ("intent", "reference"):
         raise ValueError(f"unknown mode: {mode!r}")
     if threshold >= 1.0:
-        t = features.schema[id_col].dataType.simpleString()
+        t = features.schema["srcId"].dataType.simpleString()
         return features.sparkSession.createDataFrame(
             [], f"srcId {t} NOT NULL, dstId {t} NOT NULL, jaccardSimilarity double"
         )
-    model = _fit_model(features, vec_col, num_hash_tables, seed)
+    model = _fit_model(features, "tf_idf", num_hash_tables, seed)
     if mode == "intent":
         verified, memb = _collapsed_rep_pairs(
             model,
             features,
-            id_col,
-            vec_col,
+            "srcId",
+            "tf_idf",
             1.0 - threshold,
             size_prefilter_sim=threshold,
         )
@@ -285,7 +284,7 @@ def lsh_similarity_join(
         # both orientations of every surviving cross-group pair, plus
         # (when the threshold lets dist 0.0 through) ordered intra
         # pairs and self-pairs.
-        verified, memb = _collapsed_rep_pairs(model, features, id_col, vec_col, 1.0)
+        verified, memb = _collapsed_rep_pairs(model, features, "srcId", "tf_idf", 1.0)
         ma = memb.select(F.col("__rep").alias("__ra"), F.col("__id").alias("__a"))
         mb = memb.select(F.col("__rep").alias("__rb"), F.col("__id").alias("__b"))
         cross = (
@@ -338,19 +337,20 @@ def run_p2(
     seed: int = 12345,
     threshold: float = SIMILARITY_THRESHOLD,
     mode: str = "intent",
-    text_cols: tuple[str, ...] = ("abstract",),
-    id_col: str = "srcId",
 ) -> P2Result:
+    """Full p2 (Predictor.scala:388-422): sample the node table with
+    ``seed``, tf·idf over ``abstract``, LSH self-join with the same
+    ``seed``, count the predicted edges found in ``truth_edges``."""
     if fraction < 1.0:
         # right-size partitioning after the sample (AQE picks the
         # count: 1 at test scale, many at 100 TB) — see the measured
         # rationale at queries.py::p2_lsh_similarity
-        info = info.sample(fraction=fraction, seed=seed).repartition(F.col(id_col))
-    processed, _ = preprocess_documents(info, text_cols=list(text_cols))
+        info = info.sample(fraction=fraction, seed=seed).repartition(F.col("srcId"))
+    processed, _ = preprocess_documents(info, text_cols=["abstract"])
     # No .cache() needed since r17: the fast join collapses the corpus
     # to one checkpointed distinct-set table, so the tokenize→TF→IDF
     # lineage runs exactly once however many consumers follow.
-    processed = processed.select(id_col, "tf_idf")
-    predicted = lsh_similarity_join(processed, id_col=id_col, threshold=threshold, mode=mode)
+    processed = processed.select("srcId", "tf_idf")
+    predicted = lsh_similarity_join(processed, threshold=threshold, mode=mode, seed=seed)
     n_pred, n_correct = cross_validate_count(predicted, truth_edges)
     return P2Result(predicted_edges=predicted, predicted_count=n_pred, correct_count=n_correct)

@@ -18,12 +18,10 @@ from pyspark.sql import functions as F
 TF_SIZE = 10_000  # Predictor.scala:29 (Configuration.TF_SIZE)
 
 
-def build_text_pipeline(
-    text_cols: list[str], tf_col: str = "tf", tfidf_col: str = "tf_idf"
-) -> Pipeline:
-    """Tokenize + stopword-filter each text col; HashingTF+IDF over the
-    *first* col's tokens (matches the reference: tf/idf over abstract
-    only — Predictor.scala:123-130)."""
+def build_text_pipeline(text_cols: list[str]) -> Pipeline:
+    """Tokenize + stopword-filter each text col; HashingTF (``tf``) +
+    IDF (``tf_idf``) over the *first* col's tokens (matches the
+    reference: tf/idf over abstract only — Predictor.scala:123-130)."""
     stages = []
     for c in text_cols:
         stages.append(Tokenizer(inputCol=c, outputCol=f"{c}_tokens_raw"))
@@ -31,9 +29,9 @@ def build_text_pipeline(
             StopWordsRemover(inputCol=f"{c}_tokens_raw", outputCol=f"{c}_tokens")
         )
     stages.append(
-        HashingTF(inputCol=f"{text_cols[0]}_tokens", outputCol=tf_col, numFeatures=TF_SIZE)
+        HashingTF(inputCol=f"{text_cols[0]}_tokens", outputCol="tf", numFeatures=TF_SIZE)
     )
-    stages.append(IDF(inputCol=tf_col, outputCol=tfidf_col))
+    stages.append(IDF(inputCol="tf", outputCol="tf_idf"))
     return Pipeline(stages=stages)
 
 

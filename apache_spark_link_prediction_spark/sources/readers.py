@@ -134,12 +134,12 @@ def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, Data
     return {n: load_table(spark, sf_dir, n) for n in (names or TESTDATA_TABLES)}
 
 
-def sample_deterministic(df: DataFrame, fraction: float, seed: int = 12345) -> DataFrame:
-    """S6: Bernoulli sample with the reference's fixed seed
+def sample_deterministic(df: DataFrame, fraction: float) -> DataFrame:
+    """S6: Bernoulli sample with the reference's fixed seed 12345
     (Predictor.scala:352-353, 390-391)."""
     if fraction >= 1.0:
         return df
-    return df.sample(fraction=fraction, seed=seed)
+    return df.sample(fraction=fraction, seed=12345)
 
 
 def write_parquet(df: DataFrame, path: str, partition_by: list[str] | None = None) -> None:
@@ -158,9 +158,8 @@ def write_bucketed(
     bucket_by: str,
     num_buckets: int = 32,
     sort_by: str | None = None,
-    mode: str = "overwrite",
 ) -> None:
-    """Bucketed parquet table sink: pre-shuffles once at write time so
+    """Bucketed parquet table sink (overwrites ``table``): pre-shuffles once at write time so
     every later equi join/aggregation on ``bucket_by`` between
     co-bucketed tables runs shuffle-free (Exchange elided — asserted in
     tests/test_sources.py). The 100 TB pattern for fact tables joined
@@ -168,18 +167,17 @@ def write_bucketed(
     sort-merge join's Sort. Requires saveAsTable (bucket metadata lives
     in the catalog, not the files)."""
     spark = df.sparkSession
-    if mode == "overwrite":
-        # saveAsTable(overwrite) still refuses a managed location left
-        # behind by a dropped/crashed session — clear both catalog entry
-        # and orphaned directory.
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
-        warehouse = spark.conf.get("spark.sql.warehouse.dir", "")
-        if warehouse.startswith("file:"):
-            warehouse = warehouse[len("file:"):]
-        loc = os.path.join(warehouse, table.lower())
-        if warehouse and os.path.isdir(loc):
-            shutil.rmtree(loc)
-    w = df.write.format("parquet").mode(mode).bucketBy(num_buckets, bucket_by)
+    # saveAsTable(overwrite) still refuses a managed location left
+    # behind by a dropped/crashed session — clear both catalog entry
+    # and orphaned directory.
+    spark.sql(f"DROP TABLE IF EXISTS {table}")
+    warehouse = spark.conf.get("spark.sql.warehouse.dir", "")
+    if warehouse.startswith("file:"):
+        warehouse = warehouse[len("file:"):]
+    loc = os.path.join(warehouse, table.lower())
+    if warehouse and os.path.isdir(loc):
+        shutil.rmtree(loc)
+    w = df.write.format("parquet").mode("overwrite").bucketBy(num_buckets, bucket_by)
     if sort_by:
         w = w.sortBy(sort_by)
     w.saveAsTable(table)
@@ -219,15 +217,12 @@ def compact_parquet(
     return n_files
 
 
-def write_jsonl(df: DataFrame, path: str, *, compression: str | None = "gzip") -> None:
-    """JSON-lines sink — the interchange format most raw LLM training
-    corpora arrive and ship in (one JSON object per line, splittable
-    when uncompressed, gzip per-file otherwise). Spark's json writer IS
-    jsonl: one object per line, one file per partition."""
-    w = df.write.mode("overwrite")
-    if compression:
-        w = w.option("compression", compression)
-    w.json(path)
+def write_jsonl(df: DataFrame, path: str) -> None:
+    """Gzipped JSON-lines sink — the interchange format most raw LLM
+    training corpora arrive and ship in (one JSON object per line, gzip
+    per file). Spark's json writer IS jsonl: one object per line, one
+    file per partition."""
+    df.write.mode("overwrite").option("compression", "gzip").json(path)
 
 
 def read_jsonl(spark: SparkSession, path: str, schema: T.StructType | None = None) -> DataFrame:
@@ -307,10 +302,8 @@ def shard_for_write(
     docs: DataFrame,
     *,
     n_shards: int = 16,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
-    """Assign every document a deterministic shard and hash-repartition
+    """Assign every ``(doc_id, text)`` document a deterministic shard and hash-repartition
     to exactly ``n_shards`` output partitions — the pre-write half of
     :func:`write_training_shards`, exposed separately so the plan test
     can pin the shuffle shape.
@@ -327,10 +320,10 @@ def shard_for_write(
     from ..functions.textstats import doc_rolling_hash
 
     shard = (
-        doc_rolling_hash(F.concat(F.lit("shard:"), F.col(id_col).cast("string")))
+        doc_rolling_hash(F.concat(F.lit("shard:"), F.col("doc_id").cast("string")))
         % n_shards
     ).cast("long")
-    return docs.select(id_col, text_col).withColumn("shard_id", shard).repartition(
+    return docs.select("doc_id", "text").withColumn("shard_id", shard).repartition(
         n_shards, F.col("shard_id")
     )
 
@@ -340,8 +333,6 @@ def write_training_shards(
     path: str,
     *,
     n_shards: int = 16,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Sharded training-data sink (VERDICT r13 item 3 — the one
     pipeline stage between curation and the training loader):
@@ -365,22 +356,20 @@ def write_training_shards(
     map-side-combinable agg of 4 longs per shard. The shard count is
     the training-side contract (loader parallelism), not a Spark
     tuning knob."""
-    sharded = shard_for_write(
-        docs, n_shards=n_shards, id_col=id_col, text_col=text_col
-    )
+    sharded = shard_for_write(docs, n_shards=n_shards)
     sharded.write.mode("overwrite").partitionBy("shard_id").parquet(path)
     from ..functions.textstats import doc_rolling_hash
 
     back = docs.sparkSession.read.parquet(path)
     hc = doc_rolling_hash(
-        F.concat(F.col(id_col).cast("string"), F.lit(":"), F.col(text_col))
+        F.concat(F.col("doc_id").cast("string"), F.lit(":"), F.col("text"))
     )
     return (
         back.withColumn("__hc", hc)
         .groupBy(F.col("shard_id").cast("long").alias("shard_id"))
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_rows"),
-            F.sum(F.octet_length(text_col)).cast("long").alias("n_bytes"),
+            F.sum(F.octet_length("text")).cast("long").alias("n_bytes"),
             F.expr("bit_xor(__hc)").alias("content_hash"),
         )
     )

@@ -36,6 +36,9 @@ EVENTS_STREAM_SCHEMA = T.StructType(
     ]
 )
 
+# Inactivity gap (seconds) that closes a streaming_custom_sessions session.
+_SESSION_GAP_S = 1800
+
 
 def read_events_stream(
     spark: SparkSession, path: str, *, max_files_per_trigger: int = 4
@@ -66,18 +69,13 @@ def streaming_window_agg(
     )
 
 
-def streaming_session_agg(
-    events: DataFrame,
-    *,
-    gap: str = "30 minutes",
-    watermark: str = "2 hours",
-) -> DataFrame:
+def streaming_session_agg(events: DataFrame) -> DataFrame:
     """Per-user session aggregation via the native ``session_window``
-    (gap-based dynamic windows) — the streaming twin of
+    (30-minute gap, 2-hour watermark) — the streaming twin of
     ``sessionize_events``'s lag/cumsum formulation."""
     return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap).alias("session"), "user_id")
+        events.withWatermark("ts", "2 hours")
+        .groupBy(F.session_window("ts", "30 minutes").alias("session"), "user_id")
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(
             "user_id",
@@ -91,49 +89,34 @@ def streaming_session_agg(
 def streaming_dedup(
     events: DataFrame,
     *,
-    keys: list[str] | None = None,
     watermark: str = "2 hours",
 ) -> DataFrame:
-    """Streaming exact dedup: first occurrence per key wins, duplicate
-    state expires past the watermark (bounded state — the property that
+    """Streaming exact dedup: first occurrence per ``event_id`` wins,
+    duplicate state expires past the watermark (bounded state — the property that
     makes exact dedup feasible on an unbounded 100 TB/day stream; a
     global ``dropDuplicates`` would grow state forever).
 
-    Batch twin: ``row_number() over (partition by keys order by ts) = 1``.
+    Batch twin: ``row_number() over (partition by event_id order by ts) = 1``.
     """
-    keys = keys or ["event_id"]
-    return events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(keys)
+    return events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(["event_id"])
 
 
-def streaming_enrich_static(
-    events: DataFrame,
-    dim: DataFrame,
-    *,
-    on: str = "event_type",
-) -> DataFrame:
-    """Stream-static enrichment join: every micro-batch joins the
-    (small) static dimension — broadcast, stateless, no watermark
+def streaming_enrich_static(events: DataFrame, dim: DataFrame) -> DataFrame:
+    """Stream-static enrichment join on ``event_type``: every
+    micro-batch joins the (small) static dimension — broadcast, stateless, no watermark
     needed (unlike stream-stream joins, the static side is complete by
     definition). The 100 TB pattern for attaching slowly-changing
     reference data to a firehose; for dims that DO change mid-run, swap
     in a ``foreachBatch`` re-read or the CDC-upsert stream
     (streaming_cdc_latest)."""
-    return events.join(F.broadcast(dim), on=on, how="left")
+    return events.join(F.broadcast(dim), on="event_type", how="left")
 
 
-def streaming_interval_join(
-    events: DataFrame,
-    *,
-    left_type: str = "click",
-    right_type: str = "purchase",
-    interval_s: int = 3600,
-    watermark: str = "2 hours",
-    how: str = "inner",
-) -> DataFrame:
+def streaming_interval_join(events: DataFrame, *, how: str = "inner") -> DataFrame:
     """Stream-stream inner join with an event-time range condition:
-    each ``left_type`` event matches the same user's ``right_type``
-    events inside ``[left.ts, left.ts + interval_s)`` — the attribution
-    join (click → purchase within the hour).
+    each ``click`` event matches the same user's ``purchase`` events
+    inside ``[click.ts, click.ts + 1 hour)`` — the attribution join.
+    Both sides carry a 2-hour watermark.
 
     Both sides carry watermarks and the join predicate bounds right.ts
     relative to left.ts, which is exactly what Structured Streaming
@@ -146,22 +129,22 @@ def streaming_interval_join(
     Batch twin: the equivalent user_id equi-join + time-range predicate
     (see ``streaming_stream_join``'s oracle in queries.py)."""
     left = (
-        events.filter(F.col("event_type") == left_type)
+        events.filter(F.col("event_type") == "click")
         .select(
             F.col("event_id").alias("click_id"),
             "user_id",
             F.col("ts").alias("c_ts"),
         )
-        .withWatermark("c_ts", watermark)
+        .withWatermark("c_ts", "2 hours")
     )
     right = (
-        events.filter(F.col("event_type") == right_type)
+        events.filter(F.col("event_type") == "purchase")
         .select(
             F.col("event_id").alias("purchase_id"),
             F.col("user_id").alias("__r_user"),
             F.col("ts").alias("p_ts"),
         )
-        .withWatermark("p_ts", watermark)
+        .withWatermark("p_ts", "2 hours")
     )
     # ``how="left_outer"``: unmatched clicks emit (purchase_id NULL) only
     # once the purchase-side watermark proves no match can still arrive
@@ -173,7 +156,7 @@ def streaming_interval_join(
         right,
         (F.col("user_id") == F.col("__r_user"))
         & (F.col("p_ts") >= F.col("c_ts"))
-        & (F.col("p_ts") < F.col("c_ts") + F.expr(f"INTERVAL {interval_s} SECONDS")),
+        & (F.col("p_ts") < F.col("c_ts") + F.expr("INTERVAL 3600 SECONDS")),
         how,
     )
     return joined.select(
@@ -249,7 +232,6 @@ def streaming_user_ema(
     events: DataFrame,
     *,
     alpha: float = 0.3,
-    watermark: str = "35 days",
 ) -> DataFrame:
     """Custom stateful streaming operator via ``applyInPandasWithState``:
     per-user exponential moving average of ``value`` (EMA is
@@ -292,7 +274,7 @@ def streaming_user_ema(
         )
 
     return (
-        events.withWatermark("ts", watermark)
+        events.withWatermark("ts", "35 days")
         .groupBy("user_id")
         .applyInPandasWithState(
             fn,
@@ -309,7 +291,6 @@ def streaming_heavy_hitters(
     *,
     capacity: int = 64,
     top_k: int = 10,
-    watermark: str = "35 days",
 ) -> DataFrame:
     """Streaming heavy hitters: a per-group Misra-Gries summary held in
     stream state — bounded frequent-item tracking over an unbounded
@@ -362,7 +343,7 @@ def streaming_heavy_hitters(
         )
 
     return (
-        events.withWatermark("ts", watermark)
+        events.withWatermark("ts", "35 days")
         .groupBy("event_type")
         .applyInPandasWithState(
             fn,
@@ -374,19 +355,14 @@ def streaming_heavy_hitters(
     )
 
 
-def streaming_custom_sessions(
-    events: DataFrame,
-    *,
-    gap_seconds: int = 1800,
-    watermark: str = "30 minutes",
-) -> DataFrame:
+def streaming_custom_sessions(events: DataFrame) -> DataFrame:
     """Custom stateful sessionization with event-time state TIMEOUT —
     the full ``applyInPandasWithState`` lifecycle: per-user open-session
     state (start, last_ts, n_events) folds new events in ts order,
-    closes a session when a gap > ``gap_seconds`` appears in-batch, and
+    closes a session when a gap > 30 minutes appears in-batch, and
     — the part ``session_window`` can't express customly — closes idle
     sessions via ``GroupStateTimeout.EventTimeTimeout`` when the
-    watermark passes last_ts + gap, emitting on timeout with no new
+    30-minute watermark passes last_ts + gap, emitting on timeout with no new
     input for the key. State is O(open sessions); closed sessions leave
     state immediately.
 
@@ -417,19 +393,19 @@ def streaming_custom_sessions(
                     t = ts.value // 1000  # pandas ns -> µs
                     if start is None:
                         start, last, n = t, t, 1
-                    elif t - last > gap_seconds * 1_000_000:
+                    elif t - last > _SESSION_GAP_S * 1_000_000:
                         rows_out.append((key[0], start, n))
                         start, last, n = t, t, 1
                     else:
                         last, n = t, n + 1
                 state.update((start, last, n))
-                state.setTimeoutTimestamp(last // 1000 + gap_seconds * 1000)
+                state.setTimeoutTimestamp(last // 1000 + _SESSION_GAP_S * 1000)
         yield pd.DataFrame(
             rows_out, columns=["user_id", "session_start_us", "n_events"]
         )
 
     return (
-        events.withWatermark("ts", watermark)
+        events.withWatermark("ts", "30 minutes")
         .groupBy("user_id")
         .applyInPandasWithState(
             fn,
@@ -441,16 +417,10 @@ def streaming_custom_sessions(
     )
 
 
-def streaming_cdc_latest(
-    changes: DataFrame,
-    *,
-    key_col: str = "o_custkey",
-    ord_ts_col: str = "o_orderdate",
-    ord_id_col: str = "o_orderkey",
-    val_col: str = "o_totalprice",
-) -> DataFrame:
-    """Streaming CDC latest-wins: per key, keep the change row with the
-    greatest (business timestamp, id) and emit the current winner each
+def streaming_cdc_latest(changes: DataFrame) -> DataFrame:
+    """Streaming CDC latest-wins over an orders change stream: per
+    ``o_custkey``, keep the change row with the greatest
+    (``o_orderdate``, ``o_orderkey``) and its ``o_totalprice`` and emit the current winner each
     micro-batch (update mode). The streaming twin of the batch MERGE
     collapse in queries.cdc_upsert_latest.
 
@@ -471,7 +441,7 @@ def streaming_cdc_latest(
             best_us, best_id, best_val = None, None, None
         for pdf in pdfs:
             for ts, oid, val in zip(
-                pdf[ord_ts_col], pdf[ord_id_col], pdf[val_col]
+                pdf["o_orderdate"], pdf["o_orderkey"], pdf["o_totalprice"]
             ):
                 us = ts.value // 1000  # pandas ns -> µs
                 if best_us is None or (us, oid) > (best_us, best_id):
@@ -482,7 +452,7 @@ def streaming_cdc_latest(
         )
 
     return (
-        changes.groupBy(key_col)
+        changes.groupBy("o_custkey")
         .applyInPandasWithState(
             fn,
             outputStructType="key long, ord_us long, value double",
@@ -493,21 +463,15 @@ def streaming_cdc_latest(
     )
 
 
-def streaming_neardup_suppress(
-    docs: DataFrame,
-    *,
-    bits: int = 32,
-    blocks: int = 4,
-    max_hamming: int = 3,
-    max_state_per_bucket: int = 256,
-) -> DataFrame:
+def streaming_neardup_suppress(docs: DataFrame) -> DataFrame:
     """Streaming NEAR-duplicate suppression — the stateful-stream twin
-    of batch ``signature_band_pairs``: each arriving document's SimHash
-    (computed map-side with the single-expression ``operators.dedup.
-    simhash`` — no extra shuffle) is exploded into its ``blocks``
-    pigeonhole blocks; per (block, key) bucket a bounded GroupState of
-    previously-admitted (signature, keeper) pairs flags the document if
-    its full signature is within ``max_hamming`` of any of them.
+    of batch ``signature_band_pairs``: each arriving document's 32-bit
+    SimHash (computed map-side with the single-expression
+    ``operators.dedup.simhash`` — no extra shuffle) is exploded into its
+    4 8-bit pigeonhole blocks; per (block, key) bucket a bounded
+    GroupState of previously-admitted (signature, keeper) pairs flags
+    the document if its full signature is within Hamming 3 of any of
+    them.
 
     Emits one row per (document, block) — ``(doc_id, block, dup_of)``
     with ``dup_of`` null when that block saw no match. A document is
@@ -526,8 +490,8 @@ def streaming_neardup_suppress(
     suppressed in one block may still be admitted (and later matched)
     in another — ``dup_of`` pointers can chain exactly like the pair
     graph feeding dedup_clusters; follow them transitively for cluster
-    roots. State per bucket is capped at
-    ``max_state_per_bucket`` signatures (16 bytes each) — past the cap
+    roots. State per bucket is capped at 256 signatures (16 bytes
+    each) — past the cap
     new signatures pass through unsuppressed, the same bounded-recall
     contract as the batch hot-bucket cap. Production deployments add a
     GroupState timeout so idle buckets expire; the bounded test harness
@@ -536,20 +500,15 @@ def streaming_neardup_suppress(
 
     from ..operators.dedup import simhash
 
-    assert bits % blocks == 0
-    block_bits = bits // blocks
-    mask = (1 << block_bits) - 1
-
-    sig = docs.select(F.col("doc_id"), simhash("text", bits).alias("__sh"))
+    sig = docs.select(F.col("doc_id"), simhash("text", 32).alias("__sh"))
     banded = sig.select(
         "doc_id",
         "__sh",
         F.posexplode(
             F.array(
                 *[
-                    F.shiftright(F.col("__sh"), b * block_bits)
-                    .bitwiseAND(F.lit(mask).cast("long"))
-                    for b in range(blocks)
+                    F.shiftright(F.col("__sh"), b * 8).bitwiseAND(F.lit(0xFF).cast("long"))
+                    for b in range(4)
                 ]
             )
         ).alias("__block", "__key"),
@@ -577,10 +536,10 @@ def streaming_neardup_suppress(
         for doc_id, sh in sorted(rows):
             dup_of = None
             for s, k in zip(sigs, keepers):
-                if bin(sh ^ s).count("1") <= max_hamming:
+                if bin(sh ^ s).count("1") <= 3:
                     dup_of = k
                     break
-            if dup_of is None and len(sigs) < max_state_per_bucket:
+            if dup_of is None and len(sigs) < 256:
                 sigs.append(sh)
                 keepers.append(doc_id)
             out_ids.append(doc_id)
@@ -607,16 +566,13 @@ def streaming_neardup_suppress(
 def streaming_text_curation(
     docs_stream: DataFrame,
     bench_grams: DataFrame,
-    *,
-    min_tokens: int = 5,
-    max_punct_ratio: float = 0.3,
-    ngram: int = 5,
 ) -> DataFrame:
     """Always-on training-text curation over a document STREAM — the
     text twin of the media ingest tier: quality gating map-side
-    (C4/Gopher-style codegen'd signals from functions.textstats) and
+    (C4/Gopher-style codegen'd signals from functions.textstats: at
+    least 5 tokens, punctuation at most 0.3 of the characters) and
     benchmark decontamination via a stream-static LEFT SEMI join at
-    word-``ngram`` level against a static benchmark-gram set.
+    word-5-gram level against a static benchmark-gram set.
 
     Emits tagged rows from one self-unioned stream: ``('pass', doc_id)``
     for documents clearing the quality gate, ``('contaminated',
@@ -629,7 +585,7 @@ def streaming_text_curation(
     within-stream duplicate text.
 
     The punct gate compares RAW counts — ``punct_count <= n_chars *
-    max_punct_ratio`` — the same cross-multiplied convention as
+    0.3`` — the same cross-multiplied convention as
     ``quality_features``'s micro-unit columns (``punct_ratio_micro``
     etc., BIGINT ``(10^6·num) div den`` since the r15 integer-exact
     migration): integer counts times one IEEE multiply is
@@ -649,15 +605,12 @@ def streaming_text_curation(
         punct_count(F.col("text")).alias("__np"),
         F.length(F.col("text")).alias("__nc"),
     ).filter(
-        (F.col("__nt") >= min_tokens)
-        & (
-            F.col("__np").cast("double")
-            <= F.col("__nc").cast("double") * F.lit(max_punct_ratio)
-        )
+        (F.col("__nt") >= 5)
+        & (F.col("__np").cast("double") <= F.col("__nc").cast("double") * F.lit(0.3))
     )
     passed = gated.select(F.lit("pass").alias("tag"), "doc_id")
     contaminated = (
-        gated.select("doc_id", F.explode(word_shingles("text", ngram)).alias("gram"))
+        gated.select("doc_id", F.explode(word_shingles("text", 5)).alias("gram"))
         .join(bench_grams, on="gram", how="left_semi")
         .select(F.lit("contaminated").alias("tag"), "doc_id")
     )
@@ -767,9 +720,8 @@ def write_kafka_stream(
     topic: str,
     *,
     checkpoint_location: str,
-    output_mode: str = "append",
 ):
-    """Streaming events sink to Kafka with exactly-once-per-restart
+    """Append-mode streaming events sink to Kafka with exactly-once-per-restart
     checkpointing (Kafka's at-least-once delivery + downstream
     idempotent/dedup consumption is the standard contract). Returns the
     started StreamingQuery."""
@@ -779,7 +731,7 @@ def write_kafka_stream(
         .option("kafka.bootstrap.servers", bootstrap_servers)
         .option("topic", topic)
         .option("checkpointLocation", checkpoint_location)
-        .outputMode(output_mode)
+        .outputMode("append")
         .start()
     )
 

@@ -484,21 +484,20 @@ def main() -> None:
                     timings_10x[name] = solo
 
     # SPOTLIGHT slots (VERDICT r16 item 8, widened to 3 per VERDICT r17
-    # item 7 — one rotating slot at 265 oracle-backed entries meant a
-    # touched non-headline query could wait years for driver-side
-    # wall-clock evidence): non-headline oracle-backed entries get a
+    # item 7 — one slot at 265 oracle-backed entries meant a touched
+    # non-headline query could wait years for wall-clock evidence):
+    # non-headline oracle-backed entries get a
     # wall-clock signal each round so drift outside the 22-query
     # headline set is visible in the bench artifact too. Slots =
     # SPOTLIGHT_PINNED (the current round's touched non-headline
     # queries — evidence lands the SAME round the change does) plus the
-    # rotating pick (first non-headline entry of the registry's
-    # driver-window head; queries() order IS the window), deduped, max
+    # first non-headline entry in registration order, deduped, max
     # 3. Reported as their own fields, NOT inside ``queries``: the
     # graded total must stay comparable round-over-round, and the 2×
     # gate only applies to recorded queries anyway. Solo protocol (one
     # untimed warm pass, best of two timed) like gate adjudications.
-    # ``spotlight`` keeps the r17 single-dict shape (the rotating
-    # pick); ``spotlights`` carries the full list.
+    # ``spotlight`` keeps the r17 single-dict shape (the
+    # registration-order pick); ``spotlights`` carries the full list.
     spotlight = None
     spotlights = []
     if with_10x:

@@ -88,6 +88,35 @@ def test_cli_p2_reference_mode_runs(spark, tmp_path, capsys):
     assert "Total edges created: " in capsys.readouterr().out
 
 
+
+def test_cli_max_iter_and_seed_reach_the_estimators(spark, tmp_path, monkeypatch):
+    """``p1 --max-iter`` sets the LR iteration count and ``p2 --seed``
+    seeds the MinHashLSH model (the flag is documented as the
+    sampling/LSH seed), instead of being parsed and dropped."""
+    from apache_spark_link_prediction_spark.plans import p1, p2
+
+    built = {}
+
+    def spy(name, cls):
+        def make(**kw):
+            built[name] = cls(**kw)
+            return built[name]
+
+        return make
+
+    monkeypatch.setattr(p1, "LogisticRegression", spy("lr", p1.LogisticRegression))
+    monkeypatch.setattr(p2, "MinHashLSH", spy("lsh", p2.MinHashLSH))
+    node_info, training, testing, truth = _write_fixtures(tmp_path)
+    common = ["--node-info", str(node_info), "--ground-truth", str(truth), "--seed", "99"]
+    assert main(
+        ["p1", *common, "--training-set", str(training), "--testing-set", str(testing),
+         "--max-iter", "7"],
+        spark=spark,
+    ) == 0
+    assert main(["p2", *common, "--fraction", "1.0", "--threshold", "0.9"], spark=spark) == 0
+    assert built["lr"].getMaxIter() == 7
+    assert built["lsh"].getSeed() == 99
+
 def test_bench_trips_gate_arithmetic():
     """Pins bench.py's per-query regression-gate predicate: 2× ratio
     AND +2s absolute slack, both required; unrecorded names never trip

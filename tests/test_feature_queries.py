@@ -6,8 +6,7 @@ target_encode_loo, confusion_matrix_macro_f1, cdc_apply_deletes) had no
 pytest reference. Each test here recomputes the expected answer with an
 INDEPENDENT implementation (pandas/numpy over the raw parquet — not the
 DuckDB oracle, not Spark) and compares against the registered query at
-sf0.001, so the semantics are pinned even when the query sits outside
-the driver's 50-slot grading window.
+sf0.001.
 """
 
 from __future__ import annotations

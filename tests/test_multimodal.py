@@ -383,7 +383,7 @@ def test_audio_energy_windows_real_wav_roundtrip(spark):
 
     got = {
         (r.media_id, r.win): (r.n_samples, r.rms)
-        for r in audio_energy_windows(media, window_samples=50).collect()
+        for r in audio_energy_windows(media).collect()
     }
     # doc 7: 120 samples -> windows of 50/50/20; doc 8: one 49-window
     assert {k for k in got} == {(7, 0), (7, 1), (7, 2), (8, 0)}
@@ -442,7 +442,7 @@ def test_phash_near_dup_pairs_equal_brute_force(spark):
     media = png_near_dup_testbed(docs, classes=12)
     banded = {
         (r.src_id, r.dst_id)
-        for r in phash_near_dup_pairs(media, blocks=8, max_hamming=7).collect()
+        for r in phash_near_dup_pairs(media).collect()
     }
     sigs = {r.media_id: r.phash for r in image_phash(media).collect()}
     assert len(sigs) == 60 and all(v is not None for v in sigs.values())
@@ -509,7 +509,7 @@ def test_spectral_centroid_pure_tone_and_quarantine(spark):
     media = spark.createDataFrame(
         rows, "media_id long, modality string, mime string, payload binary"
     )
-    out = audio_spectral_centroid(media, frame_samples=256).collect()
+    out = audio_spectral_centroid(media).collect()
     by_media = {}
     for r in out:
         by_media.setdefault(r.media_id, []).append(r.centroid_hz)

@@ -101,7 +101,7 @@ def test_minhash_finds_planted_near_dups(spark):
     pairs = {
         (r["src_id"], r["dst_id"])
         for r in minhash_near_dup_pairs(
-            docs, shingle_n=2, num_hashes=32, bands=16, threshold=0.5
+            docs, shingle_n=2, bands=16, threshold=0.5
         ).collect()
     }
     assert (1, 2) in pairs
@@ -250,9 +250,7 @@ def test_minhash_recall_vs_exact(spark, docs):
         docs, block_col="source", ngram=1, threshold=0.8, allow_quadratic=True
     )
     truth = {(r["src_id"], r["dst_id"]) for r in exact.collect()}
-    approx = minhash_near_dup_pairs(
-        docs, shingle_n=1, num_hashes=32, bands=8, threshold=0.8
-    )
+    approx = minhash_near_dup_pairs(docs, shingle_n=1, bands=8, threshold=0.8)
     found = {(r["src_id"], r["dst_id"]) for r in approx.collect()}
     assert truth, "fixture should contain near-dup pairs"
     # precision 1.0: every reported pair is exact-verified ≥ threshold
@@ -359,7 +357,7 @@ def test_ivf_derived_defaults_recall(spark, emb):
     assert recall >= 0.4, f"IVF derived-default recall {recall:.2f}"
 
 
-def test_ivf_failed_fit_releases_cached_sample(spark, emb, monkeypatch):
+def test_ivf_failed_fit_propagates_and_persists_no_rdd(spark, emb, monkeypatch):
     """A quantizer fit that raises propagates its error and leaves no
     persisted RDD behind in a long-lived session (derived num_cells
     path)."""
@@ -2098,7 +2096,7 @@ def test_ivfpq_normalized_space_and_tiny_corpus(spark, emb):
     # tiny corpus: 10 vectors < ks=16 → k_eff < ks, padded codebooks
     tiny = emb.filter(F.col("vec_id") < 10)
     out = ivf_pq_top_k(
-        tiny, tiny.filter(F.col("vec_id") < 2), k=3, num_cells=4, nprobe=4, ks=16
+        tiny, tiny.filter(F.col("vec_id") < 2), k=3, num_cells=4, nprobe=4
     ).collect()
     exact_all = {(r["query_id"], r["neighbor_id"]): r["cosine"]
                  for r in brute_force_top_k(tiny, tiny.filter(F.col("vec_id") < 2),
@@ -2420,9 +2418,7 @@ def test_containment_prefix_join(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
     got = {
         (r.src_id, r.dst_id): r.containment_micro
-        for r in containment_prefix_join(
-            docs, threshold=0.8, shingle_n=3
-        ).collect()
+        for r in containment_prefix_join(docs, shingle_n=3).collect()
     }
     g = docs.select(
         "doc_id", F.array_distinct(word_shingles("text", 3)).alias("t")
@@ -2454,9 +2450,7 @@ def test_containment_prefix_join(spark, sf_dir):
     )
     out = {
         (r.src_id, r.dst_id): r.containment_micro
-        for r in containment_prefix_join(
-            fix, threshold=0.8, shingle_n=3
-        ).collect()
+        for r in containment_prefix_join(fix, shingle_n=3).collect()
     }
     assert out == {(2, 1): 1_000_000}
 

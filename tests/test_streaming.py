@@ -48,7 +48,7 @@ def test_streaming_window_agg_matches_batch(spark, sf_dir, events_stream_dir):
 def test_streaming_session_agg_matches_batch_profile(spark, sf_dir, events_stream_dir):
     stream = read_events_stream(spark, events_stream_dir, max_files_per_trigger=2)
     got = run_stream_to_memory(
-        streaming_session_agg(stream, gap="30 minutes"),
+        streaming_session_agg(stream),
         name="t_sess_agg",
         output_mode="complete",
     )

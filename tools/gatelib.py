@@ -2,11 +2,9 @@
 
 ``green(row)`` is THE definition of a fully-green driver/local gate row
 (rows + schema + hash-not-failed + no error), shared by
-tools/gen_queries_md.py (the QUERIES.md index) and tools/gen_window.py
-(the rotation planner) so the two can never disagree about whether a
-round graded a query (ADVICE r07: the index used to skip the err check
-and could advertise an errored round as green while the planner
-re-queued it).
+tools/gen_queries_md.py (the QUERIES.md index) and the local-gate
+coverage test in tests/test_registry.py (ADVICE r07: the index used to
+skip the err check and could advertise an errored round as green).
 """
 
 from __future__ import annotations

@@ -25,7 +25,7 @@ import sys
 sys.path.insert(0, ".")
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from gatelib import green  # shared with gen_window.py (ADVICE r07)
+from gatelib import green  # shared with tests/test_registry.py (ADVICE r07)
 
 REPO = pathlib.Path(__file__).resolve().parent.parent
 
@@ -72,8 +72,7 @@ def graded_rounds(through: int) -> dict[str, list[int]]:
             continue
         rows = json.load(open(f))
         for name, row in rows.items():
-            # shared predicate (ADVICE r07): includes the err check, so
-            # this index and tools/gen_window.py can never disagree
+            # shared predicate (ADVICE r07): includes the err check
             if green(row):
                 out.setdefault(name, []).append(rnd)
     # The r04 `funnel_conversion` row graded the since-renamed

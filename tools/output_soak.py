@@ -61,9 +61,7 @@ def main() -> None:
         d = (docs if copies == 1 else replicate_docs(docs, copies)).cache()
         d.count()
         t0 = time.perf_counter()
-        n = minhash_near_dup_pairs(
-            d, shingle_n=1, num_hashes=32, bands=8, threshold=0.8
-        ).count()
+        n = minhash_near_dup_pairs(d, shingle_n=1, bands=8, threshold=0.8).count()
         wall = time.perf_counter() - t0
         print(
             f"| dedup_minhash | {copies}× | {wall:.1f}s | {n:,} "

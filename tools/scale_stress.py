@@ -484,7 +484,7 @@ def main() -> None:
     ops = {
         "dedup_exact": lambda d, e: dedup_exact(d),
         "dedup_minhash": lambda d, e: minhash_near_dup_pairs(
-            d, shingle_n=1, num_hashes=32, bands=8, threshold=0.8
+            d, shingle_n=1, bands=8, threshold=0.8
         ),
         "dedup_simhash": lambda d, e: simhash_near_dup_pairs(d),
         "dedup_jaccard_prefix": lambda d, e: jaccard_prefix_join(d, threshold=0.8),
@@ -492,7 +492,7 @@ def main() -> None:
         # other, so the true directed-pair output is quadratic per
         # near-dup cluster — output-bound by construction
         "dedup_containment_prefix": lambda d, e: containment_prefix_join(
-            d, threshold=0.8, shingle_n=3
+            d, shingle_n=3
         ),
         "dedup_levenshtein": lambda d, e: levenshtein_near_dup_pairs(
             d, block_col="source"
