@@ -92,8 +92,8 @@ def streaming_dedup(
     watermark: str = "2 hours",
 ) -> DataFrame:
     """Streaming exact dedup: first occurrence per ``event_id`` wins,
-    duplicate state expires past the watermark (bounded state — the property that
-    makes exact dedup feasible on an unbounded 100 TB/day stream; a
+    duplicate state expires past the watermark (bounded state — the
+    property that makes exact dedup feasible on an unbounded 100 TB/day stream; a
     global ``dropDuplicates`` would grow state forever).
 
     Batch twin: ``row_number() over (partition by event_id order by ts) = 1``.
@@ -103,8 +103,8 @@ def streaming_dedup(
 
 def streaming_enrich_static(events: DataFrame, dim: DataFrame) -> DataFrame:
     """Stream-static enrichment join on ``event_type``: every
-    micro-batch joins the (small) static dimension — broadcast, stateless, no watermark
-    needed (unlike stream-stream joins, the static side is complete by
+    micro-batch joins the (small) static dimension — broadcast,
+    stateless, no watermark needed (unlike stream-stream joins, the static side is complete by
     definition). The 100 TB pattern for attaching slowly-changing
     reference data to a firehose; for dims that DO change mid-run, swap
     in a ``foreachBatch`` re-read or the CDC-upsert stream
@@ -420,8 +420,8 @@ def streaming_custom_sessions(events: DataFrame) -> DataFrame:
 def streaming_cdc_latest(changes: DataFrame) -> DataFrame:
     """Streaming CDC latest-wins over an orders change stream: per
     ``o_custkey``, keep the change row with the greatest
-    (``o_orderdate``, ``o_orderkey``) and its ``o_totalprice`` and emit the current winner each
-    micro-batch (update mode). The streaming twin of the batch MERGE
+    (``o_orderdate``, ``o_orderkey``) and its ``o_totalprice``, and emit
+    the current winner each micro-batch (update mode). The streaming twin of the batch MERGE
     collapse in queries.cdc_upsert_latest.
 
     Latest-wins is a max over all changes seen, so the final state is
