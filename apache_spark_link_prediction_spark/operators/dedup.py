@@ -168,6 +168,74 @@ def expand_groups(
 
 
 # ---------------------------------------------------------------------------
+# Bucket self-join shared by the LSH near-dup operators
+# ---------------------------------------------------------------------------
+
+def bucket_self_join(
+    rows: DataFrame,
+    keys: Column,
+    max_bucket_size: int,
+    *payload: str,
+    where: Column | None,
+    shuffle_hash: bool,
+) -> DataFrame:
+    """The band → cap → join step of the MinHash, signature and
+    embedding near-dup operators (the reference's LSH bucket self-join,
+    Predictor.scala:394-405). ``rows`` carries ``__id``, the ``payload``
+    columns and, in the incremental twins, a boolean ``__new``; ``keys``
+    is the row's array of band keys, posexploded into ``(__band,
+    __key)`` buckets. Over-cap buckets are dropped
+    (:func:`_drop_hot_buckets`), then ONE join pairs the new rows with
+    all rows on the bucket.
+
+    The join keeps ``a.__id < b.__id OR NOT b.__new``: a new–new pair
+    once, a new–old pair once from its new side, an old–old pair never.
+    Rows without ``__new`` are all new — the full run is the incremental
+    run over an empty index — and the filter is the plain ``src_id <
+    dst_id``. With ``__new``, ``least``/``greatest`` canonicalise the
+    ids, while payload columns keep their join side (``<p>_a`` is the
+    new row's), so expressions over them must be symmetric.
+
+    ``where`` is a further join predicate over the payload columns,
+    ANDed after the pair-order test so that cheap test short-circuits
+    it (a filter added on the result lands in front of it instead).
+    ``shuffle_hash`` hints the join; each caller states both, since
+    the hint pays only on its capped full self-joins.
+
+    Returns ``(src_id, dst_id, <p>_a…, <p>_b…)``, ``src_id < dst_id``,
+    one row per colliding (pair, band): the caller verifies and drops
+    duplicates."""
+    new = ["__new"] if "__new" in rows.columns else []
+    banded = rows.select(
+        "__id", *payload, *new, F.posexplode(keys).alias("__band", "__key")
+    )
+    banded = _drop_hot_buckets(banded, ["__band", "__key"], max_bucket_size)
+
+    def side(df: DataFrame, s: str, id_name: str, *extra: str) -> DataFrame:
+        return df.select(
+            "__band", "__key", F.col("__id").alias(id_name),
+            *[F.col(p).alias(f"{p}_{s}") for p in payload], *extra,
+        )
+
+    a = side(banded.filter("__new") if new else banded, "a", "src_id")
+    b = side(banded, "b", "dst_id", *new)
+    joined = a.join(b.hint("shuffle_hash") if shuffle_hash else b, ["__band", "__key"])
+    keep = F.col("src_id") < F.col("dst_id")
+    if new:
+        keep = keep | ~F.col("__new")
+    if where is not None:
+        keep = keep & where
+    joined = joined.filter(keep)
+    if not new:
+        return joined
+    return joined.select(
+        F.least("src_id", "dst_id").alias("src_id"),
+        F.greatest("src_id", "dst_id").alias("dst_id"),
+        *[f"{p}_{s}" for s in "ab" for p in payload],
+    )
+
+
+# ---------------------------------------------------------------------------
 # Exact dedup
 # ---------------------------------------------------------------------------
 
@@ -266,6 +334,33 @@ def minhash_signature_cols(
     )
 
 
+def _minhash_band_keys(bands: int) -> Column:
+    """The LSH band keys over :func:`minhash_signature_cols`' ``__h*``
+    columns: band b of r = NUM_HASHES/bands rows keys on ``xxhash64(b,
+    its r signature longs)`` — no per-row string building. The full run
+    and :func:`minhash_index` share it, so their keys agree."""
+    assert NUM_HASHES % bands == 0
+    r = NUM_HASHES // bands
+    return F.array(
+        *[
+            F.xxhash64(F.lit(b), *[F.col(f"__h{i}") for i in range(b * r, (b + 1) * r)])
+            for b in range(bands)
+        ]
+    )
+
+
+def _size_ratio_ok(n: str, threshold: float) -> Column:
+    """Lossless size-ratio bound over the bucket join's set sizes
+    ``<n>_a``/``<n>_b``: |A∩B| ≤ min(|A|,|B|) and |A∪B| ≥ max(|A|,|B|),
+    so J ≤ min/max — a pair failing min ≥ threshold·max can never
+    verify. Two int compares inside the join kill a boilerplate
+    mega-cluster's near-miss candidates before they cost an exact
+    intersection. (The 1e-6 slack mirrors the micro_threshold
+    convention in the final filter.)"""
+    na, nb = F.col(f"{n}_a"), F.col(f"{n}_b")
+    return F.least(na, nb) >= F.lit(threshold - 1e-6) * F.greatest(na, nb)
+
+
 def minhash_near_dup_pairs(
     docs: DataFrame,
     *,
@@ -294,9 +389,6 @@ def minhash_near_dup_pairs(
     the threshold pushed *into* candidate verification rather than
     filtered post-hoc, and canonical (src<dst) pairs (SURVEY.md §2.7-3).
     """
-    assert NUM_HASHES % bands == 0
-    rows_per_band = NUM_HASHES // bands
-
     # Hash the shingle STRINGS to 64-bit longs up front; everything
     # downstream — the 32 per-seed minhashes AND the exact verification
     # intersections — runs over the long sets, so the per-byte string
@@ -370,54 +462,13 @@ def minhash_near_dup_pairs(
     # exchange). Measured at the 10× tier: 14.8s → 6.9s solo-warm.
     # The attach join below is exchange-free: sig's aggregation and
     # the repartitioned base are both already hash-partitioned by
-    # __id. Band key = xxhash64 over the band's signature longs
-    # directly — no per-row string building.
-    sigarr = sig.join(base, on="__id")
-    banded = sigarr.select(
-        "__id",
-        "__nsh",
-        "__shingles",
-        F.posexplode(
-            F.array(
-                *[
-                    F.xxhash64(
-                        F.lit(b),
-                        *[
-                            F.col(f"__h{i}")
-                            for i in range(b * rows_per_band, (b + 1) * rows_per_band)
-                        ],
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("__band", "__key"),
-    )
-
-    # Cap degenerate buckets. Post-collapse this counts distinct
-    # shingle-SETS per bucket (replication can't trip it); what remains
-    # capped is genuine diversity collisions (e.g. many distinct
-    # boilerplate variants sharing a band).
-    banded = _drop_hot_buckets(banded, ["__band", "__key"], max_bucket_size)
-
-    # Size-ratio prefilter (LOSSLESS), applied inside the bucket join:
-    # |A∩B| ≤ min(|A|,|B|) and |A∪B| ≥ max(|A|,|B|), so J ≤ min/max —
-    # a pair failing min ≥ threshold·max can never verify. Two int
-    # compares kill a boilerplate mega-cluster's near-miss candidates
-    # before they cost an exact intersection. (The 1e-6 slack mirrors
-    # the micro_threshold convention in the final filter.)
-    a = banded.select(
-        F.col("__band"), F.col("__key"),
-        F.col("__id").alias("src_id"), F.col("__nsh").alias("__na"),
-        F.col("__shingles").alias("__sh_a"),
-    )
-    b = banded.select(
-        F.col("__band"), F.col("__key"),
-        F.col("__id").alias("dst_id"), F.col("__nsh").alias("__nb"),
-        F.col("__shingles").alias("__sh_b"),
-    )
-    size_ok = F.least(F.col("__na"), F.col("__nb")) >= (
-        F.lit(threshold - 1e-6) * F.greatest(F.col("__na"), F.col("__nb"))
-    )
+    # __id.
+    #
+    # The cap (post-collapse) counts distinct shingle-SETS per bucket
+    # (replication can't trip it); what remains capped is genuine
+    # diversity collisions (e.g. many distinct boilerplate variants
+    # sharing a band).
+    #
     # ``shuffle_hash`` hint: the bucket self-join's sides are
     # symmetric row streams with unique-ish keys — a sort-merge join
     # pays two O(n log n) sorts of bands×reps rows for no benefit,
@@ -432,8 +483,10 @@ def minhash_near_dup_pairs(
     # per-partition slice must fit in executor memory — it now carries
     # the shingle arrays (~1.2 KB × bands per rep / shuffle
     # partitions), still the hash-aggregate footprint class.
-    joined = a.join(b.hint("shuffle_hash"), on=["__band", "__key"], how="inner").filter(
-        (F.col("src_id") < F.col("dst_id")) & size_ok
+    joined = bucket_self_join(
+        sig.join(base, on="__id"), _minhash_band_keys(bands), max_bucket_size,
+        "__nsh", "__shingles",
+        where=_size_ratio_ok("__nsh", threshold), shuffle_hash=True,
     )
 
     # Verify INLINE over the same 64-bit-hashed shingle sets the
@@ -449,7 +502,8 @@ def minhash_near_dup_pairs(
     # volume).
     pairs = (
         joined.withColumn(
-            "jaccard_micro", jaccard_micro_tokens(F.col("__sh_a"), F.col("__sh_b"))
+            "jaccard_micro",
+            jaccard_micro_tokens(F.col("__shingles_a"), F.col("__shingles_b")),
         )
         .filter(F.col("jaccard_micro") >= micro_threshold(threshold))
         .select("src_id", "dst_id", "jaccard_micro")
@@ -484,7 +538,6 @@ def minhash_index(docs: DataFrame, *, shingle_n: int = 3) -> DataFrame:
     — collision probability per set pair ≈ 2⁻¹²⁸, far below the
     hashed-shingle verify's own documented ~1e-16 collision class.
     """
-    rows_per_band = NUM_HASHES // INDEX_BANDS
     base = docs.select(
         "doc_id",
         F.array_sort(
@@ -492,24 +545,12 @@ def minhash_index(docs: DataFrame, *, shingle_n: int = 3) -> DataFrame:
         ).alias("shingles"),
     )
     sig = minhash_signature_cols(base, "doc_id", F.col("shingles"), NUM_HASHES)
-    band_keys = F.array(
-        *[
-            F.xxhash64(
-                F.lit(b),
-                *[
-                    F.col(f"__h{i}")
-                    for i in range(b * rows_per_band, (b + 1) * rows_per_band)
-                ],
-            )
-            for b in range(INDEX_BANDS)
-        ]
-    )
     return (
         base.join(
             sig.select(
                 F.col("__id").alias("doc_id"),
                 F.col("__nsh").alias("nsh"),
-                band_keys.alias("band_keys"),
+                _minhash_band_keys(INDEX_BANDS).alias("band_keys"),
             ),
             "doc_id",
         ).withColumn(
@@ -599,44 +640,23 @@ def minhash_incremental_pairs(
         # run) for the banding explode, hot-bucket count and bucket join.
         work = spread(
             g.select(
-                F.col("__rep").alias("doc_id"), "nsh", "band_keys",
+                F.col("__rep").alias("__id"), "nsh", "band_keys",
                 F.col("__has_new").alias("__new"),
             ),
-            F.col("doc_id"),
+            F.col("__id"),
         )
     else:
-        work = all_idx.select("doc_id", "nsh", "band_keys", "__new")
+        work = all_idx.select(F.col("doc_id").alias("__id"), "nsh", "band_keys", "__new")
 
-    banded = work.select(
-        "doc_id",
-        "nsh",
-        "__new",
-        F.posexplode("band_keys").alias("__band", "__key"),
-    )
-    # Post-collapse this counts distinct shingle-sets per bucket — the
-    # same population the default full run caps.
-    banded = _drop_hot_buckets(banded, ["__band", "__key"], max_bucket_size)
-
-    # Asymmetric bucket join: only rows (groups) touching the new batch
-    # on the build side — old-vs-old collisions never become pairs.
-    a = banded.filter("__new").select(
-        "__band", "__key",
-        F.col("doc_id").alias("__ida"), F.col("nsh").alias("__na"),
-    )
-    b = banded.select(
-        "__band", "__key",
-        F.col("doc_id").alias("__idb"), F.col("nsh").alias("__nb"),
-    )
-    size_ok = F.least(F.col("__na"), F.col("__nb")) >= (
-        F.lit(threshold - 1e-6) * F.greatest(F.col("__na"), F.col("__nb"))
-    )
+    # Post-collapse the cap counts distinct shingle-sets per bucket — the
+    # same population the default full run caps. Ids and set sizes
+    # only through the join; old-vs-old collisions never become pairs.
     candidates = (
-        a.join(b, on=["__band", "__key"], how="inner")
-        .filter((F.col("__ida") != F.col("__idb")) & size_ok)
-        .select(
-            F.least("__ida", "__idb").alias("src_id"),
-            F.greatest("__ida", "__idb").alias("dst_id"),
+        bucket_self_join(
+            work, F.col("band_keys"), max_bucket_size, "nsh",
+            where=_size_ratio_ok("nsh", threshold), shuffle_hash=False,
         )
+        .select("src_id", "dst_id")
         .dropDuplicates(["src_id", "dst_id"])
     )
 
@@ -748,6 +768,21 @@ def simhash_near_dup_pairs(
     )
 
 
+def signature_block_keys(sh: Column, bits: int, blocks: int) -> Column:
+    """The pigeonhole bucket keys of a ``bits``-wide signature long:
+    its ``blocks`` bit-blocks, low block first, as ``array<long>``. Two
+    signatures within Hamming distance < ``blocks`` agree exactly on at
+    least one block. Shared by the batch signature joins, the pHash
+    stream-static index and the streaming near-dup suppressor, so every
+    tier buckets a signature the same way."""
+    assert bits % blocks == 0
+    block_bits = bits // blocks
+    mask = F.lit((1 << block_bits) - 1).cast("long")
+    return F.array(
+        *[F.shiftright(sh, b * block_bits).bitwiseAND(mask) for b in range(blocks)]
+    )
+
+
 def signature_band_pairs(
     sigs: DataFrame,
     *,
@@ -760,53 +795,46 @@ def signature_band_pairs(
     """Banded Hamming-ball self-join over ANY ``(__id, __sh)`` signature
     frame (simhash text signatures, image perceptual hashes, …): by
     pigeonhole, two signatures within Hamming distance < ``blocks``
-    agree exactly on ≥1 of the ``blocks`` bit-blocks, so block equality
-    is the bucket key and the full-signature ``bit_count(xor)`` verify
-    runs only inside buckets. Hot buckets are deterministically dropped
-    at ``max_bucket_size`` (recall/cost cap, same contract as minhash).
+    agree exactly on ≥1 of the ``blocks`` bit-blocks
+    (:func:`signature_block_keys`), so block equality is the bucket key
+    and the full-signature ``bit_count(xor)`` verify runs only inside
+    buckets. Hot buckets are deterministically dropped at
+    ``max_bucket_size`` (recall/cost cap, same contract as minhash).
 
     ``collapse_exact``: identical signatures band as one representative
     (:func:`exact_groups` → :func:`expand_groups`; intra-group pairs are
     Hamming 0), so the hot-bucket cap counts distinct SIGNATURES and
     replication can't evict genuine neighbours.
 
+    A boolean ``__new`` column in ``sigs`` (set by
+    :func:`signature_incremental_pairs`) restricts the output to pairs
+    touching a new row; without it every row is new.
+
     Emits (src_id, dst_id, hamming) with src_id < dst_id.
     """
-    assert bits % blocks == 0
     assert max_hamming < blocks, "pigeonhole completeness needs max_hamming < blocks"
-    block_bits = bits // blocks
-    mask = (1 << block_bits) - 1
+    new_col = "__new" if "__new" in sigs.columns else None
 
     memb = None
     if collapse_exact:
-        g, memb = exact_groups(sigs, ["__sh"])
-        sigs = g.select(F.col("__rep").alias("__id"), "__sh")
+        g, memb = exact_groups(sigs, ["__sh"], new_col=new_col)
+        sigs = g.select(
+            F.col("__rep").alias("__id"), "__sh",
+            *([F.col("__has_new").alias("__new")] if new_col else []),
+        )
 
-    banded = sigs.select(
-        "__id",
-        "__sh",
-        F.posexplode(
-            F.array(
-                *[
-                    F.shiftright(F.col("__sh"), b * block_bits).bitwiseAND(
-                        F.lit(mask).cast("long")
-                    )
-                    for b in range(blocks)
-                ]
-            )
-        ).alias("__block", "__key"),
-    )
-    banded = _drop_hot_buckets(banded, ["__block", "__key"], max_bucket_size)
-    a = banded.select("__block", "__key", F.col("__id").alias("src_id"), F.col("__sh").alias("__sh_a"))
-    b = banded.select("__block", "__key", F.col("__id").alias("dst_id"), F.col("__sh").alias("__sh_b"))
-    # shuffle_hash: same rationale as the minhash bucket join (no sort
-    # for a join feeding an unsorted dedup agg; round 14)
+    # shuffle_hash on the full self-join: same rationale as the minhash
+    # bucket join (no sort for a join feeding an unsorted dedup agg;
+    # round 14)
     pairs = (
-        a.join(b.hint("shuffle_hash"), on=["__block", "__key"], how="inner")
-        .filter(F.col("src_id") < F.col("dst_id"))
+        bucket_self_join(
+            sigs, signature_block_keys(F.col("__sh"), bits, blocks), max_bucket_size,
+            "__sh", where=None, shuffle_hash=new_col is None,
+        )
         .select(
             "src_id",
             "dst_id",
+            # xor is symmetric, so it needs no side of the canonical pair
             F.bit_count(F.col("__sh_a").bitwiseXOR(F.col("__sh_b"))).alias("hamming"),
         )
         # filter BEFORE the pair-dedup shuffle (r17): hamming is
@@ -845,72 +873,18 @@ def signature_incremental_pairs(
     setting both sides — whose pairs include at least one new id
     (pinned pair-for-pair by tests/test_operators.py::
     test_signature_incremental_matches_full; requires index ids and new
-    ids disjoint, same bits/blocks). ``collapse_exact`` runs the
-    :func:`exact_groups` → :func:`expand_groups` tier over old ∪ new
-    grouped by the signature long itself (no set_key indirection).
+    ids disjoint, same bits/blocks). It IS that operator, run over
+    old ∪ new with the new rows flagged; ``collapse_exact`` groups by
+    the signature long itself (no set_key indirection).
     """
-    assert bits % blocks == 0
-    assert max_hamming < blocks, "pigeonhole completeness needs max_hamming < blocks"
-    block_bits = bits // blocks
-    mask = (1 << block_bits) - 1
-
     all_sigs = (
         index.select("__id", "__sh").withColumn("__new", F.lit(False))
         .unionByName(new_sigs.select("__id", "__sh").withColumn("__new", F.lit(True)))
     )
-
-    memb = None
-    if collapse_exact:
-        g, memb = exact_groups(all_sigs, ["__sh"], new_col="__new")
-        work = g.select(
-            F.col("__rep").alias("__id"), "__sh", F.col("__has_new").alias("__new")
-        )
-    else:
-        work = all_sigs
-
-    banded = work.select(
-        "__id",
-        "__sh",
-        "__new",
-        F.posexplode(
-            F.array(
-                *[
-                    F.shiftright(F.col("__sh"), b * block_bits).bitwiseAND(
-                        F.lit(mask).cast("long")
-                    )
-                    for b in range(blocks)
-                ]
-            )
-        ).alias("__block", "__key"),
+    return signature_band_pairs(
+        all_sigs, bits=bits, blocks=blocks, max_hamming=max_hamming,
+        max_bucket_size=max_bucket_size, collapse_exact=collapse_exact,
     )
-    banded = _drop_hot_buckets(banded, ["__block", "__key"], max_bucket_size)
-
-    a = banded.filter("__new").select(
-        "__block", "__key",
-        F.col("__id").alias("__ida"), F.col("__sh").alias("__sh_a"),
-    )
-    b = banded.select(
-        "__block", "__key",
-        F.col("__id").alias("__idb"), F.col("__sh").alias("__sh_b"),
-    )
-    pairs = (
-        a.join(b, on=["__block", "__key"], how="inner")
-        .filter(F.col("__ida") != F.col("__idb"))
-        .select(
-            F.least("__ida", "__idb").alias("src_id"),
-            F.greatest("__ida", "__idb").alias("dst_id"),
-            # xor is symmetric, so canonicalizing ids leaves it intact
-            F.bit_count(F.col("__sh_a").bitwiseXOR(F.col("__sh_b"))).alias("hamming"),
-        )
-        # filter BEFORE the pair-dedup shuffle (r17): hamming is
-        # deterministic per pair, so dedup-then-filter ≡
-        # filter-then-dedup — but only surviving pairs shuffle.
-        .filter(F.col("hamming") <= max_hamming)
-        .dropDuplicates(["src_id", "dst_id"])
-    )
-    if memb is None:
-        return pairs
-    return expand_groups(pairs, memb, F.lit(0).cast("integer"))
 
 
 # ---------------------------------------------------------------------------

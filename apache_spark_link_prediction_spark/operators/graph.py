@@ -116,7 +116,9 @@ def pagerank(
     Per iteration: one equi-join (ranks ⋈ edges on src) + one
     aggregation (sum contributions by dst) — both shuffle on node id,
     so a cluster co-partitions consecutive iterations on the same key.
-    The edge+outdegree join is computed once and cached; N enters the
+    The edge+outdegree join is computed once (a lazy
+    ``localCheckpoint``, reclaimed once the result is garbage-collected;
+    a ``cache()`` would have no unpersist point); N enters the
     plan as a 1-row broadcast cross-join (never a driver scalar).
     Dangling nodes (outdeg 0) keep their base-rank term but leak their
     damped mass, as in the classic formulation without dangling
@@ -140,8 +142,8 @@ def pagerank(
         .distinct()
     )
     outdeg = e.groupBy("__u").agg(F.count(F.lit(1)).alias("__deg"))
-    # one cached (src, dst, outdeg) fact table feeds every iteration
-    fanout = e.join(outdeg, on="__u").cache()
+    # one (src, dst, outdeg) fact table feeds every iteration
+    fanout = e.join(outdeg, on="__u").localCheckpoint(eager=False)
     n_df = F.broadcast(nodes.agg(F.count(F.lit(1)).cast("double").alias("__n")))
 
     ranks = nodes.crossJoin(n_df).select(

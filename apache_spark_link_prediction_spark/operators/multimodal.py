@@ -26,9 +26,11 @@ import struct
 from collections.abc import Callable, Iterator
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .dedup import signature_band_pairs, signature_block_keys
 
 # Typed media metadata carried alongside every payload.
 MEDIA_SCHEMA = T.StructType(
@@ -824,30 +826,19 @@ def image_phash(media: DataFrame) -> DataFrame:
 
 
 # pHash pigeonhole shape: 8 blocks of 8 bits, so two 64-bit hashes
-# within Hamming distance 7 share at least one block key.
+# within Hamming distance 7 share at least one block key
+# (dedup.signature_block_keys builds them for every pHash tier).
 _PHASH_BLOCKS = 8
 _PHASH_MAX_HAMMING = 7
-
-
-def _phash_block_keys(phash: Column) -> Column:
-    """``(__block, __key)`` posexplode of a 64-bit hash's 8-bit blocks."""
-    return F.posexplode(
-        F.array(
-            *[
-                F.shiftright(phash, b * 8).bitwiseAND(F.lit(0xFF).cast("long"))
-                for b in range(_PHASH_BLOCKS)
-            ]
-        )
-    ).alias("__block", "__key")
 
 
 def phash_near_dup_pairs(media: DataFrame) -> DataFrame:
     """Image near-duplicate pairs (Hamming ≤ 7): perceptual hash →
     banded Hamming join (operators.dedup.signature_band_pairs — the
     same pigeonhole machinery as SimHash text dedup, reused on image
-    signatures). Emits (src_id, dst_id, hamming), src_id < dst_id."""
-    from .dedup import signature_band_pairs
-
+    signatures: ``signature_block_keys`` buckets, the shared
+    ``bucket_self_join``). Emits (src_id, dst_id, hamming), src_id <
+    dst_id."""
     sigs = image_phash(media).filter(F.col("phash").isNotNull()).select(
         F.col("media_id").alias("__id"), F.col("phash").alias("__sh")
     )
@@ -1055,7 +1046,11 @@ def phash_block_index(sigs: DataFrame) -> DataFrame:
     a stream-static near-dup join. |index| = 8 × |sigs|; at 100 TB
     of media this is still 8 longs per asset, a dimension table."""
     return sigs.filter(F.col("phash").isNotNull()).select(
-        "media_id", F.col("phash").alias("__idx_ph"), _phash_block_keys(F.col("phash"))
+        "media_id",
+        F.col("phash").alias("__idx_ph"),
+        F.posexplode(signature_block_keys(F.col("phash"), 64, _PHASH_BLOCKS)).alias(
+            "__block", "__key"
+        ),
     )
 
 
@@ -1074,7 +1069,13 @@ def streaming_phash_match(files: DataFrame, index: DataFrame) -> DataFrame:
     makes this the always-on ingest tier (the stateful suppressor
     handles within-stream dups)."""
     sigs = image_phash_by_path(files).filter(F.col("phash").isNotNull())
-    banded = sigs.select("path", "phash", _phash_block_keys(F.col("phash")))
+    banded = sigs.select(
+        "path",
+        "phash",
+        F.posexplode(signature_block_keys(F.col("phash"), 64, _PHASH_BLOCKS)).alias(
+            "__block", "__key"
+        ),
+    )
     joined = banded.join(index, on=["__block", "__key"], how="left")
     hamming = F.bit_count(F.col("phash").bitwiseXOR(F.col("__idx_ph")))
     return joined.select(

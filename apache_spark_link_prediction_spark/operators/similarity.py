@@ -25,7 +25,13 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.vectors import cosine_similarity
-from .dedup import _drop_hot_buckets, connected_components, exact_groups, expand_groups
+from .dedup import (
+    _drop_hot_buckets,
+    bucket_self_join,
+    connected_components,
+    exact_groups,
+    expand_groups,
+)
 
 # Decimal places cosines are rounded to before ranking (top-k family) or
 # thresholding (near-dup family), so last-bit float noise cannot flip a
@@ -805,6 +811,25 @@ def ivf_pq_top_k(
     )
 
 
+def _cosine_verified(candidates: DataFrame, vecs: DataFrame, threshold: float) -> DataFrame:
+    """Distinct candidate ``(src_id, dst_id)`` pairs verified by exact
+    cosine ≥ ``threshold`` over ``vecs`` ``(vec_id, embedding)``: the
+    vectors join in once per side, after the pair dedup. Emits
+    ``(src_id, dst_id, cosine)``."""
+    def side(id_name: str, vec_name: str) -> DataFrame:
+        return vecs.select(F.col("vec_id").alias(id_name), F.col("embedding").alias(vec_name))
+
+    return (
+        candidates.select("src_id", "dst_id")
+        .dropDuplicates(["src_id", "dst_id"])
+        .join(side("src_id", "__va"), on="src_id")
+        .join(side("dst_id", "__vb"), on="dst_id")
+        .withColumn("cosine", F.round(cosine_similarity("__va", "__vb"), _DUP_DIGITS))
+        .filter(F.col("cosine") >= threshold)
+        .select("src_id", "dst_id", "cosine")
+    )
+
+
 def embedding_near_dup_pairs(
     corpus: DataFrame,
     *,
@@ -844,27 +869,19 @@ def embedding_near_dup_pairs(
         ).filter(F.col("cosine") >= threshold)
     # Ids-only through the band explode + bucket self-join + pair
     # dropDuplicates; vectors rejoin once per side at verification
-    # (same pattern as dedup.minhash_near_dup_pairs).
-    banded = corpus.select(
-        F.col("vec_id").alias("__id"),
-        F.posexplode(_bucket_keys(v, tables=tables, planes=planes)).alias(
-            "__table", "__key"
+    # (as in dedup.minhash_incremental_pairs — the MinHash full run
+    # instead carries its shingle arrays into the join and verifies
+    # there).
+    pairs = _cosine_verified(
+        bucket_self_join(
+            corpus.select(F.col("vec_id").alias("__id"), v),
+            _bucket_keys(v, tables=tables, planes=planes),
+            max_bucket_size,
+            where=None,
+            shuffle_hash=False,
         ),
-    )
-    banded = _drop_hot_buckets(banded, ["__table", "__key"], max_bucket_size)
-    a = banded.select("__table", "__key", F.col("__id").alias("src_id"))
-    b = banded.select("__table", "__key", F.col("__id").alias("dst_id"))
-    vecs = corpus.select(F.col("vec_id").alias("__vid"), v.alias("__vec"))
-    pairs = (
-        a.join(b, on=["__table", "__key"], how="inner")
-        .filter(F.col("src_id") < F.col("dst_id"))
-        .select("src_id", "dst_id")
-        .dropDuplicates(["src_id", "dst_id"])
-        .join(vecs.select(F.col("__vid").alias("src_id"), F.col("__vec").alias("__va")), on="src_id")
-        .join(vecs.select(F.col("__vid").alias("dst_id"), F.col("__vec").alias("__vb")), on="dst_id")
-        .withColumn("cosine", F.round(cosine_similarity("__va", "__vb"), _DUP_DIGITS))
-        .filter(F.col("cosine") >= threshold)
-        .select("src_id", "dst_id", "cosine")
+        corpus,
+        threshold,
     )
     if memb is None:
         return pairs
@@ -1299,7 +1316,7 @@ def embedding_incremental_pairs(
             new_col="__new",
         )
         work = g.select(
-            F.col("__rep").alias("vec_id"), "bucket_keys",
+            F.col("__rep").alias("__id"), "bucket_keys",
             F.col("__has_new").alias("__new"),
         )
         intra = (
@@ -1316,33 +1333,14 @@ def embedding_incremental_pairs(
             .filter(F.col("cosine") >= threshold)
         )
     else:
-        work = all_idx.select("vec_id", "bucket_keys", "__new")
+        work = all_idx.select(F.col("vec_id").alias("__id"), "bucket_keys", "__new")
 
-    banded = work.select(
-        "vec_id",
-        "__new",
-        F.posexplode("bucket_keys").alias("__table", "__key"),
-    )
-    banded = _drop_hot_buckets(banded, ["__table", "__key"], 1000)
-
-    a = banded.filter("__new").select(
-        "__table", "__key", F.col("vec_id").alias("__ida")
-    )
-    b = banded.select("__table", "__key", F.col("vec_id").alias("__idb"))
-    vecs = all_idx.select(F.col("vec_id").alias("__vid"), F.col("embedding").alias("__vec"))
-    pairs = (
-        a.join(b, on=["__table", "__key"], how="inner")
-        .filter(F.col("__ida") != F.col("__idb"))
-        .select(
-            F.least("__ida", "__idb").alias("src_id"),
-            F.greatest("__ida", "__idb").alias("dst_id"),
-        )
-        .dropDuplicates(["src_id", "dst_id"])
-        .join(vecs.select(F.col("__vid").alias("src_id"), F.col("__vec").alias("__va")), on="src_id")
-        .join(vecs.select(F.col("__vid").alias("dst_id"), F.col("__vec").alias("__vb")), on="dst_id")
-        .withColumn("cosine", F.round(cosine_similarity("__va", "__vb"), _DUP_DIGITS))
-        .filter(F.col("cosine") >= threshold)
-        .select("src_id", "dst_id", "cosine")
+    pairs = _cosine_verified(
+        bucket_self_join(
+            work, F.col("bucket_keys"), 1000, where=None, shuffle_hash=False
+        ),
+        all_idx,
+        threshold,
     )
     if memb is None:
         return pairs

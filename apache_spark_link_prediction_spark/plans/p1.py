@@ -118,10 +118,13 @@ def run_p1(
         authors_col="authors",
         fill_cols=["abstract", "title", "authors", "journal"],
     )
-    # Cache: both the train-side and test-side double joins consume this
-    # (the reference recomputes the whole preProcess lineage twice —
-    # Predictor.scala:360-361; SURVEY.md §4).
-    processed = processed.cache()
+    # Materialize once: both the train-side and test-side double joins
+    # consume this (the reference recomputes the whole preProcess
+    # lineage twice — Predictor.scala:360-361; SURVEY.md §4). A lazy
+    # localCheckpoint, not ``cache()``: the returned predictions read it
+    # after this function returns, so no unpersist can be placed; the
+    # checkpoint is reclaimed once the result is garbage-collected.
+    processed = processed.localCheckpoint(eager=False)
 
     labeled_test = label_by_existence(test_pairs, truth_edges)
     train_a = assemble_features(pair_features(train_edges, processed))

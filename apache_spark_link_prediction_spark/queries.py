@@ -815,9 +815,11 @@ def dedup_simhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     documents with doc_id % 5 == 0 play the new batch against a
     persisted one-long-per-doc simhash index (the cheapest index in
     the repo — signature_incremental_pairs works over ANY (__id, __sh)
-    frame, so the same path serves pHash image ingest). Same
-    bits/blocks/cap as dedup_simhash; pinned pair-for-pair against the
-    full run restricted to touching-new pairs by
+    frame, so the same path serves pHash image ingest). It is
+    signature_band_pairs over old ∪ new with the new rows flagged: the
+    same signature_block_keys buckets and bucket_self_join as
+    dedup_simhash, with the same bits/blocks; pinned pair-for-pair
+    against the full run restricted to touching-new pairs by
     tests/test_operators.py::test_signature_incremental_matches_full."""
     from .operators.dedup import signature_incremental_pairs, simhash_cols
 
@@ -4659,8 +4661,9 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     graph_triangle_count). The iterative-algorithm pattern GraphX's
     Pregel would run (reference build.sbt:13 pulls graphx but never
     uses it); here each round is one shuffle — edges pre-joined with
-    degree are cached so iterations reuse the same co-partitioned
-    lineage.
+    degree are materialized once (a lazy ``localCheckpoint``, reclaimed
+    with the returned plan; a ``cache()`` would have no unpersist point)
+    so iterations reuse the same co-partitioned rows.
 
     Oracle: the same three rounds unrolled as DuckDB CTEs; rounded to
     5 decimals so both engines' float-sum orderings agree. Undirected
@@ -4676,7 +4679,7 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         e.selectExpr("v AS src", "u AS dst")
     )
     deg = ed.groupBy("src").agg(F.count(F.lit(1)).cast("double").alias("deg"))
-    edges_w = ed.join(deg, on="src").cache()
+    edges_w = ed.join(deg, on="src").localCheckpoint(eager=False)
     ranks = deg.select(F.col("src").alias("node"), F.lit(1.0).alias("pr"))
     for _ in range(3):
         ranks = (

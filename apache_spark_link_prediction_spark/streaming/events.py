@@ -468,7 +468,8 @@ def streaming_neardup_suppress(docs: DataFrame) -> DataFrame:
     of batch ``signature_band_pairs``: each arriving document's 32-bit
     SimHash (computed map-side with the single-expression
     ``operators.dedup.simhash`` — no extra shuffle) is exploded into its
-    4 8-bit pigeonhole blocks; per (block, key) bucket a bounded
+    4 8-bit pigeonhole blocks (``operators.dedup.signature_block_keys``,
+    the batch join's own buckets); per (block, key) bucket a bounded
     GroupState of previously-admitted (signature, keeper) pairs flags
     the document if its full signature is within Hamming 3 of any of
     them.
@@ -498,20 +499,13 @@ def streaming_neardup_suppress(docs: DataFrame) -> DataFrame:
     uses NoTimeout."""
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    from ..operators.dedup import simhash
+    from ..operators.dedup import signature_block_keys, simhash
 
     sig = docs.select(F.col("doc_id"), simhash("text", 32).alias("__sh"))
     banded = sig.select(
         "doc_id",
         "__sh",
-        F.posexplode(
-            F.array(
-                *[
-                    F.shiftright(F.col("__sh"), b * 8).bitwiseAND(F.lit(0xFF).cast("long"))
-                    for b in range(4)
-                ]
-            )
-        ).alias("__block", "__key"),
+        F.posexplode(signature_block_keys(F.col("__sh"), 32, 4)).alias("__block", "__key"),
     )
 
     def fn(key, pdfs, state: "GroupState"):

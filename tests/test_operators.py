@@ -27,6 +27,14 @@ from apache_spark_link_prediction_spark.operators.similarity import (
 )
 
 
+def _rows(df) -> set[tuple]:
+    return {tuple(r) for r in df.collect()}
+
+
+def _fields(df) -> list[tuple]:
+    return [(f.name, f.dataType) for f in df.schema]
+
+
 # ---------------------------------------------------------------------------
 # Joins
 # ---------------------------------------------------------------------------
@@ -204,6 +212,49 @@ def test_minhash_incremental_matches_full(spark, docs):
         }
         assert inc == full, f"divergence at collapse_exact={collapse_exact}"
         assert inc, f"fixture produced no pairs touching the new batch ({collapse_exact=})"
+        # a full run is the incremental run over an empty index
+        everything = minhash_near_dup_pairs(
+            docs, shingle_n=1, threshold=0.6, collapse_exact=collapse_exact
+        )
+        from_empty = minhash_incremental_pairs(
+            minhash_index(docs.limit(0), shingle_n=1), docs, shingle_n=1,
+            threshold=0.6, collapse_exact=collapse_exact,
+        )
+        assert _rows(from_empty) == _rows(everything), collapse_exact
+        # an empty batch touches nothing
+        none_new = minhash_incremental_pairs(
+            idx, docs.limit(0), shingle_n=1, threshold=0.6, collapse_exact=collapse_exact
+        )
+        assert none_new.count() == 0
+        assert _fields(none_new) == _fields(everything)
+
+
+def test_bucket_self_join_candidate_count_on_one_bucket(spark):
+    """One hand-built bucket: k all-new rows emit k(k-1)/2 candidates,
+    each pair once; n new + o old rows emit n·o + n(n-1)/2 — every
+    new-new pair once (not twice), no old-old pair — all canonical
+    src_id < dst_id. Ids interleave so new-old pairs come both ways."""
+    from apache_spark_link_prediction_spark.operators.dedup import bucket_self_join
+
+    one_bucket = F.array(F.lit(7).cast("long"))
+    k = 6
+    rows = spark.range(k).select(F.col("id").alias("__id"))
+    got = bucket_self_join(
+        rows, one_bucket, 100, where=None, shuffle_hash=False
+    ).select("src_id", "dst_id").collect()
+    assert len(got) == len(set(got)) == k * (k - 1) // 2
+    assert all(r.src_id < r.dst_id for r in got)
+
+    n, o = 5, 4  # even ids are new
+    rows = spark.range(n + o).select(
+        F.col("id").alias("__id"), (F.col("id") % 2 == 0).alias("__new")
+    )
+    got = bucket_self_join(
+        rows, one_bucket, 100, where=None, shuffle_hash=False
+    ).select("src_id", "dst_id").collect()
+    assert len(got) == len(set(got)) == n * o + n * (n - 1) // 2
+    assert all(r.src_id < r.dst_id for r in got)
+    assert all(r.src_id % 2 == 0 or r.dst_id % 2 == 0 for r in got)
 
 
 def test_minhash_incremental_collapse_survives_hot_cluster(spark):
@@ -1341,6 +1392,13 @@ def test_signature_incremental_matches_full(spark, docs):
         }
         assert inc == full, f"divergence at collapse_exact={collapse}"
         assert inc, f"fixture produced no touching-new pairs ({collapse})"
+        shape = dict(bits=32, blocks=4, max_hamming=3, collapse_exact=collapse)
+        everything = signature_band_pairs(sigs, **shape)
+        from_empty = signature_incremental_pairs(sigs.limit(0), sigs, **shape)
+        assert _rows(from_empty) == _rows(everything), collapse
+        none_new = signature_incremental_pairs(old, sigs.limit(0), **shape)
+        assert none_new.count() == 0
+        assert _fields(none_new) == _fields(everything)
 
 
 def test_signature_incremental_collapse_survives_hot_cluster(spark):
@@ -1415,6 +1473,15 @@ def test_embedding_incremental_matches_full(spark, emb):
         }
         assert inc == full, f"divergence at collapse_exact={collapse}"
         assert inc, f"fixture produced no touching-new pairs ({collapse})"
+        shape = dict(threshold=0.4, tables=8, planes=4, collapse_exact=collapse)
+        everything = embedding_near_dup_pairs(corpus, **shape)
+        from_empty = embedding_incremental_pairs(
+            embedding_index(corpus.limit(0), tables=8, planes=4), corpus, **shape
+        )
+        assert _rows(from_empty) == _rows(everything), collapse
+        none_new = embedding_incremental_pairs(idx, corpus.limit(0), **shape)
+        assert none_new.count() == 0
+        assert _fields(none_new) == _fields(everything)
 
 
 def test_bpe_batched_matches_sequential(spark, docs):

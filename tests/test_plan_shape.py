@@ -223,6 +223,17 @@ def test_minhash_bucket_join_is_shuffled_hash_inline_verify(spark, sf_dir):
     assert "array_intersect" in plan
 
 
+def test_simhash_bucket_join_is_shuffled_hash(spark, sf_dir):
+    """dedup_simhash's capped bucket self-join keeps its
+    ``shuffle_hash`` hint, for the same reason as the MinHash twin
+    above (no sort for a join feeding an unsorted pair dedup). The hint
+    is the caller's choice passed into the shared bucket join, so this
+    pins that the signature family still passes it."""
+    plan = plan_of(QUERIES["dedup_simhash"](spark, sf_dir))
+    assert plan.count("ShuffledHashJoin") >= 1, plan[:3000]
+    assert "SortMergeJoin" not in plan
+
+
 def test_p2_bucket_join_carries_no_shuffle_hash_hint(spark, sf_dir):
     """VERDICT r17 item 5/6: the p2 fast-join's bucket self-join must
     stay UN-hinted — its buckets are uncapped (reference-parity

@@ -488,6 +488,25 @@ def test_modularity_invariants(spark, sf_dir):
     assert r.n_edges > 0
 
 
+def _persistent_rdds_after_gc(spark, baseline: int) -> int:
+    """The JVM's persistent-RDD count once the ContextCleaner has had
+    up to 20 s to drain it to ``baseline``. The reclaim is async AND
+    keyed to JVM weak refs: the Python gc releases the py4j handles,
+    System.gc() makes the JVM enqueue the now-unreachable RDD wrappers
+    for the cleaner."""
+    import gc
+    import time
+
+    deadline = time.time() + 20
+    while True:
+        gc.collect()
+        spark._jvm.System.gc()
+        n = spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+        if n <= baseline or time.time() > deadline:
+            return n
+        time.sleep(0.5)
+
+
 def test_lpa_and_modularity_leave_no_persistent_rdds(spark, sf_dir):
     """ADVICE r13: graph_label_propagation used to .cache() its edge
     frame with no reachable unpersist point, leaking one cached
@@ -498,26 +517,38 @@ def test_lpa_and_modularity_leave_no_persistent_rdds(spark, sf_dir):
     after running both operators and dropping the Python refs, the
     JVM's persistent-RDD map drains back to its baseline."""
     import gc
-    import time
 
-    sc = spark.sparkContext
     gc.collect()
-    baseline = sc._jsc.sc().getPersistentRDDs().size()
+    baseline = spark.sparkContext._jsc.sc().getPersistentRDDs().size()
     out = QUERIES["graph_modularity"](spark, sf_dir).collect()
     assert out
     out2 = QUERIES["graph_label_propagation"](spark, sf_dir).collect()
     assert out2
     del out, out2
-    # ContextCleaner reclaim is async AND keyed to JVM weak refs: the
-    # Python gc releases the py4j handles, System.gc() makes the JVM
-    # enqueue the now-unreachable RDD wrappers for the cleaner.
-    deadline = time.time() + 20
-    n = None
-    while time.time() < deadline:
-        gc.collect()
-        spark._jvm.System.gc()
-        n = sc._jsc.sc().getPersistentRDDs().size()
-        if n <= baseline:
-            break
-        time.sleep(0.5)
+    n = _persistent_rdds_after_gc(spark, baseline)
+    assert n <= baseline, f"leaked persistent RDDs: {n} > baseline {baseline}"
+
+
+def test_p1_and_pagerank_leave_no_persistent_rdds(spark, sf_dir):
+    """run_p1's preprocessed node table, pagerank's fan-out table and
+    graph_pagerank's weighted edges were ``cache()``'d with no place an
+    unpersist could go, so every run leaked one cached table for the
+    life of the session (the perfbench fit_and_probe session runs p1 on
+    every pass). After two runs of each, the persistent-RDD map and the
+    cache manager are back where they started."""
+    import gc
+
+    from apache_spark_link_prediction_spark.operators.graph import pagerank
+
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    gc.collect()
+    baseline = spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+    was_empty = cache.isEmpty()
+    edges = spark.createDataFrame([(1, 2), (2, 3), (3, 1), (3, 4)], "src long, dst long")
+    for _ in range(2):
+        assert QUERIES["p1_link_prediction"](spark, sf_dir).collect()
+        assert QUERIES["graph_pagerank"](spark, sf_dir).collect()
+        assert pagerank(edges, iterations=3).collect()
+    assert cache.isEmpty() == was_empty
+    n = _persistent_rdds_after_gc(spark, baseline)
     assert n <= baseline, f"leaked persistent RDDs: {n} > baseline {baseline}"
