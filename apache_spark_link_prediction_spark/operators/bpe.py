@@ -19,8 +19,8 @@ bounded driver state, the same scalar-per-iteration shape as an
 iterative solver's convergence check. The rewrite is a pure Catalyst
 fold (aggregate over the symbol array), so the whole loop stays
 JVM-side; the vocab frame is locally checkpointed each iteration to
-keep the unrolled plan flat (same rationale as pagerank's
-``truncate_lineage_every``).
+keep the unrolled plan flat (same rationale as the per-round
+checkpoint of ``dedup.connected_components``).
 
 Not SQL-oracle-expressible (iterative argmax); pinned instead by a
 pytest parity test against a pure-Python reference implementation.

@@ -33,9 +33,6 @@ from ..functions.textstats import doc_fingerprint, doc_rolling_hash
 # incremental join must agree on it (and the index on its band count).
 NUM_HASHES = 32
 INDEX_BANDS = 8
-# Round cap of the min-label propagation in connected_components — a
-# guard against non-convergence, not a tuning knob.
-CC_MAX_ROUNDS = 20
 
 
 def _drop_hot_buckets(banded: DataFrame, keys: list[str], max_bucket_size: int) -> DataFrame:
@@ -946,61 +943,86 @@ def ngram_jaccard_pairs(
 # ---------------------------------------------------------------------------
 
 def connected_components(pairs: DataFrame) -> DataFrame:
-    """Connected components by iterative min-label propagation over
+    """Connected components by min-label hooking with shortcutting over
     DataFrames (GraphX has no Python API; this is the PySpark-native
-    formulation, SURVEY.md §7-6).
+    formulation, SURVEY.md §7-6). The round is Liu & Tarjan's extended
+    connect + shortcut ("Simple Concurrent Labeling Algorithms for
+    Connected Components", SOSA 2019).
 
-    Each node's component starts as its own id; every round each node
-    adopts the min component among itself and its neighbors; converged
-    when no label changes. Rounds are O(diameter) — near-dup clusters
-    are dense and shallow, so few rounds in practice (``CC_MAX_ROUNDS``
-    asserts).
-    ``localCheckpoint`` truncates lineage each round (an iterative plan
-    would otherwise grow exponentially and re-execute from the scan).
+    The edge table holds both directions of every pair plus one
+    self-loop per node, so a node's own label is among those it takes
+    the minimum over and no separate initial label frame is needed.
+    Each round:
+
+    - hook: every node takes the min label ``m`` over its closed
+      neighborhood (one aggregate; its old label rides along as the
+      self-loop's), and ``m`` is also offered to the node's old parent
+      (the node its old label names; a second, |V|-row aggregate).
+      Hooking the parent moves a whole label tree at once — with the
+      node alone, a min id entering a chain at its far end walks back
+      one hop per round (a 199-leaf star joined to the high end of a
+      300-node path took ~100 rounds);
+    - shortcut: ``label ← label[label]`` (one self-join), so labels
+      jump along the trees instead of one hop per round.
+
+    Measured: 9–11 rounds on 1,000-node paths in id order, in random
+    order and zig-zag, and on that star-plus-path graph. The round's
+    frame is materialised with an eager ``localCheckpoint`` (an
+    iterative plan would otherwise grow every round and re-execute from
+    the scan), and convergence is read from its ``__changed`` column
+    without another shuffle. A label only ever moves to a smaller node
+    id of the same component, so every round that changes a label
+    lowers the label sum and the loop ends; it ends when no label
+    moves, which holds only when every edge joins equal labels.
 
     Returns (node_id, component) with component = min node id reachable.
     """
+    ends = [("src_id", "dst_id"), ("dst_id", "src_id"), ("src_id", "src_id"), ("dst_id", "dst_id")]
+    arcs = [F.struct(F.col(x).alias("a"), F.col(y).alias("b")) for x, y in ends]
     edges = (
-        pairs.select(F.col("src_id").alias("a"), F.col("dst_id").alias("b"))
-        .unionAll(pairs.select(F.col("dst_id").alias("a"), F.col("src_id").alias("b")))
+        pairs.select(F.inline(F.array(*arcs)))
         .dropDuplicates()
         .localCheckpoint(eager=True)
     )
-    labels = (
-        edges.select(F.col("a").alias("node_id"))
-        .dropDuplicates()
-        .withColumn("component", F.col("node_id"))
-        .localCheckpoint(eager=True)
+    labels = edges.filter(F.col("a") == F.col("b")).select(
+        F.col("a").alias("node_id"), F.col("b").alias("component")
     )
-    for _ in range(CC_MAX_ROUNDS):
-        neighbor_min = (
+    while True:
+        nbr = (
             edges.join(labels, edges["b"] == labels["node_id"])
-            .groupBy(F.col("a").alias("node_id"))
-            .agg(F.min("component").alias("nbr_component"))
+            .groupBy("a")
+            .agg(
+                F.min("component").alias("__min"),
+                F.min(F.when(F.col("a") == F.col("b"), F.col("component"))).alias("__old"),
+            )
         )
-        new_labels = (
-            labels.join(neighbor_min, on="node_id", how="left")
+        # The parent's row carries the parent's own id as its "old"
+        # label: labels never exceed node ids, so the min over its rows
+        # is still the parent's old label.
+        hooked = (
+            nbr.select(
+                F.inline(
+                    F.array(
+                        F.struct(F.col("a").alias("node_id"), "__min", "__old"),
+                        F.struct(F.col("__old").alias("node_id"), "__min", "__old"),
+                    )
+                )
+            )
+            .groupBy("node_id")
+            .agg(F.min("__min").alias("__hook"), F.min("__old").alias("__old"))
+        )
+        parent = hooked.select(F.col("node_id").alias("__p"), F.col("__hook").alias("component"))
+        labels = (
+            hooked.join(parent, hooked["__hook"] == parent["__p"])
             .select(
                 "node_id",
-                F.least(
-                    F.col("component"), F.coalesce(F.col("nbr_component"), F.col("component"))
-                ).alias("component"),
+                "component",
+                (F.col("component") != F.col("__old")).alias("__changed"),
             )
             .localCheckpoint(eager=True)
         )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), on="node_id")
-            .filter(F.col("n.component") != F.col("o.component"))
-            .limit(1)
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    else:
-        raise RuntimeError(f"connected_components: no convergence in {CC_MAX_ROUNDS} rounds")
-    return labels
+        if labels.filter(F.col("__changed")).isEmpty():
+            return labels.select("node_id", "component")
 
 
 def dedup_clusters(docs: DataFrame, pairs: DataFrame) -> DataFrame:

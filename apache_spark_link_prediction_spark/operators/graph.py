@@ -22,7 +22,6 @@ def cap_hub_degree(
     node_col: str,
     *,
     max_degree: int | None,
-    strategy: str = "topk",
 ) -> DataFrame:
     """Hub-degree guard for pair-generating self-joins (common
     neighbors, Adamic-Adar, triangles, neighbor Jaccard): a shared
@@ -32,13 +31,12 @@ def cap_hub_degree(
     be distinct (key, node) rows (every caller dedups first); degree =
     rows per key.
 
-    ``strategy="topk"`` keeps the ``max_degree`` smallest ``node_col``
-    values per over-cap key — deterministic, order-independent, and the
-    hub still contributes bounded pairs; ``"drop"`` removes over-cap
-    keys entirely (mirrors the dedup cap). ``max_degree=None`` is the
-    identity (parity pinned in tests/test_operators.py). Under-cap keys
-    never touch the window sort: the over-cap key set is isolated with
-    one distinct-keys aggregation (map-side partial, like
+    The cap keeps the ``max_degree`` smallest ``node_col`` values per
+    over-cap key — deterministic, order-independent, and the hub still
+    contributes bounded pairs. ``max_degree=None`` is the identity
+    (parity pinned in tests/test_operators.py). Under-cap keys never
+    touch the window sort: the over-cap key set is isolated with one
+    distinct-keys aggregation (map-side partial, like
     ``_drop_hot_buckets``) and only hub rows — a vanishing fraction by
     construction — pay the per-key row_number. Quantify the loss with
     :func:`hub_cap_loss` before choosing a cap; the capped graph is
@@ -46,8 +44,6 @@ def cap_hub_degree(
     """
     if max_degree is None:
         return edges
-    if strategy not in ("topk", "drop"):
-        raise ValueError(f"unknown hub strategy {strategy!r}")
     over = (
         edges.groupBy(key_col)
         .agg(F.count(F.lit(1)).alias("__d"))
@@ -55,8 +51,6 @@ def cap_hub_degree(
         .select(key_col)
     )
     under = edges.join(over, on=key_col, how="left_anti")
-    if strategy == "drop":
-        return under
     w = Window.partitionBy(key_col).orderBy(node_col)
     trimmed = (
         edges.join(over, on=key_col, how="left_semi")
@@ -72,15 +66,14 @@ def hub_cap_loss(
     key_col: str,
     *,
     max_degree: int,
-    strategy: str = "topk",
 ) -> DataFrame:
     """One-row loss report for :func:`cap_hub_degree` — the 'loss
     logged' half of the guard: (n_hubs_capped, n_edges_dropped,
     n_wedge_pairs_dropped), where wedge pairs are the d(d−1)/2 −
-    k(k−1)/2 pair emissions the cap prevents per hub (k = kept rows:
-    ``max_degree`` for topk, 0 for drop). Runs off the same
-    distinct-keys degree aggregation as the cap itself."""
-    kept = F.lit(max_degree if strategy == "topk" else 0).cast("long")
+    k(k−1)/2 pair emissions the cap prevents per hub (k = kept rows =
+    ``max_degree``). Runs off the same distinct-keys degree aggregation
+    as the cap itself."""
+    kept = F.lit(max_degree).cast("long")
     d = F.col("__d")
     return (
         edges.groupBy(key_col)
@@ -101,22 +94,16 @@ def hub_cap_loss(
     )
 
 
-def pagerank(
-    edges: DataFrame,
-    *,
-    src: str = "src",
-    dst: str = "dst",
-    iterations: int = 3,
-    truncate_lineage_every: int | None = None,
-) -> DataFrame:
-    """Fixed-iteration PageRank over a DIRECTED edge list (symmetrize
-    upstream for undirected graphs): r_{k+1}(v) = (1-d)/N + d·Σ_{u→v}
-    r_k(u)/outdeg(u), damping d = 0.85.
+def pagerank(edges: DataFrame) -> DataFrame:
+    """Three-iteration PageRank over a DIRECTED (src, dst) edge list
+    (symmetrize upstream for undirected graphs): r_{k+1}(v) = (1-d)/N +
+    d·Σ_{u→v} r_k(u)/outdeg(u), damping d = 0.85.
 
     Per iteration: one equi-join (ranks ⋈ edges on src) + one
     aggregation (sum contributions by dst) — both shuffle on node id,
     so a cluster co-partitions consecutive iterations on the same key.
-    The edge+outdegree join is computed once (a lazy
+    The three iterations stay one lazy plan, so Catalyst/AQE see it
+    whole. The edge+outdegree join is computed once (a lazy
     ``localCheckpoint``, reclaimed once the result is garbage-collected;
     a ``cache()`` would have no unpersist point); N enters the
     plan as a 1-row broadcast cross-join (never a driver scalar).
@@ -125,34 +112,26 @@ def pagerank(
     redistribution — callers wanting strict mass conservation should
     add sink self-loops upstream.
 
-    ``truncate_lineage_every=k`` materializes the rank frame with an
-    eager ``localCheckpoint`` every k iterations: at 3 unrolled
-    iterations the single lazy plan is ideal (Catalyst/AQE see it
-    whole), but at 20+ the plan tree grows linearly and analysis/
-    codegen time — and, on a cluster, recovery cost after executor
-    loss — grows with it. Periodic truncation caps plan depth at k
-    joins; numerically a no-op (pinned in tests).
-
     Returns (node, rank). Nodes = every src or dst endpoint.
     """
-    e = edges.select(F.col(src).alias("__u"), F.col(dst).alias("__v"))
+    e = edges.select("src", "dst")
     nodes = (
-        e.select(F.col("__u").alias("node"))
-        .unionByName(e.select(F.col("__v").alias("node")))
+        e.select(F.col("src").alias("node"))
+        .unionByName(e.select(F.col("dst").alias("node")))
         .distinct()
     )
-    outdeg = e.groupBy("__u").agg(F.count(F.lit(1)).alias("__deg"))
+    outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("__deg"))
     # one (src, dst, outdeg) fact table feeds every iteration
-    fanout = e.join(outdeg, on="__u").localCheckpoint(eager=False)
+    fanout = e.join(outdeg, on="src").localCheckpoint(eager=False)
     n_df = F.broadcast(nodes.agg(F.count(F.lit(1)).cast("double").alias("__n")))
 
     ranks = nodes.crossJoin(n_df).select(
         "node", (F.lit(1.0) / F.col("__n")).alias("rank")
     )
-    for it in range(iterations):
+    for _ in range(3):
         contribs = (
-            fanout.join(ranks, on=fanout["__u"] == ranks["node"])
-            .select(F.col("__v").alias("node"), (F.col("rank") / F.col("__deg")).alias("__c"))
+            fanout.join(ranks, on=fanout["src"] == ranks["node"])
+            .select(F.col("dst").alias("node"), (F.col("rank") / F.col("__deg")).alias("__c"))
             .groupBy("node")
             .agg(F.sum("__c").alias("__in"))
         )
@@ -167,21 +146,12 @@ def pagerank(
                 ).alias("rank"),
             )
         )
-        if truncate_lineage_every and (it + 1) % truncate_lineage_every == 0:
-            ranks = ranks.localCheckpoint(eager=True)
     return ranks
 
 
-def bfs_min_hops(
-    edges: DataFrame,
-    seeds: DataFrame,
-    *,
-    src: str = "src",
-    dst: str = "dst",
-    max_hops: int = 3,
-) -> DataFrame:
-    """Bounded-depth BFS over a DIRECTED edge list: minimum hop count
-    from any seed node, for every node within ``max_hops``.
+def bfs_min_hops(edges: DataFrame, seeds: DataFrame) -> DataFrame:
+    """Bounded-depth BFS over a DIRECTED (src, dst) edge list: minimum
+    hop count from any seed node, for every node within 3 hops.
 
     Frontier expansion as unrolled DataFrame iterations: hop k's
     frontier joins the edge list once (shuffle keyed on node id, the
@@ -193,17 +163,18 @@ def bfs_min_hops(
     stay within the same order of magnitude — the regime bounded-depth
     neighborhoods (feature extraction, blast-radius queries) live in.
     For unbounded reachability on high-diameter graphs use the
-    connected-components operator instead (operators/dedup.py).
+    connected-components operator instead (operators/dedup.py), whose
+    rounds grow with the log of the diameter, not the diameter.
 
     Returns (node, min_hops).
     """
-    e = edges.select(F.col(src).alias("__u"), F.col(dst).alias("__v"))
+    e = edges.select("src", "dst")
     reached = seeds.select("node", F.lit(0).alias("min_hops")).distinct()
     frontier = reached
-    for hop in range(1, max_hops + 1):
+    for hop in range(1, 4):
         frontier = (
-            frontier.join(e, frontier["node"] == e["__u"])
-            .select(F.col("__v").alias("node"), F.lit(hop).alias("min_hops"))
+            frontier.join(e, frontier["node"] == e["src"])
+            .select(F.col("dst").alias("node"), F.lit(hop).alias("min_hops"))
             .distinct()
         )
         reached = reached.unionByName(frontier)

@@ -1239,6 +1239,15 @@ def multimodal_payload_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
 # graphx dependency (build.sbt:13); pure DataFrame self-join aggs.
 # ---------------------------------------------------------------------------
 
+# The part co-purchase projection (u < v, ≥ 2 shared orders) as one
+# oracle CTE body — _copurchase_pairs's DuckDB twin.
+_COPURCHASE_SQL = """
+      SELECT a.l_partkey AS u, b.l_partkey AS v
+      FROM lineitem a JOIN lineitem b
+        ON a.l_orderkey = b.l_orderkey AND b.l_partkey > a.l_partkey
+      GROUP BY 1, 2
+      HAVING count(DISTINCT a.l_orderkey) >= 2"""
+
 @register(
     "graph_degrees",
     """
@@ -1266,11 +1275,7 @@ def graph_degrees(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def graph_common_neighbors(
-    spark: SparkSession,
-    sf_dir: str,
-    *,
-    max_degree: int | None = None,
-    hub_strategy: str = "topk",
+    spark: SparkSession, sf_dir: str, *, max_degree: int | None = None
 ) -> DataFrame:
     """Common-neighbor counts (the classic link-prediction feature) via
     self-join on the shared neighbor + pair aggregation. Co-partitioned
@@ -1281,37 +1286,21 @@ def graph_common_neighbors(
     aggregation — a countDistinct on the joined output plans a second
     dedup aggregation over |pairs| rows instead (A/B at sf0.1: 2.2s vs
     1.4s warm, and the gap widens with join fan-out). ``max_degree``
-    routes through the shared hub guard (see _bipartite_edges); the
-    graded entry is cap-free, graph_common_neighbors_capped grades the
-    guard."""
-    li = _bipartite_edges(
-        spark, sf_dir, max_degree=max_degree, hub_strategy=hub_strategy
+    caps the shared-order fan-out with the hub guard
+    (operators.graph.cap_hub_degree); the graded entry is cap-free,
+    graph_common_neighbors_capped grades the guard."""
+    from .operators.graph import cap_hub_degree
+
+    e = cap_hub_degree(
+        _bipartite_edges(spark, sf_dir), "l_orderkey", "l_partkey", max_degree=max_degree
     )
-    a = li.select(F.col("l_orderkey"), F.col("l_partkey").alias("src_id"))
-    b = li.select(F.col("l_orderkey"), F.col("l_partkey").alias("dst_id"))
-    # shuffle_hash: the SMJ alternative sorts the distinct edge list
-    # twice for a join whose output feeds an UNSORTED hash aggregate —
-    # pure waste. Solo A/B at the 10× replica: min 4.53s → 1.92s
-    # (round-14 adjudication, BASELINE.md). Physical-only; the entry
-    # stays hash-gated.
-    return (
-        a.join(b.hint("shuffle_hash"), "l_orderkey")
-        .filter(F.col("dst_id") > F.col("src_id"))
-        .groupBy("src_id", "dst_id")
-        .agg(F.count(F.lit(1)).alias("common_neighbors"))
-        .filter(F.col("common_neighbors") >= 2)
-    )
+    return _copurchase_pairs(e, shuffle_hash=True)
 
 
 @register(
     "graph_triangle_count",
-    """
-    WITH e AS (
-      SELECT a.l_partkey AS u, b.l_partkey AS v
-      FROM lineitem a JOIN lineitem b
-        ON a.l_orderkey = b.l_orderkey AND b.l_partkey > a.l_partkey
-      GROUP BY 1, 2
-      HAVING count(DISTINCT a.l_orderkey) >= 2
+    f"""
+    WITH e AS ({_COPURCHASE_SQL}
     )
     SELECT CAST(count(*) AS BIGINT) AS n_triangles
     FROM e e1
@@ -1319,13 +1308,7 @@ def graph_common_neighbors(
     JOIN e e3 ON e3.u = e1.u AND e3.v = e2.v
     """,
 )
-def graph_triangle_count(
-    spark: SparkSession,
-    sf_dir: str,
-    *,
-    max_degree: int | None = None,
-    hub_strategy: str = "topk",
-) -> DataFrame:
+def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Triangle count over the part co-purchase projection (parts
     sharing ≥2 orders), by the edge-iterator formulation: canonical
     u<v edges make every triangle exactly one wedge (u<v<w) closed by
@@ -1334,22 +1317,9 @@ def graph_triangle_count(
     the standard mitigation (degree-ordered orientation) is exactly
     the u<v canonicalization used here. Edge list deduplicated before
     the self-join so the pair weight is a plain count (see
-    graph_common_neighbors). ``max_degree`` caps the shared-order
-    fan-out via the shared hub guard (see _bipartite_edges)."""
-    li = _bipartite_edges(
-        spark, sf_dir, max_degree=max_degree, hub_strategy=hub_strategy
-    )
-    a = li.select(F.col("l_orderkey"), F.col("l_partkey").alias("u"))
-    b = li.select(F.col("l_orderkey"), F.col("l_partkey").alias("v"))
-    # shuffle_hash: same rationale as graph_common_neighbors (no sort
-    # feeding a hash agg; round-14 adjudication)
-    e = (
-        a.join(b.hint("shuffle_hash"), "l_orderkey")
-        .filter(F.col("v") > F.col("u"))
-        .groupBy("u", "v")
-        .agg(F.count(F.lit(1)).alias("__w"))
-        .filter(F.col("__w") >= 2)
-        .select("u", "v")
+    graph_common_neighbors)."""
+    e = _copurchase_pairs(_bipartite_edges(spark, sf_dir), shuffle_hash=True).select(
+        F.col("src_id").alias("u"), F.col("dst_id").alias("v")
     )
     wedges = (
         e.select(F.col("u").alias("__a"), F.col("v").alias("__b"))
@@ -2273,10 +2243,10 @@ def cube_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 # MinHash-banded pairs built from XXH64 signatures (the dedup_minhash
 # blocker). Partition/keeper invariants vs the exact twin pinned in pytest.
 def dedup_clusters_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-dup pairs → connected components (iterative min-label
-    propagation with lineage checkpoints) → one keeper per duplicate
-    cluster; singletons keep themselves. Pinned against a Python
-    union-find in tests."""
+    """Near-dup pairs → connected components (min-label hooking with
+    shortcutting, operators.dedup.connected_components) → one keeper
+    per duplicate cluster; singletons keep themselves. Pinned against a
+    Python union-find in tests."""
     from .operators.dedup import dedup_clusters, minhash_near_dup_pairs
 
     docs = load_table(spark, sf_dir, "documents")
@@ -3665,8 +3635,11 @@ def p2_lsh_reference_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
     return lsh_similarity_join(feats, threshold=0.8, mode="reference")
 
 
-_CLUSTERS_EXACT_ORACLE = f"""
-    WITH RECURSIVE pairs AS ({_TOKEN_JACCARD_ORACLE}),
+# Near-dup connected components as shared oracle CTEs (a recursive
+# closure over the blocked token-Jaccard pairs): comp maps every paired
+# node to its min-id component; labeled extends to the whole corpus
+# (singletons → themselves).
+_NEARDUP_COMP_CTES = f"""pairs AS ({_TOKEN_JACCARD_ORACLE}),
     edges AS (
       SELECT src_id AS a, dst_id AS b FROM pairs
       UNION
@@ -3676,12 +3649,16 @@ _CLUSTERS_EXACT_ORACLE = f"""
       SELECT a, a FROM edges
       UNION
       SELECT c.node, e.b FROM closure c JOIN edges e ON c.reach = e.a
-    )
-    SELECT d.doc_id,
-           CAST(COALESCE(m.comp, d.doc_id) AS BIGINT) AS keeper_id
-    FROM documents d
-    LEFT JOIN (SELECT node, MIN(reach) AS comp FROM closure GROUP BY node) m
-      ON d.doc_id = m.node
+    ),
+    comp AS (SELECT node, MIN(reach) AS comp FROM closure GROUP BY node),
+    labeled AS (
+      SELECT d.doc_id, COALESCE(m.comp, d.doc_id) AS comp
+      FROM documents d LEFT JOIN comp m ON d.doc_id = m.node)"""
+
+
+_CLUSTERS_EXACT_ORACLE = f"""
+    WITH RECURSIVE {_NEARDUP_COMP_CTES}
+    SELECT doc_id, CAST(comp AS BIGINT) AS keeper_id FROM labeled
 """
 
 
@@ -3689,9 +3666,11 @@ _CLUSTERS_EXACT_ORACLE = f"""
 def dedup_clusters_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicate clustering over an *exact, SQL-checkable* pair input
     (the blocked token-Jaccard pairs): connected components by
-    iterative min-label propagation, hash-checked end-to-end against a
-    DuckDB recursive-CTE transitive closure. The driver-green twin of
-    ``dedup_clusters`` (whose MinHash pair input makes it rows-only)."""
+    min-label hooking with shortcutting
+    (operators.dedup.connected_components), hash-checked end-to-end
+    against a DuckDB recursive-CTE transitive closure. The driver-green
+    twin of ``dedup_clusters`` (whose MinHash pair input makes it
+    rows-only)."""
     from .operators.dedup import dedup_clusters
 
     docs = load_table(spark, sf_dir, "documents")
@@ -3837,23 +3816,13 @@ def range_join_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     HAVING count(*) >= 2
     """,
 )
-def graph_adamic_adar(
-    spark: SparkSession,
-    sf_dir: str,
-    *,
-    max_degree: int | None = None,
-    hub_strategy: str = "topk",
-) -> DataFrame:
+def graph_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Adamic-Adar link-prediction score over the (order, part)
     bipartite graph: pairs of parts sharing ≥2 orders, scored by
     Σ 1/ln(degree(shared order)) — the degree-discounted
     common-neighbors feature. Same co-partitioned self-join shape as
-    graph_common_neighbors with a broadcast degree dim. With
-    ``max_degree`` set, degrees are degrees OF THE CAPPED GRAPH (the
-    cap applies once to the edge list; see _bipartite_edges)."""
-    li = _bipartite_edges(
-        spark, sf_dir, max_degree=max_degree, hub_strategy=hub_strategy
-    )
+    graph_common_neighbors with a broadcast degree dim."""
+    li = _bipartite_edges(spark, sf_dir)
     deg = (
         li.groupBy("l_orderkey")
         .agg(F.count(F.lit(1)).alias("d"))  # rows unique post-distinct
@@ -4595,13 +4564,8 @@ def tfidf_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
 # SCD2 effective-dating, and correlated-scalar-subquery SQL coverage.
 # ---------------------------------------------------------------------------
 
-_PAGERANK_EDGES = """
-    e AS (
-      SELECT a.l_partkey AS u, b.l_partkey AS v
-      FROM lineitem a JOIN lineitem b
-        ON a.l_orderkey = b.l_orderkey AND b.l_partkey > a.l_partkey
-      GROUP BY 1, 2
-      HAVING count(DISTINCT a.l_orderkey) >= 2),
+_PAGERANK_EDGES = f"""
+    e AS ({_COPURCHASE_SQL}),
     ed AS (SELECT u AS src, v AS dst FROM e
            UNION ALL SELECT v AS src, u AS dst FROM e),
     deg AS (SELECT src, CAST(count(*) AS DOUBLE) AS deg FROM ed GROUP BY src)
@@ -4624,33 +4588,13 @@ _PAGERANK_ORACLE = f"""
 
 
 def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The undirected part co-purchase projection (u < v, >= 2 shared
-    orders) — _PAGERANK_EDGES's Spark twin, shared by the ranking
-    (pagerank) and community (label propagation) tiers."""
-    li = (
-        load_table(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_partkey")
-        .distinct()
-    )
-    a = li.select(F.col("l_orderkey"), F.col("l_partkey").alias("u"))
-    b = li.select(F.col("l_orderkey"), F.col("l_partkey").alias("v"))
-    # NO shuffle_hash hint here, deliberately (round-14 A/B): this
-    # projection's consumers (pagerank/LPA/CC/modularity) are
-    # soak-graded on the DENSIFIED events replica (335× edges over
-    # fixed parts), where per-key fan-out is extreme and the hint
-    # measured mildly WORSE (CC 34.3s vs 29.8s warm) — the sort-merge
-    # path streams sorted runs through the fan-out while the hash probe
-    # re-walks its bucket chains. graph_common_neighbors/_candidate_
-    # pairs keep the hint: their graded venue is the bench replica
-    # (constant per-key cardinality), where it measured 2.3× BETTER.
-    # Same logical join, venue-dependent physical choice.
-    return (
-        a.join(b, "l_orderkey")
-        .filter(F.col("v") > F.col("u"))
-        .groupBy("u", "v")
-        .agg(F.count(F.lit(1)).alias("__w"))  # triples unique post-distinct
-        .filter(F.col("__w") >= 2)
-        .select("u", "v")
+    """The undirected part co-purchase projection as (u, v) edges,
+    u < v — _COPURCHASE_SQL's Spark twin, shared by the ranking
+    (pagerank), community (label propagation), clustering-coefficient
+    and reachability tiers. No shuffle_hash hint (see
+    _copurchase_pairs)."""
+    return _copurchase_pairs(_bipartite_edges(spark, sf_dir), shuffle_hash=False).select(
+        F.col("src_id").alias("u"), F.col("dst_id").alias("v")
     )
 
 
@@ -4672,12 +4616,10 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     At 100 TB: contribution shuffle is keyed by dst and AQE-skew-safe;
     hub mitigation is the same canonicalized projection the triangle
-    count uses. For >O(10) rounds add localCheckpoint every ~5 rounds
-    (as dedup_clusters does) to cap lineage depth."""
-    e = _copurchase_edges(spark, sf_dir)
-    ed = e.selectExpr("u AS src", "v AS dst").unionAll(
-        e.selectExpr("v AS src", "u AS dst")
-    )
+    count uses. For >O(10) rounds materialise the rank frame with an
+    eager localCheckpoint every few rounds to cap lineage depth
+    (dedup_clusters checkpoints every round)."""
+    ed = _both_ways(_copurchase_edges(spark, sf_dir))
     deg = ed.groupBy("src").agg(F.count(F.lit(1)).cast("double").alias("deg"))
     edges_w = ed.join(deg, on="src").localCheckpoint(eager=False)
     ranks = deg.select(F.col("src").alias("node"), F.lit(1.0).alias("pr"))
@@ -5448,46 +5390,52 @@ def event_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
 _E_DISTINCT_SQL = "SELECT DISTINCT l_orderkey, l_partkey FROM lineitem"
 
 
-def _bipartite_edges(
-    spark: SparkSession,
-    sf_dir: str,
-    *,
-    max_degree: int | None = None,
-    hub_strategy: str = "topk",
-) -> DataFrame:
-    """Distinct (order, part) projection edges, with the shared
-    hub-degree guard (operators.graph.cap_hub_degree) every pair-
-    generating graph query routes through: a shared order of degree d
-    emits d(d−1)/2 part pairs in the self-joins below, so one celebrity
-    hub at 100 TB is an executor-OOM — the same quadratic shape the
-    dedup tiers cap with _drop_hot_buckets. Default off (None): the
-    graded entries' oracles are cap-free; graph_common_neighbors_capped
-    grades the guard itself."""
-    from .operators.graph import cap_hub_degree
-
-    e = (
+def _bipartite_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Distinct (order, part) edges of the order–part bipartite graph:
+    the input of every part co-purchase query below."""
+    return (
         load_table(spark, sf_dir, "lineitem")
         .select("l_orderkey", "l_partkey")
         .distinct()
     )
-    return cap_hub_degree(
-        e, "l_orderkey", "l_partkey", max_degree=max_degree, strategy=hub_strategy
-    )
 
 
-def _candidate_pairs(e: DataFrame) -> DataFrame:
-    """Canonical src<dst part pairs sharing ≥2 orders, with the shared-
-    order count. One shuffle on l_orderkey; AQE splits skewed orders.
-    shuffle_hash hint: no sort before a hash aggregate (see
-    graph_common_neighbors — min 4.53s → 1.92s at the 10× replica)."""
+def _copurchase_pairs(e: DataFrame, *, shuffle_hash: bool) -> DataFrame:
+    """The part co-purchase projection of distinct (order, part) edges
+    ``e``: canonical src_id < dst_id part pairs sharing ≥ 2 orders, with
+    the shared-order count ``common_neighbors``. One shuffle on
+    l_orderkey; AQE splits skewed orders. The edges are distinct, so
+    the joined (order, src, dst) triples are unique and the count needs
+    no DISTINCT.
+
+    ``shuffle_hash`` hints the self-join: the sort-merge alternative
+    sorts the edge list twice for a join whose output feeds an UNSORTED
+    hash aggregate. Solo A/B at the 10× bench replica (constant per-key
+    cardinality): min 4.53s → 1.92s (round-14 adjudication,
+    BASELINE.md), so the pair-feature entries set it. The
+    pagerank/LPA/CC/modularity consumers (_copurchase_edges) leave it
+    off: they are soak-graded on the densified events replica (335×
+    edges over fixed parts), where per-key fan-out is extreme and the
+    hint measured mildly WORSE (CC 34.3s vs 29.8s warm) — the
+    sort-merge path streams sorted runs through the fan-out while the
+    hash probe re-walks its bucket chains. Same logical join,
+    venue-dependent physical choice."""
     a = e.select(F.col("l_orderkey"), F.col("l_partkey").alias("src_id"))
     b = e.select(F.col("l_orderkey"), F.col("l_partkey").alias("dst_id"))
     return (
-        a.join(b.hint("shuffle_hash"), "l_orderkey")
+        a.join(b.hint("shuffle_hash") if shuffle_hash else b, "l_orderkey")
         .filter(F.col("dst_id") > F.col("src_id"))
         .groupBy("src_id", "dst_id")
-        .agg(F.count(F.lit(1)).alias("common"))
-        .filter(F.col("common") >= 2)
+        .agg(F.count(F.lit(1)).alias("common_neighbors"))
+        .filter(F.col("common_neighbors") >= 2)
+    )
+
+
+def _both_ways(e: DataFrame) -> DataFrame:
+    """The (u, v) co-purchase edges as a directed (src, dst) edge list
+    holding both directions of every edge."""
+    return e.selectExpr("u AS src", "v AS dst").unionAll(
+        e.selectExpr("v AS src", "u AS dst")
     )
 
 
@@ -5507,27 +5455,18 @@ def _candidate_pairs(e: DataFrame) -> DataFrame:
     JOIN pdeg dd ON dd.l_partkey = p.dst_id
     """,
 )
-def graph_pref_attachment(
-    spark: SparkSession,
-    sf_dir: str,
-    *,
-    max_degree: int | None = None,
-    hub_strategy: str = "topk",
-) -> DataFrame:
+def graph_pref_attachment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Preferential-attachment score deg(u)·deg(v) for candidate part
     pairs (sharing ≥2 orders) — the hub-favors-hub link-prediction
     baseline. The part-degree dim is broadcast twice onto the pair
     list; at a scale where the node dim itself outgrows broadcast,
-    drop the hint and AQE plans the equi-join. ``max_degree``: shared
-    hub guard (_bipartite_edges)."""
-    e = _bipartite_edges(
-        spark, sf_dir, max_degree=max_degree, hub_strategy=hub_strategy
-    )
+    drop the hint and AQE plans the equi-join."""
+    e = _bipartite_edges(spark, sf_dir)
     pdeg = e.groupBy("l_partkey").agg(F.count(F.lit(1)).alias("d"))
     ds = pdeg.select(F.col("l_partkey").alias("src_id"), F.col("d").alias("__ds"))
     dd = pdeg.select(F.col("l_partkey").alias("dst_id"), F.col("d").alias("__dd"))
     return (
-        _candidate_pairs(e)
+        _copurchase_pairs(e, shuffle_hash=True)
         .join(F.broadcast(ds), "src_id")
         .join(F.broadcast(dd), "dst_id")
         .select(
@@ -5556,35 +5495,26 @@ def graph_pref_attachment(
     JOIN pdeg dd ON dd.l_partkey = cn.dst_id
     """,
 )
-def graph_jaccard_neighbors(
-    spark: SparkSession,
-    sf_dir: str,
-    *,
-    max_degree: int | None = None,
-    hub_strategy: str = "topk",
-) -> DataFrame:
+def graph_jaccard_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Neighbor-set Jaccard |Γu∩Γv| / |Γu∪Γv| for candidate part pairs:
     the normalized common-neighbors score. Union size comes from the
     inclusion-exclusion identity d(u)+d(v)−common — no second pair-wise
     set operation, just the same broadcast degree dims as
-    preferential attachment. ``max_degree``: shared hub guard
-    (_bipartite_edges); part degrees are degrees of the capped graph."""
-    e = _bipartite_edges(
-        spark, sf_dir, max_degree=max_degree, hub_strategy=hub_strategy
-    )
+    preferential attachment."""
+    e = _bipartite_edges(spark, sf_dir)
     pdeg = e.groupBy("l_partkey").agg(F.count(F.lit(1)).alias("d"))
     ds = pdeg.select(F.col("l_partkey").alias("src_id"), F.col("d").alias("__ds"))
     dd = pdeg.select(F.col("l_partkey").alias("dst_id"), F.col("d").alias("__dd"))
     return (
-        _candidate_pairs(e)
+        _copurchase_pairs(e, shuffle_hash=True)
         .join(F.broadcast(ds), "src_id")
         .join(F.broadcast(dd), "dst_id")
         .select(
             "src_id",
             "dst_id",
             micro_div(
-                F.col("common"),
-                F.col("__ds") + F.col("__dd") - F.col("common"),
+                F.col("common_neighbors"),
+                F.col("__ds") + F.col("__dd") - F.col("common_neighbors"),
             ).alias("jaccard_micro"),
         )
     )
@@ -5604,21 +5534,12 @@ def graph_jaccard_neighbors(
     HAVING count(*) >= 2
     """,
 )
-def graph_resource_allocation(
-    spark: SparkSession,
-    sf_dir: str,
-    *,
-    max_degree: int | None = None,
-    hub_strategy: str = "topk",
-) -> DataFrame:
+def graph_resource_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Resource-allocation index Σ 1/deg(z) over shared neighbors z —
     Adamic-Adar's harder-discounted sibling (1/d instead of 1/ln d).
     Identical plan shape to graph_adamic_adar: co-partitioned
-    self-join + broadcast shared-neighbor-degree dim. ``max_degree``:
-    shared hub guard, degrees of the capped graph (_bipartite_edges)."""
-    e = _bipartite_edges(
-        spark, sf_dir, max_degree=max_degree, hub_strategy=hub_strategy
-    )
+    self-join + broadcast shared-neighbor-degree dim."""
+    e = _bipartite_edges(spark, sf_dir)
     deg = e.groupBy("l_orderkey").agg(F.count(F.lit(1)).alias("d"))
     a = e.select(F.col("l_orderkey"), F.col("l_partkey").alias("src_id"))
     b = e.select(F.col("l_orderkey"), F.col("l_partkey").alias("dst_id"))
@@ -5657,12 +5578,12 @@ def graph_resource_allocation(
 )
 def graph_common_neighbors_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     """graph_common_neighbors behind the shared hub-degree guard
-    (operators.graph.cap_hub_degree, strategy=topk, max_degree=4 —
+    (operators.graph.cap_hub_degree, max_degree=4 —
     chosen to bite at this schema's ≤7-parts-per-order fan-out): a
     shared neighbor of degree d emits d(d−1)/2 pairs in the self-join,
     so the guard is what makes the graph family survive a celebrity
     hub at 100 TB, exactly as _drop_hot_buckets does for the dedup
-    tiers. topk keeps the max_degree smallest part keys per over-cap
+    tiers. The cap keeps the max_degree smallest part keys per over-cap
     order — deterministic, so the oracle expresses it exactly as a
     row_number window. Loss is quantified by
     operators.graph.hub_cap_loss (pinned in tests/test_operators.py;
@@ -6751,13 +6672,8 @@ def token_drift_js(spark: SparkSession, sf_dir: str) -> DataFrame:
     return w.agg(F.round(F.sum(term), 6).alias("js_divergence"))
 
 
-_PAGERANK_ORACLE = """
-    WITH e0 AS (
-      SELECT a.l_partkey AS u, b.l_partkey AS v
-      FROM lineitem a JOIN lineitem b
-        ON a.l_orderkey = b.l_orderkey AND b.l_partkey > a.l_partkey
-      GROUP BY 1, 2
-      HAVING count(DISTINCT a.l_orderkey) >= 2
+_PAGERANK_PARTS_ORACLE = f"""
+    WITH e0 AS ({_COPURCHASE_SQL}
     ),
     sym AS (SELECT u, v FROM e0 UNION ALL SELECT v, u FROM e0),
     deg AS (SELECT u, count(*) AS d FROM sym GROUP BY u),
@@ -6779,7 +6695,7 @@ _PAGERANK_ORACLE = """
 """
 
 
-@register("pagerank_parts", _PAGERANK_ORACLE)
+@register("pagerank_parts", _PAGERANK_PARTS_ORACLE)
 def pagerank_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fixed-iteration PageRank (3 iters, d=0.85) on the symmetrized
     part co-purchase graph (the graph_* edge set: parts sharing ≥ 2
@@ -6791,23 +6707,7 @@ def pagerank_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-engine float-sum stability."""
     from .operators.graph import pagerank
 
-    li = (
-        load_table(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_partkey")
-        .distinct()
-    )
-    a = li.select("l_orderkey", F.col("l_partkey").alias("u"))
-    b = li.select("l_orderkey", F.col("l_partkey").alias("v"))
-    e0 = (
-        a.join(b, "l_orderkey")
-        .filter(F.col("v") > F.col("u"))
-        .groupBy("u", "v")
-        .agg(F.count(F.lit(1)).alias("__n"))  # triples unique post-distinct
-        .filter(F.col("__n") >= 2)
-        .select("u", "v")
-    )
-    sym = e0.unionByName(e0.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    ranks = pagerank(sym, src="u", dst="v", iterations=3)
+    ranks = pagerank(_both_ways(_copurchase_edges(spark, sf_dir)))
     return ranks.select(
         F.col("node").alias("node_id"), F.round(F.col("rank"), 6).alias("pagerank")
     )
@@ -7248,13 +7148,8 @@ def bigram_next_token(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "graph_khop_reachability",
-    """
-    WITH e0 AS (
-      SELECT a.l_partkey AS u, b.l_partkey AS v
-      FROM lineitem a JOIN lineitem b
-        ON a.l_orderkey = b.l_orderkey AND b.l_partkey > a.l_partkey
-      GROUP BY 1, 2
-      HAVING count(DISTINCT a.l_orderkey) >= 2),
+    f"""
+    WITH e0 AS ({_COPURCHASE_SQL}),
     sym AS (SELECT u, v FROM e0 UNION SELECT v, u FROM e0),
     s0 AS (SELECT p_partkey AS node FROM part WHERE p_size = 1),
     h1 AS (SELECT DISTINCT sym.v AS node FROM sym JOIN s0 ON sym.u = s0.node),
@@ -7279,30 +7174,13 @@ def graph_khop_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
     three levels as chained CTEs."""
     from .operators.graph import bfs_min_hops
 
-    li = (
-        load_table(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_partkey")
-        .distinct()
-    )
-    a = li.select("l_orderkey", F.col("l_partkey").alias("u"))
-    b = li.select("l_orderkey", F.col("l_partkey").alias("v"))
-    e0 = (
-        a.join(b, "l_orderkey")
-        .filter(F.col("v") > F.col("u"))
-        .groupBy("u", "v")
-        .agg(F.count(F.lit(1)).alias("__n"))  # triples unique post-distinct
-        .filter(F.col("__n") >= 2)
-        .select("u", "v")
-    )
-    sym = e0.unionByName(
-        e0.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    ).distinct()
+    sym = _both_ways(_copurchase_edges(spark, sf_dir)).distinct()
     seeds = (
         load_table(spark, sf_dir, "part")
         .filter(F.col("p_size") == 1)
         .select(F.col("p_partkey").alias("node"))
     )
-    out = bfs_min_hops(sym, seeds, src="u", dst="v", max_hops=3)
+    out = bfs_min_hops(sym, seeds)
     return out.select(
         F.col("node").alias("node_id"), F.col("min_hops").cast("int").alias("min_hops")
     )
@@ -10950,15 +10828,13 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     (labels ⨝ edges, both keyed by node id) plus a (dst, lbl) count and
     a per-node argmax window. At 100 TB the label frame is |V| rows —
     orders smaller than |E| — so AQE picks the broadcast side per
-    round; lineage is 3 rounds deep (localCheckpoint every ~5 rounds
-    past that, as dedup_clusters does).
+    round; lineage is 3 rounds deep (past that, an eager
+    localCheckpoint every few rounds caps it; dedup_clusters checkpoints
+    every round).
 
     Oracle: the same 3 rounds unrolled as CTEs — integer counts and a
     total-order tie-break, so no float enters the hash."""
-    e = _copurchase_edges(spark, sf_dir)
-    ed = e.selectExpr("u AS src", "v AS dst").unionAll(
-        e.selectExpr("v AS src", "u AS dst")
-    )
+    ed = _both_ways(_copurchase_edges(spark, sf_dir))
     labels = _lpa_labels(ed)
     return labels.select(
         F.col("node").alias("node_id"), F.col("lbl").cast("long").alias("community")
@@ -11378,9 +11254,7 @@ def graph_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
         .unionAll(tri.select(F.col("c").alias("node")))
     )
     tcnt = pn.groupBy("node").agg(F.count(F.lit(1)).cast("long").alias("tri"))
-    ed = e.selectExpr("u AS src", "v AS dst").unionAll(
-        e.selectExpr("v AS src", "u AS dst")
-    )
+    ed = _both_ways(e)
     dg = ed.groupBy(F.col("src").alias("node")).agg(
         F.count(F.lit(1)).cast("long").alias("deg")
     )
@@ -11575,9 +11449,7 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     two-level agg. Nothing touches pairs beyond the edge list
     itself."""
     e = _copurchase_edges(spark, sf_dir).localCheckpoint(eager=False)
-    ed = e.selectExpr("u AS src", "v AS dst").unionAll(
-        e.selectExpr("v AS src", "u AS dst")
-    )
+    ed = _both_ways(e)
     labels = _lpa_labels(ed)
     m_df = e.agg(F.count(F.lit(1)).cast("long").alias("m"))
     la = labels.select(F.col("node").alias("u"), F.col("lbl").alias("la"))
@@ -12453,28 +12325,13 @@ def stratified_sample_hamilton(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _KEEP_BEST_ORACLE = f"""
-    WITH RECURSIVE pairs AS ({_TOKEN_JACCARD_ORACLE}),
-    edges AS (
-      SELECT src_id AS a, dst_id AS b FROM pairs
-      UNION
-      SELECT dst_id AS a, src_id AS b FROM pairs
-    ),
-    closure(node, reach) AS (
-      SELECT a, a FROM edges
-      UNION
-      SELECT c.node, e.b FROM closure c JOIN edges e ON c.reach = e.a
-    ),
-    comp AS (SELECT node, MIN(reach) AS comp FROM closure GROUP BY node),
-    labeled AS (
-      SELECT d.doc_id,
-             COALESCE(m.comp, d.doc_id) AS comp,
-             len({_toks_sql('text')}) AS n_tokens
-      FROM documents d LEFT JOIN comp m ON d.doc_id = m.node),
+    WITH RECURSIVE {_NEARDUP_COMP_CTES},
     ranked AS (
-      SELECT doc_id, comp, n_tokens,
-             row_number() OVER (PARTITION BY comp
-                                ORDER BY n_tokens DESC, doc_id) AS rk
-      FROM labeled)
+      SELECT l.doc_id, l.comp,
+             row_number() OVER (PARTITION BY l.comp
+                                ORDER BY len({_toks_sql('d.text')}) DESC,
+                                         l.doc_id) AS rk
+      FROM labeled l JOIN documents d ON d.doc_id = l.doc_id)
     SELECT r.doc_id,
            CAST(k.doc_id AS BIGINT) AS keeper_id,
            CAST(r.doc_id = k.doc_id AS INT) AS kept
@@ -12879,27 +12736,6 @@ def filter_funnel_attrition(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("s.n_in") - F.col("s.n_pass")).alias("n_dropped"),
         )
     )
-
-
-# Near-dup connected components as shared oracle CTEs (the
-# _KEEP_BEST_ORACLE recursive closure over the blocked token-Jaccard
-# pairs): comp maps every paired node to its min-id component; labeled
-# extends to the whole corpus (singletons → themselves).
-_NEARDUP_COMP_CTES = f"""pairs AS ({_TOKEN_JACCARD_ORACLE}),
-    edges AS (
-      SELECT src_id AS a, dst_id AS b FROM pairs
-      UNION
-      SELECT dst_id AS a, src_id AS b FROM pairs
-    ),
-    closure(node, reach) AS (
-      SELECT a, a FROM edges
-      UNION
-      SELECT c.node, e.b FROM closure c JOIN edges e ON c.reach = e.a
-    ),
-    comp AS (SELECT node, MIN(reach) AS comp FROM closure GROUP BY node),
-    labeled AS (
-      SELECT d.doc_id, COALESCE(m.comp, d.doc_id) AS comp
-      FROM documents d LEFT JOIN comp m ON d.doc_id = m.node)"""
 
 
 _SOFT_WEIGHTS_ORACLE = f"""

@@ -564,34 +564,50 @@ def test_salted_join_matches_plain_join(spark):
            sorted((r.row_id, r.weight) for r in want_left.collect())
 
 
-def test_connected_components_vs_union_find(spark, docs):
-    """CC over the minhash near-dup graph must equal a Python
-    union-find on the same pairs."""
+def test_connected_components_vs_union_find(spark, docs, count_jobs):
+    """CC must equal a Python union-find on the same pairs: the minhash
+    near-dup graph, a 1,000-node path with ids in shuffled order, a
+    199-leaf star joined to the high end of a 300-node path (the min id
+    enters the path at its far end), no pairs, and a single pair. The
+    path runs within the jobs of about 2·log₂n rounds; a number of
+    rounds linear in n would fire hundreds more."""
+    import math
+    import random
+
     from apache_spark_link_prediction_spark.operators.dedup import (
         connected_components,
         dedup_clusters,
         minhash_near_dup_pairs,
     )
 
+    def union_find(edges):
+        parent: dict[int, int] = {}
+
+        def find(x):
+            parent.setdefault(x, x)
+            while parent[x] != x:
+                parent[x] = parent[parent[x]]
+                x = parent[x]
+            return x
+
+        for a, b in edges:
+            ra, rb = find(a), find(b)
+            if ra != rb:
+                parent[max(ra, rb)] = min(ra, rb)
+        return {x: find(x) for x in parent}
+
+    def components(edges):
+        df = spark.createDataFrame(
+            [(min(e), max(e)) for e in edges], "src_id long, dst_id long"
+        )
+        return count_jobs(
+            lambda: {r.node_id: r.component for r in connected_components(df).collect()}
+        )
+
     pairs = minhash_near_dup_pairs(docs, shingle_n=1, threshold=0.8)
     edges = [(r.src_id, r.dst_id) for r in pairs.collect()]
     assert edges, "fixture should contain near-dup pairs"
-
-    parent: dict[int, int] = {}
-
-    def find(x):
-        parent.setdefault(x, x)
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, b in edges:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-    want = {x: find(x) for x in parent}
-
+    want = union_find(edges)
     got = {r.node_id: r.component for r in connected_components(pairs).collect()}
     assert got == want
 
@@ -601,6 +617,20 @@ def test_connected_components_vs_union_find(spark, docs):
     for doc_id, keeper in rows.items():
         assert keeper == want.get(doc_id, doc_id)
         assert keeper <= doc_id
+
+    n = 1000
+    ids = list(range(n))
+    random.Random(7).shuffle(ids)
+    path = list(zip(ids, ids[1:]))
+    star_path = [(0, i) for i in range(1, 200)]
+    star_path += [(i, i + 1) for i in range(200, 499)] + [(5, 499)]
+    cases = {"path": path, "star_path": star_path, "empty": [], "single": [(3, 7)]}
+    jobs = {}
+    for name, case in cases.items():
+        got, jobs[name] = components(case)
+        assert got == union_find(case), name
+    # a single pair takes two rounds: one that hooks, one that sees no change
+    assert jobs["path"] <= math.log2(n) * jobs["single"], jobs
 
 
 def test_as_of_join_semantics(spark):
@@ -925,7 +955,7 @@ def test_pagerank_matches_pure_python_iteration(spark):
             for v in vs:
                 contrib[v] += r[u] / len(vs)
         r = {u: 0.15 / n + 0.85 * contrib[u] for u in nodes}
-    got = {row.node: row.rank for row in pagerank(df, iterations=3).collect()}
+    got = {row.node: row.rank for row in pagerank(df).collect()}
     assert set(got) == set(nodes)
     for u in nodes:
         assert abs(got[u] - r[u]) < 1e-12, (u, got[u], r[u])
@@ -956,39 +986,19 @@ def test_jaccard_prefix_join_equals_unblocked_quadratic(spark, docs):
 
 def test_bfs_min_hops_small_graph(spark):
     """bfs_min_hops on a hand-checkable directed graph: minimum hop
-    wins when a node is reachable at several depths, nodes beyond
-    max_hops are absent, isolated seeds stay at hop 0, and a cycle
-    doesn't loop forever (bounded unroll)."""
+    wins when a node is reachable at several depths, nodes beyond 3
+    hops are absent, isolated seeds stay at hop 0, and a cycle doesn't
+    loop forever (bounded unroll)."""
     from apache_spark_link_prediction_spark.operators.graph import bfs_min_hops
 
-    #   1 → 2 → 3 → 4 → 5,  1 → 3 (shortcut),  3 → 1 (cycle back)
+    #   1 → 2 → 3 → 4 → 5 → 6,  1 → 3 (shortcut),  3 → 1 (cycle back)
     edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (4, 5), (1, 3), (3, 1)], "src long, dst long"
+        [(1, 2), (2, 3), (3, 4), (4, 5), (5, 6), (1, 3), (3, 1)], "src long, dst long"
     )
     seeds = spark.createDataFrame([(1,), (99,)], "node long")  # 99 isolated
-    got = {r.node: r.min_hops for r in bfs_min_hops(edges, seeds, max_hops=3).collect()}
+    got = {r.node: r.min_hops for r in bfs_min_hops(edges, seeds).collect()}
+    # depth bound respected: node 6 is 4 hops out and unreached
     assert got == {1: 0, 99: 0, 2: 1, 3: 1, 4: 2, 5: 3}
-
-    # depth bound respected: with max_hops=2, node 5 is unreached
-    got2 = {r.node: r.min_hops for r in bfs_min_hops(edges, seeds, max_hops=2).collect()}
-    assert 5 not in got2 and got2[4] == 2
-
-
-def test_pagerank_lineage_truncation_is_numerically_noop(spark):
-    """truncate_lineage_every caps the unrolled plan depth without
-    changing a single rank bit — 6 iterations checkpointed every 2 must
-    equal the fully-lazy 6-iteration run exactly."""
-    from apache_spark_link_prediction_spark.operators.graph import pagerank
-
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 1), (3, 4), (4, 1), (2, 4)], "src long, dst long"
-    )
-    plain = {r.node: r.rank for r in pagerank(edges, iterations=6).collect()}
-    trunc = {
-        r.node: r.rank
-        for r in pagerank(edges, iterations=6, truncate_lineage_every=2).collect()
-    }
-    assert plain == trunc
 
 
 def _python_bpe(texts, num_merges):
@@ -1282,11 +1292,10 @@ def test_embedding_collapse_emits_full_over_cap_cluster(spark):
 
 
 def test_cap_hub_degree_semantics_and_parity(spark):
-    """The shared graph hub guard (VERDICT r07 item 4): max_degree=None
-    is the identity; topk keeps the k smallest node ids per over-cap
-    key and leaves under-cap keys byte-identical; drop removes over-cap
-    keys entirely; hub_cap_loss reports exactly the edges and wedge
-    pairs the cap prevents."""
+    """The graph hub guard (VERDICT r07 item 4): max_degree=None is the
+    identity; the cap keeps the k smallest node ids per over-cap key and
+    leaves under-cap keys byte-identical; hub_cap_loss reports exactly
+    the edges and wedge pairs the cap prevents."""
     from apache_spark_link_prediction_spark.operators.graph import (
         cap_hub_degree,
         hub_cap_loss,
@@ -1301,62 +1310,41 @@ def test_cap_hub_degree_semantics_and_parity(spark):
     ident = cap_hub_degree(e, "k", "v", max_degree=None)
     assert sorted(map(tuple, ident.collect())) == sorted(rows)
 
-    topk = cap_hub_degree(e, "k", "v", max_degree=3, strategy="topk")
+    topk = cap_hub_degree(e, "k", "v", max_degree=3)
     got = sorted(map(tuple, topk.collect()))
     assert got == sorted([(1, 10), (1, 20), (1, 30)] + rows[5:])
 
-    drop = cap_hub_degree(e, "k", "v", max_degree=3, strategy="drop")
-    assert sorted(map(tuple, drop.collect())) == sorted(rows[5:])
-
     # parity at a cap no key exceeds
-    wide = cap_hub_degree(e, "k", "v", max_degree=5, strategy="topk")
+    wide = cap_hub_degree(e, "k", "v", max_degree=5)
     assert sorted(map(tuple, wide.collect())) == sorted(rows)
 
-    loss_topk = hub_cap_loss(e, "k", max_degree=3, strategy="topk").collect()[0]
+    loss_topk = hub_cap_loss(e, "k", max_degree=3).collect()[0]
     assert (
         loss_topk["n_hubs_capped"],
         loss_topk["n_edges_dropped"],
         loss_topk["n_wedge_pairs_dropped"],
     ) == (1, 2, (5 * 4 - 3 * 2) // 2)
-    loss_drop = hub_cap_loss(e, "k", max_degree=3, strategy="drop").collect()[0]
-    assert (
-        loss_drop["n_hubs_capped"],
-        loss_drop["n_edges_dropped"],
-        loss_drop["n_wedge_pairs_dropped"],
-    ) == (1, 5, 10)
-
-    with pytest.raises(ValueError, match="strategy"):
-        cap_hub_degree(e, "k", "v", max_degree=3, strategy="nope")
 
 
 def test_graph_family_cap_parity_and_capped_query(spark):
-    """Every graph-family query must be unchanged at max_degree=None vs
-    a cap larger than the schema's maximum fan-out (≤7 parts/order),
-    and graph_common_neighbors_capped must equal applying the topk
-    guard to the edge list before the plain pipeline."""
+    """graph_common_neighbors must be unchanged at max_degree=None vs a
+    cap larger than the schema's maximum fan-out (≤7 parts/order), and
+    graph_common_neighbors_capped must equal applying the cap to the
+    edge list before the plain pipeline."""
     from apache_spark_link_prediction_spark import queries as q
 
     sf = "/root/testdata/sf0.001"
-    for fn in (
-        q.graph_common_neighbors,
-        q.graph_adamic_adar,
-        q.graph_jaccard_neighbors,
-        q.graph_resource_allocation,
-        q.graph_pref_attachment,
-        q.graph_triangle_count,
-    ):
-        base = {tuple(r) for r in fn(spark, sf).collect()}
-        wide = {tuple(r) for r in fn(spark, sf, max_degree=100).collect()}
-        assert base == wide, fn.__name__
-        assert base, fn.__name__
+    base = {tuple(r) for r in q.graph_common_neighbors(spark, sf).collect()}
+    wide = {
+        tuple(r) for r in q.graph_common_neighbors(spark, sf, max_degree=100).collect()
+    }
+    assert base == wide
+    assert base
 
     capped = {
         tuple(r) for r in q.graph_common_neighbors_capped(spark, sf).collect()
     }
-    uncapped = {
-        tuple(r) for r in q.graph_common_neighbors(spark, sf).collect()
-    }
-    assert capped and capped != uncapped, "cap=4 should bite on 5-7 part orders"
+    assert capped and capped != base, "cap=4 should bite on 5-7 part orders"
 
 
 def test_signature_incremental_matches_full(spark, docs):

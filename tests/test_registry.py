@@ -5,6 +5,7 @@ hold, and every public keyword of the package is one some caller moves.
 """
 
 import ast
+import collections
 import json
 import pathlib
 
@@ -421,3 +422,22 @@ def test_every_public_keyword_is_moved_by_a_caller():
         f"{len(unmoved)} of {total} public keyword defaults are never moved "
         f"off their default by any caller: {unmoved}"
     )
+
+
+def test_no_module_level_name_is_bound_twice():
+    """A second module-level binding silently replaces the first for
+    every later reader, while decorators that ran in between keep the
+    first: two registry oracles once shared one name that way."""
+    twice = []
+    for f in sorted(PACKAGE.rglob("*.py")):
+        names = collections.Counter()
+        for node in ast.parse(f.read_text()).body:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                names[node.name] += 1
+            elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+                targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+                for t in targets:
+                    names.update(n.id for n in ast.walk(t) if isinstance(n, ast.Name))
+        rel = f.relative_to(PACKAGE).as_posix()
+        twice += [f"{rel}::{n}" for n, c in names.items() if c > 1]
+    assert not twice, twice

@@ -548,7 +548,7 @@ def test_p1_and_pagerank_leave_no_persistent_rdds(spark, sf_dir):
     for _ in range(2):
         assert QUERIES["p1_link_prediction"](spark, sf_dir).collect()
         assert QUERIES["graph_pagerank"](spark, sf_dir).collect()
-        assert pagerank(edges, iterations=3).collect()
+        assert pagerank(edges).collect()
     assert cache.isEmpty() == was_empty
     n = _persistent_rdds_after_gc(spark, baseline)
     assert n <= baseline, f"leaked persistent RDDs: {n} > baseline {baseline}"

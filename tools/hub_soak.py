@@ -6,8 +6,9 @@ containing HUB_PARTS distinct parts — the degree-d node that emits
 d(d−1)/2 pairs through the common-neighbors self-join (12.5M pairs at
 the default 5000; a 100 TB graph's celebrity node, scaled to fit the
 test box). Times the common-neighbors pipeline uncapped vs capped
-(topk, max_degree=64) and prints one JSON line with walls, output pair
-counts, and the hub_cap_loss report, for BASELINE.md's Round 8 table.
+(max_degree=64, keeping the 64 smallest parts) and prints one JSON line
+with walls, output pair counts, and the hub_cap_loss report, for
+BASELINE.md's Round 8 table.
 
 Usage: python tools/hub_soak.py [hub_parts] [max_degree]
 """
