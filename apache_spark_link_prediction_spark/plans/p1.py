@@ -2,9 +2,10 @@
 Predictor.scala:350-380):
 
 scan → sample → preprocess → label test pairs by ground-truth existence
-→ double self-join each edge list against the node table → 6 pairwise
-features → VectorAssembler → LogisticRegression(maxIter=100) →
-threshold-swept P/R/F1.
+→ union the train edges and the labelled test pairs, tagged ``__test``
+→ ONE double self-join of the union against the node table → 6
+pairwise features → VectorAssembler → checkpoint → split on ``__test``
+→ LogisticRegression(maxIter=100) → threshold-swept P/R/F1.
 
 Feature parity notes (SURVEY.md §2.7):
 - the tf·idf vector feature comes from the *destination* node only
@@ -17,6 +18,7 @@ Feature parity notes (SURVEY.md §2.7):
 from __future__ import annotations
 
 from dataclasses import dataclass
+from functools import cached_property
 
 from pyspark.ml.classification import LogisticRegression, LogisticRegressionModel
 from pyspark.ml.feature import VectorAssembler
@@ -30,7 +32,7 @@ from ..functions.pairwise import (
     year_difference,
 )
 from ..operators.joins import enrich_edges_both_sides, label_by_existence
-from .metrics import best_f1, threshold_metrics
+from .metrics import best_f1 as max_f1, threshold_metrics
 from .text_pipeline import preprocess_documents
 
 MAX_ITERATIONS = 100  # Predictor.scala:30
@@ -80,10 +82,17 @@ def assemble_features(df: DataFrame) -> DataFrame:
 
 @dataclass
 class P1Result:
+    """``metrics`` is the lazy threshold sweep; ``best_f1`` runs that
+    sweep on first read and keeps the value, so a caller that never
+    reads it pays no sweep."""
+
     model: LogisticRegressionModel
     predictions: DataFrame
     metrics: DataFrame
-    best_f1: float
+
+    @cached_property
+    def best_f1(self) -> float:
+        return max_f1(self.predictions)
 
 
 def train_predict(
@@ -118,18 +127,26 @@ def run_p1(
         authors_col="authors",
         fill_cols=["abstract", "title", "authors", "journal"],
     )
-    # Materialize once: both the train-side and test-side double joins
-    # consume this (the reference recomputes the whole preProcess
-    # lineage twice — Predictor.scala:360-361; SURVEY.md §4). A lazy
-    # localCheckpoint, not ``cache()``: the returned predictions read it
-    # after this function returns, so no unpersist can be placed; the
-    # checkpoint is reclaimed once the result is garbage-collected.
+    # Materialize once: the one double join below reads this on both
+    # broadcast sides (the reference recomputes the whole preProcess
+    # lineage once per side — Predictor.scala:360-361; SURVEY.md §4). A
+    # lazy localCheckpoint, not ``cache()``: the returned predictions
+    # read it after this function returns, so no unpersist can be
+    # placed; the checkpoint is reclaimed once the result is
+    # garbage-collected.
     processed = processed.localCheckpoint(eager=False)
 
+    # One pair-feature pass over train ∪ test, tagged by side. The
+    # checkpoint makes LR's fit read a materialized input (its plan
+    # otherwise executes twice, around the summarizer pass), and the
+    # final action then reads the test split from it instead of
+    # re-running the joins.
     labeled_test = label_by_existence(test_pairs, truth_edges)
-    train_a = assemble_features(pair_features(train_edges, processed))
-    test_a = assemble_features(pair_features(labeled_test, processed))
+    both = train_edges.withColumn("__test", F.lit(False)).unionByName(
+        labeled_test.withColumn("__test", F.lit(True))
+    )
+    features = assemble_features(pair_features(both, processed)).localCheckpoint(eager=False)
+    train_a = features.filter(~F.col("__test")).drop("__test")
+    test_a = features.filter(F.col("__test")).drop("__test")
     model, predictions = train_predict(train_a, test_a, max_iter=max_iter)
-    m = threshold_metrics(predictions)
-    return P1Result(model=model, predictions=predictions, metrics=m,
-                    best_f1=best_f1(predictions))
+    return P1Result(model=model, predictions=predictions, metrics=threshold_metrics(predictions))

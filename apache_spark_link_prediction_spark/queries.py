@@ -7174,7 +7174,7 @@ def graph_khop_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
     three levels as chained CTEs."""
     from .operators.graph import bfs_min_hops
 
-    sym = _both_ways(_copurchase_edges(spark, sf_dir)).distinct()
+    sym = _both_ways(_copurchase_edges(spark, sf_dir))
     seeds = (
         load_table(spark, sf_dir, "part")
         .filter(F.col("p_size") == 1)

@@ -9,10 +9,12 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from apache_spark_link_prediction_spark.operators.joins import label_by_existence
 from apache_spark_link_prediction_spark.plans.metrics import best_f1, threshold_metrics
-from apache_spark_link_prediction_spark.plans.p1 import run_p1
+from apache_spark_link_prediction_spark.plans.p1 import assemble_features, pair_features, run_p1
 from apache_spark_link_prediction_spark.plans.p2 import lsh_similarity_join
 from apache_spark_link_prediction_spark.plans.text_pipeline import preprocess_documents
+from apache_spark_link_prediction_spark.queries import QUERIES
 
 
 def test_threshold_metrics_hand_computed(spark):
@@ -244,6 +246,74 @@ def test_p1_citation_shaped_band(spark):
     )
     res = run_p1(spark, info, train, test_pairs, truth)
     assert 0.80 <= res.best_f1 <= 0.92, f"F1 {res.best_f1:.3f} outside citation band"
+
+
+def _p1_overlap_fixture(spark):
+    """Ten papers on two topics; the pairs (0, 2) and (1, 3) are both a
+    train edge and a test pair, each with opposite labels on the two
+    sides."""
+    info = spark.createDataFrame(
+        [
+            (str(i), str(1995 + i % 4), f"title {i % 2} word{i}", f"auth{i % 3}",
+             f"j{i % 2}", " ".join([f"topic{i % 2}w{j}" for j in range(5)] + [f"own{i}"]))
+            for i in range(10)
+        ],
+        "srcId string, year string, title string, authors string, journal string, abstract string",
+    )
+    train = spark.createDataFrame(
+        [("0", "2", 1), ("1", "3", 0), ("4", "6", 1), ("5", "7", 1), ("0", "5", 0), ("2", "9", 0)],
+        "srcId string, dstId string, label int",
+    )
+    test_pairs = spark.createDataFrame(
+        [("0", "2"), ("1", "3"), ("6", "8"), ("3", "4")], "srcId string, dstId string"
+    )
+    truth = spark.createDataFrame([("1", "3"), ("6", "8")], "srcId string, dstId string")
+    return info, train, test_pairs, truth
+
+
+def test_p1_split_scores_exactly_the_test_pairs(spark):
+    """run_p1 runs one pair-feature pass over train ∪ test and splits it
+    on a side tag. A pair that is both a train edge and a test pair
+    must come back once, as a test row with its existence label, and
+    its features must equal a per-side pass over the test pairs alone."""
+    info, train, test_pairs, truth = _p1_overlap_fixture(spark)
+    res = run_p1(spark, info, train, test_pairs, truth)
+
+    def rows(df):
+        return sorted(
+            (r["srcId"], r["dstId"], r["label"], tuple(r["features"].toArray()))
+            for r in df.collect()
+        )
+
+    processed, _ = preprocess_documents(
+        info,
+        text_cols=["abstract", "title"],
+        authors_col="authors",
+        fill_cols=["abstract", "title", "authors", "journal"],
+    )
+    per_side = assemble_features(pair_features(label_by_existence(test_pairs, truth), processed))
+    got = rows(res.predictions)
+    assert got == rows(per_side)
+    assert [(s, d, y) for s, d, y, _ in got] == [
+        ("0", "2", 0.0), ("1", "3", 1.0), ("3", "4", 0.0), ("6", "8", 1.0),
+    ]
+    assert "__test" not in res.predictions.columns
+
+
+def test_p1_build_pays_each_eager_pass_once(spark, sf_dir, count_jobs):
+    """The p1 registry entry's construction runs the LR fit over one
+    checkpointed pair-feature pass and no F1 sweep: 10 jobs at this
+    session's width. The sweep runs only when ``best_f1`` is read, once."""
+    _, build_jobs = count_jobs(lambda: QUERIES["p1_link_prediction"](spark, sf_dir))
+    assert build_jobs <= 10, f"p1 build fired {build_jobs} jobs"
+
+    info, train, test_pairs, truth = _p1_overlap_fixture(spark)
+    res = run_p1(spark, info, train, test_pairs, truth)
+    assert "best_f1" not in vars(res), "run_p1 ran the F1 sweep"
+    f1, sweep_jobs = count_jobs(lambda: res.best_f1)
+    assert sweep_jobs > 0 and 0.0 <= f1 <= 1.0
+    _, again = count_jobs(lambda: res.best_f1)
+    assert again == 0
 
 
 # Fixture note: doc "4" exists so no term appears in ALL docs — IDF
