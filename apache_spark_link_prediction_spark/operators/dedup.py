@@ -395,8 +395,15 @@ def minhash_near_dup_pairs(
     # this lineage, but an A/B at sf0.1 measured recompute at 6.6s
     # steady-state vs 8.5s with .cache() — materializing exploded long
     # arrays into storage memory costs more than re-running a
-    # page-cached, codegen'd scan. At 100 TB with a cold object store
-    # that tradeoff flips; persist(MEMORY_AND_DISK_SER) there.
+    # page-cached, codegen'd scan. The same holds for a lazy
+    # ``localCheckpoint`` of the signed representatives
+    # (``sig.join(base)``) before the bucket join: it plans the
+    # signature aggregate once instead of four times and took the
+    # perfbench curation warm median from 1.16s to 1.01s, but solo-warm
+    # at the 10× bench replica (4-vCPU host, min of 3, two brackets)
+    # it measured 9.06s and 9.06s against 8.23s and 8.46s without it.
+    # At 100 TB with a cold object store that tradeoff flips;
+    # persist(MEMORY_AND_DISK_SER) there.
     base = docs.select(
         F.col("doc_id").alias("__id"),
         F.transform(

@@ -166,9 +166,15 @@ def bfs_min_hops(edges: DataFrame, seeds: DataFrame) -> DataFrame:
     connected-components operator instead (operators/dedup.py), whose
     rounds grow with the log of the diameter, not the diameter.
 
+    The edge list is materialized once (a lazy ``localCheckpoint``,
+    reclaimed once the result is garbage-collected): every hop joins
+    it, and without the checkpoint each join re-derived ``edges``'
+    whole lineage (for graph_khop_reachability, the co-purchase
+    self-join and aggregate, twelve times per run).
+
     Returns (node, min_hops).
     """
-    e = edges.select("src", "dst")
+    e = edges.select("src", "dst").localCheckpoint(eager=False)
     reached = seeds.select("node", F.lit(0).alias("min_hops")).distinct()
     frontier = reached
     for hop in range(1, 4):

@@ -1540,20 +1540,32 @@ def p2_scale_path_jaccard_deep(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _events_as_stream(
     spark: SparkSession, sf_dir: str, *, duplicate: bool = False
 ) -> DataFrame:
-    """Re-materialize events (ns→µs ts) into a temp dir and open it as
-    a bounded file stream — the local stand-in for a Kafka source.
-    ``duplicate=True`` writes two copies (dedup-operator input)."""
-    import tempfile
+    """Open the events table where it sits as a bounded file stream —
+    the local stand-in for a Kafka source. ``duplicate=True`` is the
+    union of two such streams (dedup-operator input).
 
-    from .sources.readers import write_parquet
-    from .streaming.events import read_events_stream
+    The glob ``events.parque[t]`` matches a single-file table and a
+    directory of part files alike (a plain path to one file fails with
+    "Option 'basePath' must be a directory"). The schema is the table's
+    footer schema (``parquet_schema``), ``ts`` is normalized as in
+    ``load_table``, and the columns come out in
+    ``EVENTS_STREAM_SCHEMA``'s order whatever the file order (the 10×
+    replica writes ``ts`` fourth). The source takes every file in its
+    first trigger, so the drained stream is one data micro-batch however
+    many files the table has (``streaming_custom_sessions``' oracle
+    rests on that). Nothing is staged: no copy of the table is written,
+    and no directory is left behind."""
+    from .sources.readers import events_with_session_ts, parquet_schema
+    from .streaming.events import EVENTS_STREAM_SCHEMA
 
-    path = tempfile.mkdtemp(prefix="events_stream_")
-    ev = load_table(spark, sf_dir, "events")
-    if duplicate:
-        ev = ev.unionAll(ev)
-    write_parquet(ev.repartition(4), path)
-    return read_events_stream(spark, path)
+    schema = parquet_schema(f"{sf_dir}/events.parquet")
+
+    def stream() -> DataFrame:
+        ev = spark.readStream.schema(schema).parquet(f"{sf_dir}/events.parque[t]")
+        return events_with_session_ts(ev).select(*EVENTS_STREAM_SCHEMA.fieldNames())
+
+    ev = stream()
+    return ev.unionByName(stream()) if duplicate else ev
 
 
 @register(
@@ -4200,8 +4212,8 @@ def set_intersect_all(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "streaming_custom_sessions",
     # The drained-stream emission is deterministic and closed-form:
-    # _events_as_stream writes 4 files and the source reads 4 per
-    # trigger, so the data arrives in ONE micro-batch — every session
+    # _events_as_stream's source takes every file of the table in its
+    # first trigger, so the data arrives in ONE micro-batch — every session
     # except each user's last closes by in-batch gap detection; the
     # last closes iff the FINAL watermark (global max ts − 30 min
     # delay) strictly passes last_ts + gap (EventTimeTimeout fires on

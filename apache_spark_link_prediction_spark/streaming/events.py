@@ -21,10 +21,11 @@ from pyspark.sql import types as T
 
 from ..functions.timeutils import epoch_seconds
 
-# Schema of the events stream with ts already materialized as a proper
-# timestamp. The raw testdata parquet stores TIMESTAMP(NANOS) which
-# Spark can't stream-read directly; stream tests re-materialize via
-# sources.load_table first (see tests/test_streaming.py).
+# Schema of an events stream whose files store ts as a proper
+# timestamp, as files written from sources.load_table do (see
+# tests/test_streaming.py). The registry's entries open the testdata
+# table in place instead, with its footer schema, and normalize ts on
+# the stream (queries._events_as_stream).
 EVENTS_STREAM_SCHEMA = T.StructType(
     [
         T.StructField("event_id", T.LongType(), True),

@@ -223,6 +223,53 @@ def test_minhash_bucket_join_is_shuffled_hash_inline_verify(spark, sf_dir):
     assert "array_intersect" in plan
 
 
+def planned_aggregates(spark, build, marker: str) -> int:
+    """Build and collect ``build()``; return how many distinct
+    aggregates whose partial ``Functions`` start with ``marker`` the
+    physical plans of every SQL execution it fired hold (its lazy
+    checkpoints included). An aggregate is told apart by its grouping
+    keys' expression ids, so AQE's final and initial plan listing the
+    same node count it once, while each re-derivation of the same
+    lineage counts again."""
+    import re
+
+    sc = spark.sparkContext
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def plans() -> dict:
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        it = store.executionsList().iterator()
+        out = {}
+        while it.hasNext():
+            e = it.next()
+            out[e.executionId()] = e.physicalPlanDescription()
+        return out
+
+    before = set(plans())
+    build().collect()
+    fn = re.compile(r"^Functions \[\d+\]: \[" + re.escape(marker), re.M)
+    keys = set()
+    for eid, plan in plans().items():
+        if eid in before:
+            continue
+        for node in plan.split("\n\n"):
+            if fn.search(node):
+                keys.add(re.search(r"^Keys \[\d+\]: (.*)$", node, re.M).group(1))
+    return len(keys)
+
+
+def test_khop_copurchase_aggregate_is_planned_once_per_direction(spark, sf_dir):
+    """graph_khop_reachability's BFS checkpoints its edge list, so the
+    co-purchase count is planned once for each of the edge list's two
+    directions (a union whose branches share one shuffle at run time)
+    and never again by the hop joins. Each hop join re-derived both
+    directions: twelve aggregates."""
+    n = planned_aggregates(
+        spark, lambda: QUERIES["graph_khop_reachability"](spark, sf_dir), "partial_count(1)"
+    )
+    assert n == 2, n
+
+
 def test_simhash_bucket_join_is_shuffled_hash(spark, sf_dir):
     """dedup_simhash's capped bucket self-join keeps its
     ``shuffle_hash`` hint, for the same reason as the MinHash twin

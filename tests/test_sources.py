@@ -4,6 +4,10 @@ deterministic sample (S6)."""
 
 from __future__ import annotations
 
+import os
+
+import pytest
+
 from apache_spark_link_prediction_spark.sources import (
     read_edges,
     read_ground_truth,
@@ -159,6 +163,91 @@ def test_load_table_normalizes_every_ts_encoding(spark, tmp_path):
         got[tag] = [(r.event_id, r.us) for r in rows]
         assert all(abs(r.es - r.us / 1e6) < 1e-6 for r in rows), tag
     assert got["ntz"] == got["nanos"] == list(zip([1, 2], micros))
+
+
+def _perfbench_style_table(tmp_path):
+    """A table written the way perfbench's generator writes one: a
+    directory of pyarrow part files, here with a list column and both
+    timestamp encodings."""
+    from decimal import Decimal
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    d = tmp_path / "multi.parquet"
+    d.mkdir()
+    for j in range(3):
+        pq.write_table(
+            pa.table({
+                "id": pa.array([j, j + 10], type=pa.int64()),
+                "name": [f"n{j}", None],
+                "price": pa.array([Decimal("1.50"), Decimal("2.50")], type=pa.decimal128(12, 2)),
+                "vec": pa.array([[1.0, 2.0], [3.0]], type=pa.list_(pa.float32())),
+                "at_us": pa.array([1, 2], type=pa.timestamp("us")),
+                "at_ns": pa.array([1000, 2000], type=pa.timestamp("ns")),
+            }),
+            d / f"part-{j}.parquet",
+        )
+    return str(d)
+
+
+@pytest.mark.parametrize("sf", ["sf0.001", "sf0.01", "sf0.1"])
+def test_load_table_declares_the_inferred_schema_and_fires_no_job(spark, count_jobs, sf):
+    """load_table declares the footer schema instead of letting Spark
+    infer it: the schema is the one ``spark.read.parquet`` infers (with
+    ``events.ts`` then normalized), and building the read fires no job
+    (inference fired one footer-read job per load)."""
+    from pyspark.sql import types as T
+
+    from apache_spark_link_prediction_spark.sources.readers import (
+        TESTDATA_TABLES,
+        load_table,
+        parquet_schema,
+    )
+
+    sf_dir = f"/root/testdata/{sf}"
+    if not os.path.isdir(sf_dir):
+        pytest.skip(f"no {sf} testdata")
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    for name in TESTDATA_TABLES:
+        path = f"{sf_dir}/{name}.parquet"
+        inferred = spark.read.parquet(path).schema
+        assert parquet_schema(path) == inferred, name
+        df, jobs = count_jobs(lambda: load_table(spark, sf_dir, name))
+        assert jobs == 0, (name, jobs)
+        if name == "events":
+            inferred = T.StructType([
+                T.StructField(f.name, T.TimestampType(), f.nullable) if f.name == "ts" else f
+                for f in inferred
+            ])
+        assert df.schema == inferred, name
+
+
+@pytest.mark.parametrize("writer", ["pyarrow", "spark"])
+def test_parquet_schema_of_a_multi_file_table(spark, count_jobs, tmp_path, writer):
+    """A directory of part files declares the same schema Spark infers
+    — lists, decimals, naive µs timestamps and NANOS-as-long included —
+    and reads back the same rows, whether pyarrow wrote it (perfbench's
+    layout) or Spark did (the 10× bench replica's: session-zone
+    timestamps as legacy INT96, which pyarrow also reports as
+    ``timestamp[ns]``)."""
+    from pyspark.sql import functions as F
+
+    from apache_spark_link_prediction_spark.sources.readers import parquet_schema
+
+    path = _perfbench_style_table(tmp_path)
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    if writer == "spark":
+        src, path = path, str(tmp_path / "spark.parquet")
+        spark.read.parquet(src).withColumn(
+            "at_ltz", F.col("at_us").cast("timestamp")
+        ).repartition(3).write.parquet(path)
+    inferred = spark.read.parquet(path)
+    declared, jobs = count_jobs(lambda: spark.read.schema(parquet_schema(path)).parquet(path))
+    assert jobs == 0
+    assert declared.schema == inferred.schema
+    assert dict(declared.dtypes)["at_ns"] == "bigint"
+    assert sorted(map(tuple, declared.collect())) == sorted(map(tuple, inferred.collect()))
 
 
 def test_parquet_schema_evolution_merge(spark, tmp_path):

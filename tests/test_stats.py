@@ -534,8 +534,11 @@ def test_p1_and_pagerank_leave_no_persistent_rdds(spark, sf_dir):
     graph_pagerank's weighted edges were ``cache()``'d with no place an
     unpersist could go, so every run leaked one cached table for the
     life of the session (the perfbench fit_and_probe session runs p1 on
-    every pass). After two runs of each, the persistent-RDD map and the
-    cache manager are back where they started."""
+    every pass). dedup_minhash's exact-collapse grouping and the k-hop
+    BFS edge list are lazy checkpoints too (the perfbench curation
+    session runs both on every pass). After two runs of each, the
+    persistent-RDD map and the cache manager are back where they
+    started."""
     import gc
 
     from apache_spark_link_prediction_spark.operators.graph import pagerank
@@ -549,6 +552,8 @@ def test_p1_and_pagerank_leave_no_persistent_rdds(spark, sf_dir):
         assert QUERIES["p1_link_prediction"](spark, sf_dir).collect()
         assert QUERIES["graph_pagerank"](spark, sf_dir).collect()
         assert pagerank(edges).collect()
+        assert QUERIES["dedup_minhash"](spark, sf_dir).collect()
+        assert QUERIES["graph_khop_reachability"](spark, sf_dir).collect()
     assert cache.isEmpty() == was_empty
     n = _persistent_rdds_after_gc(spark, baseline)
     assert n <= baseline, f"leaked persistent RDDs: {n} > baseline {baseline}"

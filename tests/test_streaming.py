@@ -8,6 +8,8 @@ the lag/cumsum sessionization's per-user session count profile).
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from apache_spark_link_prediction_spark.sources import load_table, write_parquet
@@ -825,3 +827,103 @@ def test_tws_gate_reason_still_holds():
         "batch-twin oracle) and remove this canary + the BASELINE.md "
         "Round-16 permanent-gate note"
     )
+
+
+_EVENTS_STREAM_ENTRIES = (
+    "streaming_window_agg",
+    "streaming_sessionize",
+    "streaming_heavy_hitters_topk",
+    "streaming_dedup",
+    "streaming_stateful_ema",
+    "streaming_custom_sessions",
+    "streaming_stream_join",
+    "streaming_static_join",
+    "streaming_stream_join_outer",
+)
+
+
+def test_events_stream_entries_leave_no_temp_dir(spark, sf_dir):
+    """Every entry built on the events stream (streaming_dedup's
+    two-stream union included) reads the table where it sits: building
+    and collecting them leaves nothing in the temp dir. Staging the
+    stream through ``mkdtemp`` left one directory per call."""
+    import tempfile
+
+    from apache_spark_link_prediction_spark.queries import QUERIES
+
+    tmp = tempfile.gettempdir()
+    before = set(os.listdir(tmp))
+    for name in _EVENTS_STREAM_ENTRIES:
+        assert QUERIES[name](spark, sf_dir).collect(), name
+    assert set(os.listdir(tmp)) - before == set()
+
+
+SF0001 = "/root/testdata/sf0.001"
+
+
+def _write_events(tmp_path, tag, parts, ts_unit):
+    """The sf0.001 events table rewritten by pyarrow as ``parts`` part
+    files (a directory) or as one file (``parts=0``), with ``ts`` in
+    ``ts_unit``."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    t = pq.read_table(f"{SF0001}/events.parquet")
+    i = t.schema.get_field_index("ts")
+    t = t.set_column(i, "ts", t.column("ts").cast(pa.timestamp(ts_unit)))
+    d = tmp_path / tag
+    d.mkdir()
+    if not parts:
+        pq.write_table(t, d / "events.parquet")
+        return str(d)
+    (d / "events.parquet").mkdir()
+    step = -(-t.num_rows // parts)
+    for j in range(parts):
+        pq.write_table(t.slice(j * step, step), d / "events.parquet" / f"part-{j}.parquet")
+    return str(d)
+
+
+
+def _spark_written_events(spark, tmp_path):
+    """The sf0.001 events table as Spark's writer leaves it (the 10×
+    bench replica's layout): 5 part files, ``ts`` as legacy INT96,
+    ``ts`` moved to the fourth column."""
+    d = tmp_path / "spark"
+    load_table(spark, SF0001, "events").select(
+        "event_id", "user_id", "event_type", "ts", "value", "props"
+    ).repartition(5).write.parquet(str(d / "events.parquet"))
+    return str(d)
+
+
+@pytest.mark.parametrize("layout", ["single_file", "six_part_dir", "nanos_ts", "spark_written"])
+def test_events_stream_in_place_equals_batch(spark, tmp_path, layout):
+    """The events stream opened in place equals the batch
+    tumbling_window_agg over a single-file table, a directory of more
+    part files than the old staging's 4-per-trigger, a NANOS ts and a
+    Spark-written INT96 ts; a directory drains in ONE data
+    micro-batch."""
+    from apache_spark_link_prediction_spark.queries import QUERIES, _events_as_stream
+
+    sf_dir = {
+        "single_file": lambda: SF0001,
+        "six_part_dir": lambda: _write_events(tmp_path, "dir", 6, "us"),
+        "nanos_ts": lambda: _write_events(tmp_path, "ns", 0, "ns"),
+        "spark_written": lambda: _spark_written_events(spark, tmp_path),
+    }[layout]()
+    q = (
+        streaming_window_agg(_events_as_stream(spark, sf_dir)).writeStream
+        .outputMode("complete")
+        .format("memory")
+        .queryName(f"t_in_place_{layout}")
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+        data_batches = [p["batchId"] for p in q.recentProgress if p["numInputRows"] > 0]
+    finally:
+        q.stop()
+    assert data_batches == [0], data_batches
+    cols = ["window_start", "event_type", "n", "total_value"]
+    got = spark.sql(f"SELECT * FROM t_in_place_{layout}")
+    want = QUERIES["tumbling_window_agg"](spark, SF0001)
+    assert _as_sorted_tuples(got, cols) == _as_sorted_tuples(want, cols)
