@@ -192,7 +192,9 @@ def _perfbench_style_table(tmp_path):
 
 
 @pytest.mark.parametrize("sf", ["sf0.001", "sf0.01", "sf0.1"])
-def test_load_table_declares_the_inferred_schema_and_fires_no_job(spark, count_jobs, sf):
+def test_load_table_declares_the_inferred_schema_and_fires_no_job(
+    spark, count_jobs, sf_dir, sf
+):
     """load_table declares the footer schema instead of letting Spark
     infer it: the schema is the one ``spark.read.parquet`` infers (with
     ``events.ts`` then normalized), and building the read fires no job
@@ -205,7 +207,7 @@ def test_load_table_declares_the_inferred_schema_and_fires_no_job(spark, count_j
         parquet_schema,
     )
 
-    sf_dir = f"/root/testdata/{sf}"
+    sf_dir = os.path.join(os.path.dirname(sf_dir), sf)
     if not os.path.isdir(sf_dir):
         pytest.skip(f"no {sf} testdata")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")

@@ -858,17 +858,14 @@ def test_events_stream_entries_leave_no_temp_dir(spark, sf_dir):
     assert set(os.listdir(tmp)) - before == set()
 
 
-SF0001 = "/root/testdata/sf0.001"
-
-
-def _write_events(tmp_path, tag, parts, ts_unit):
-    """The sf0.001 events table rewritten by pyarrow as ``parts`` part
-    files (a directory) or as one file (``parts=0``), with ``ts`` in
+def _write_events(sf_dir, tmp_path, tag, parts, ts_unit):
+    """The events table rewritten by pyarrow as ``parts`` part files (a
+    directory) or as one file (``parts=0``), with ``ts`` in
     ``ts_unit``."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    t = pq.read_table(f"{SF0001}/events.parquet")
+    t = pq.read_table(f"{sf_dir}/events.parquet")
     i = t.schema.get_field_index("ts")
     t = t.set_column(i, "ts", t.column("ts").cast(pa.timestamp(ts_unit)))
     d = tmp_path / tag
@@ -884,19 +881,19 @@ def _write_events(tmp_path, tag, parts, ts_unit):
 
 
 
-def _spark_written_events(spark, tmp_path):
-    """The sf0.001 events table as Spark's writer leaves it (the 10×
-    bench replica's layout): 5 part files, ``ts`` as legacy INT96,
-    ``ts`` moved to the fourth column."""
+def _spark_written_events(spark, sf_dir, tmp_path):
+    """The events table as Spark's writer leaves it (the 10× bench
+    replica's layout): 5 part files, ``ts`` as legacy INT96, ``ts``
+    moved to the fourth column."""
     d = tmp_path / "spark"
-    load_table(spark, SF0001, "events").select(
+    load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "ts", "value", "props"
     ).repartition(5).write.parquet(str(d / "events.parquet"))
     return str(d)
 
 
 @pytest.mark.parametrize("layout", ["single_file", "six_part_dir", "nanos_ts", "spark_written"])
-def test_events_stream_in_place_equals_batch(spark, tmp_path, layout):
+def test_events_stream_in_place_equals_batch(spark, sf_dir, tmp_path, layout):
     """The events stream opened in place equals the batch
     tumbling_window_agg over a single-file table, a directory of more
     part files than the old staging's 4-per-trigger, a NANOS ts and a
@@ -904,14 +901,14 @@ def test_events_stream_in_place_equals_batch(spark, tmp_path, layout):
     micro-batch."""
     from apache_spark_link_prediction_spark.queries import QUERIES, _events_as_stream
 
-    sf_dir = {
-        "single_file": lambda: SF0001,
-        "six_part_dir": lambda: _write_events(tmp_path, "dir", 6, "us"),
-        "nanos_ts": lambda: _write_events(tmp_path, "ns", 0, "ns"),
-        "spark_written": lambda: _spark_written_events(spark, tmp_path),
+    stream_dir = {
+        "single_file": lambda: sf_dir,
+        "six_part_dir": lambda: _write_events(sf_dir, tmp_path, "dir", 6, "us"),
+        "nanos_ts": lambda: _write_events(sf_dir, tmp_path, "ns", 0, "ns"),
+        "spark_written": lambda: _spark_written_events(spark, sf_dir, tmp_path),
     }[layout]()
     q = (
-        streaming_window_agg(_events_as_stream(spark, sf_dir)).writeStream
+        streaming_window_agg(_events_as_stream(spark, stream_dir)).writeStream
         .outputMode("complete")
         .format("memory")
         .queryName(f"t_in_place_{layout}")
@@ -925,5 +922,5 @@ def test_events_stream_in_place_equals_batch(spark, tmp_path, layout):
     assert data_batches == [0], data_batches
     cols = ["window_start", "event_type", "n", "total_value"]
     got = spark.sql(f"SELECT * FROM t_in_place_{layout}")
-    want = QUERIES["tumbling_window_agg"](spark, SF0001)
+    want = QUERIES["tumbling_window_agg"](spark, sf_dir)
     assert _as_sorted_tuples(got, cols) == _as_sorted_tuples(want, cols)
