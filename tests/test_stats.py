@@ -488,6 +488,18 @@ def test_modularity_invariants(spark, sf_dir):
     assert r.n_edges > 0
 
 
+def _persistent_rdd_count(spark) -> int:
+    """Entries in the SparkContext's persistent-RDD map, read without
+    pinning them. ``getPersistentRDDs()`` returns a strong-valued copy of
+    the map, and its py4j handle stays bound in the gateway until py4j's
+    finalizer thread (which polls once a second) sends the delete, so a
+    poll built on it keeps alive the very RDDs it waits on.
+    ``persistentRdds`` is the weak-valued map itself: holding it pins
+    nothing, and its size drops only when the ContextCleaner unpersists
+    an entry."""
+    return spark.sparkContext._jsc.sc().persistentRdds().size()
+
+
 def _persistent_rdds_after_gc(spark, baseline: int) -> int:
     """The JVM's persistent-RDD count once the ContextCleaner has had
     up to 20 s to drain it to ``baseline``. The reclaim is async AND
@@ -501,7 +513,7 @@ def _persistent_rdds_after_gc(spark, baseline: int) -> int:
     while True:
         gc.collect()
         spark._jvm.System.gc()
-        n = spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+        n = _persistent_rdd_count(spark)
         if n <= baseline or time.time() > deadline:
             return n
         time.sleep(0.5)
@@ -519,7 +531,7 @@ def test_lpa_and_modularity_leave_no_persistent_rdds(spark, sf_dir):
     import gc
 
     gc.collect()
-    baseline = spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+    baseline = _persistent_rdd_count(spark)
     out = QUERIES["graph_modularity"](spark, sf_dir).collect()
     assert out
     out2 = QUERIES["graph_label_propagation"](spark, sf_dir).collect()
@@ -545,7 +557,7 @@ def test_p1_and_pagerank_leave_no_persistent_rdds(spark, sf_dir):
 
     cache = spark._jsparkSession.sharedState().cacheManager()
     gc.collect()
-    baseline = spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+    baseline = _persistent_rdd_count(spark)
     was_empty = cache.isEmpty()
     edges = spark.createDataFrame([(1, 2), (2, 3), (3, 1), (3, 4)], "src long, dst long")
     for _ in range(2):
